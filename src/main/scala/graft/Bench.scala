@@ -205,6 +205,18 @@ object Bench {
       s""""os":${osTelemetry()}}"""
   }
 
+  /** Whether adaptive execution pays for itself on the input under
+    * `dir`: on when the whole tree (partitioned tables included) holds
+    * at least `minBytes`, and on whenever some path cannot be read —
+    * an input of unknown size is treated as a large one. */
+  private[graft] def adaptiveFor(dir: java.io.File, minBytes: Long): Boolean = {
+    def bytes(f: java.io.File): Option[Long] =
+      if (f.isFile) Some(f.length())
+      else Option(f.listFiles()).flatMap(_.foldLeft(Option(0L))((acc, c) =>
+        for (a <- acc; b <- bytes(c)) yield a + b))
+    bytes(dir).forall(_ >= minBytes)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -232,17 +244,9 @@ object Bench {
       // source bytes (SPARK_GRAFT_AQE_MIN_BYTES), hard override
       // SPARK_GRAFT_AQE=true|false for A/B runs — same parameterized
       // pattern as the r16 stream width and AQE floor.
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", {
-        val minBytes = sys.env.get("SPARK_GRAFT_AQE_MIN_BYTES")
-          .flatMap(_.toLongOption).getOrElse(1L << 30)
-        val srcBytes = Option(new java.io.File(sfDir).listFiles())
-          .map(_.map(f =>
-            if (f.isFile) f.length()
-            else Option(f.listFiles()).map(_.filter(_.isFile).map(_.length()).sum)
-              .getOrElse(0L)).sum)
-          .getOrElse(Long.MaxValue)
-        (srcBytes >= minBytes).toString
-      }))
+      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE",
+        adaptiveFor(new java.io.File(sfDir), sys.env.get("SPARK_GRAFT_AQE_MIN_BYTES")
+          .flatMap(_.toLongOption).getOrElse(1L << 30)).toString))
       // split big parquet files finer than the 128 MB default so a
       // single-file scale fixture still fans out across the 32 cores
       // (a 460 MB replicated lineitem read as 4 splits left 28 cores

@@ -32,6 +32,14 @@ object SeriesOps {
   def scan(df: DataFrame): DataFrame =
     df.select(col("timestamp"), col("value")).orderBy("timestamp")
 
+  /** [[scan]] sorted inside one partition: one task and one job, with
+    * no range-partitioned exchange (whose sampling and shuffle are two
+    * more jobs). For input one task can hold, such as a read inside
+    * one catalog bucket; the result drains as a single partition. */
+  def scanOnePartition(df: DataFrame): DataFrame =
+    df.select(col("timestamp"), col("value")).coalesce(1)
+      .sortWithinPartitions("timestamp")
+
   /** Argmin record: the (timestamp, value) of the minimum value; ties
     * broken by earliest timestamp (reference ts_min returns the record,
     * src/timeseries.c:1217-1239). Single-pass partial aggregation on a
@@ -84,6 +92,13 @@ object SeriesOps {
   def latest(df: DataFrame): DataFrame =
     df.select(col("timestamp"), col("value"))
       .orderBy(col("timestamp").desc).limit(1)
+
+  /** [[latest]] sorted inside one partition, like [[scanOnePartition]]:
+    * one task, and the same scan, sort and drain code as that read, so
+    * whichever of the two runs first warms the other. */
+  def latestOnePartition(df: DataFrame): DataFrame =
+    df.select(col("timestamp"), col("value")).coalesce(1)
+      .sortWithinPartitions(col("timestamp").desc).limit(1)
 
   /** Oldest n records (earliest(value, n) — declared-only in the
     * reference grammar doc, src/statement_parse.h:103).

@@ -108,7 +108,8 @@ final class StatementExecutor(spark: SparkSession, catalog: TsCatalog,
       withSeries(name, session) { (db, _) =>
         val (resolved, errors) = resolveRows(rows)
         import spark.implicits._
-        val n = catalog.insert(db, name, resolved.toDF("timestamp", "value"))
+        // one partition: one write task, one file per touched bucket
+        val n = catalog.insert(db, name, resolved.toDF("timestamp", "value").coalesce(1))
         Ack(s"$n point(s) inserted, $errors error(s)")
       }
 
@@ -129,7 +130,6 @@ final class StatementExecutor(spark: SparkSession, catalog: TsCatalog,
             }
           case None => None
         }
-        val ranged = catalog.readSeries(db, name, rangeNs)
 
         // WHERE in disjunctive normal form: OR of AND-chains over the
         // two columns (keys per reference tests: value, timestamp —
@@ -151,7 +151,12 @@ final class StatementExecutor(spark: SparkSession, catalog: TsCatalog,
             }
           }.reduce(_ && _)
         }
-        val filtered = SeriesOps.whereDnf(ranged, orGroups)
+        // lazy: `latest` reads bucket by bucket and never builds it;
+        // the in-range buckets come from one driver listing shared by
+        // every path
+        lazy val inRange = catalog.buckets(db, name, rangeNs)
+        lazy val filtered = SeriesOps.whereDnf(
+          catalog.readBuckets(db, name, inRange, rangeNs), orGroups)
 
         sampleBy match {
           case Some(intervalExpr) =>
@@ -202,7 +207,11 @@ final class StatementExecutor(spark: SparkSession, catalog: TsCatalog,
             // Plain scans stay lazy (streaming path).
             fn match {
               case None =>
-                val scan = SeriesOps.scan(filtered)
+                // rows of one bucket sort in one task; more buckets take
+                // the range-partitioned global sort
+                val scan =
+                  if (inRange.size == 1) SeriesOps.scanOnePartition(filtered)
+                  else SeriesOps.scan(filtered)
                 Rows(limit.map(scan.limit).getOrElse(scan))
               case Some(SelectFn.Min) =>
                 oneShot(SeriesOps.minRecord(filtered)
@@ -221,7 +230,7 @@ final class StatementExecutor(spark: SparkSession, catalog: TsCatalog,
                   .filter(col("n") > 0))(Scalar)
               // latest respects the range (fixing the reference quirk where
               // BETWEEN was ignored, src/statement_execute.c:261-271)
-              case Some(SelectFn.Latest) => oneShot(SeriesOps.latest(filtered))(Rows)
+              case Some(SelectFn.Latest) => latest(db, name, inRange, rangeNs, orGroups)
               case Some(SelectFn.Earliest(n)) if n <= OneShotMaxRows =>
                 oneShot(SeriesOps.earliest(filtered, n))(Rows)
               case Some(SelectFn.Earliest(n)) =>
@@ -288,6 +297,28 @@ final class StatementExecutor(spark: SparkSession, catalog: TsCatalog,
     if (rows.isEmpty) Err(ErrCode.EmptyResultset, "empty result set")
     else wrap(spark.createDataFrame(
       java.util.Arrays.asList(rows: _*), df.schema))
+  }
+
+  /** Newest record in range passing WHERE, newest bucket first.
+    * Buckets are floor-divided time, so every point of a higher bucket
+    * is strictly newer than every point of a lower one: the newest
+    * in-range bucket answers on its own unless WHERE empties it, and
+    * only then are the remaining in-range buckets read — at most two
+    * jobs, usually one over one bucket instead of the whole range.
+    * One bucket is sorted inside one task, as a one-bucket scan is.
+    * Ties on the maximum timestamp share a bucket, so the candidate
+    * rows are those of a full scan. */
+  private def latest(db: String, name: String, buckets: Seq[Long],
+      rangeNs: Option[(Long, Long)], orGroups: Seq[Column]): ExecResult = {
+    def in(buckets: Seq[Long]) = {
+      val rows = SeriesOps.whereDnf(catalog.readBuckets(db, name, buckets, rangeNs), orGroups)
+      oneShot(if (buckets.size == 1) SeriesOps.latestOnePartition(rows)
+        else SeriesOps.latest(rows))(Rows)
+    }
+    in(buckets.takeRight(1)) match {
+      case Err(ErrCode.EmptyResultset, _) if buckets.size > 1 => in(buckets.init)
+      case r => r
+    }
   }
 
   private def withDb(session: TsSession)(f: String => ExecResult): ExecResult =

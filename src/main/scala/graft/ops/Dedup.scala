@@ -73,9 +73,11 @@ object Dedup {
     // ≡ the old per-doc explode count. Same quadratic blast radius as
     // the self-join for a corpus-common shingle (C(d,2) pairs either
     // way — the declared exact-evaluator semantics; the df-ceiling and
-    // hot-band-capped operators are the scale paths), with the one new
-    // per-task bound that a posting row holds its d (doc, size)
-    // structs in the collect state.
+    // hot-band-capped operators are the scale paths). The self-join
+    // spread those pairs over tasks; here one shingle's pairs live in
+    // ONE row: its collect state holds d (doc, size) structs, and the
+    // transient `flatten` array built before the explode holds all d²
+    // candidate entries (C(d,2) of them non-null) in a single task.
     val s = docsSh.select(col("doc_id"),
       size(col("shingles")).cast("long").as("n"),
       explode(col("shingles")).as("sh"))

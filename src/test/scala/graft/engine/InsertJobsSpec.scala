@@ -1,0 +1,98 @@
+package graft.engine
+
+import java.nio.file.Files
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.graft.ListenerBridge.jobsOf
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.catalog.{SeriesMeta, TsCatalog}
+
+/** The INSERT cost contract: a wire INSERT is the one Spark job that
+  * writes it, one task wide, so it adds one parquet file per bucket it
+  * touches; the count comes from the write itself and comes back even
+  * when nothing is written. */
+class InsertJobsSpec extends AnyFunSuite {
+
+  private lazy val spark = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  private val BucketNs = TsCatalog.DefaultBucketNs
+  private val Base = Math.floorDiv(1700000000000000000L, BucketNs) * BucketNs
+
+  private def withCatalog(f: (TsCatalog, String) => Unit): Unit = {
+    val root = Files.createTempDirectory("graft-insert-jobs").toString
+    try f(new TsCatalog(spark, root), root)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+  }
+
+  private def parquetFiles(dir: java.io.File): Int =
+    Option(dir.listFiles()).toSeq.flatten.map { f =>
+      if (f.isDirectory) parquetFiles(f) else if (f.getName.endsWith(".parquet")) 1 else 0
+    }.sum
+
+  private def values(tss: Seq[Long]) =
+    tss.zipWithIndex.map { case (t, i) => s"($t, $i.0)" }.mkString(", ")
+
+  test("a 15-row INSERT is one Spark job and one parquet file per touched bucket") {
+    withCatalog { (cat, root) =>
+      val exec = new StatementExecutor(spark, cat, () => Base)
+      exec.executeSql("CREATEDB idb"); exec.executeSql("CREATE s")
+      val data = new java.io.File(root, "idb/s/data")
+      // inside one bucket
+      val (one, jobs1) = jobsOf(spark.sparkContext)(
+        exec.executeSql(s"INSERT INTO s VALUES ${values((0 until 15).map(i => Base + i * 1000L))}"))
+      assert(one == ExecResult.Ack("15 point(s) inserted, 0 error(s)"))
+      assert(jobs1 == 1, s"INSERT ran $jobs1 jobs")
+      assert(parquetFiles(data) == 1)
+      // straddling the next bucket boundary
+      val edge = Base + BucketNs
+      val (two, jobs2) = jobsOf(spark.sparkContext)(
+        exec.executeSql(s"INSERT INTO s VALUES ${values((-7 until 8).map(i => edge + i * 1000L))}"))
+      assert(two == ExecResult.Ack("15 point(s) inserted, 0 error(s)"))
+      assert(jobs2 == 1, s"INSERT ran $jobs2 jobs")
+      assert(parquetFiles(data) == 3)
+      assert(cat.readSeries("idb", "s").count() == 30)
+    }
+  }
+
+  test("BufferedExecutor.flush runs one job per touched series") {
+    withCatalog { (cat, _) =>
+      val exec = new BufferedExecutor(spark, cat, () => Base)
+      exec.executeSql("CREATEDB bdb"); exec.executeSql("CREATE a"); exec.executeSql("CREATE b")
+      for (s <- Seq("a", "b"); k <- 0 until 3)
+        exec.executeSql(s"INSERT INTO $s VALUES ${values((0 until 5).map(i => Base + k * 10000L + i))}")
+      assert(exec.buffered == 30)
+      val (_, jobs) = jobsOf(spark.sparkContext)(exec.flush())
+      assert(jobs == 2, s"flush of 2 series ran $jobs jobs")
+      assert(cat.readSeries("bdb", "a").count() == 15 && cat.readSeries("bdb", "b").count() == 15)
+    }
+  }
+
+  test("catalog.insert counts 0, without blocking, when nothing is written") {
+    import spark.implicits._
+    withCatalog { (cat, _) =>
+      cat.createDb("e")
+      cat.createSeries("e", "ins", SeriesMeta(None))
+      cat.createSeries("e", "ign", SeriesMeta(None, dupPolicy = "ignore"))
+      def counted(body: => Long): Long = Await.result(Future(body), 2.minutes)
+      assert(counted(cat.insert("e", "ins",
+        Seq.empty[(Long, Double)].toDF("timestamp", "value").coalesce(1))) == 0L)
+      assert(counted(cat.insert("e", "ins",
+        spark.range(0).selectExpr("id AS timestamp", "0.5 AS value"))) == 0L)
+      val batch = (0 until 15).map(i => (Base + i, i.toDouble))
+      assert(counted(cat.insert("e", "ign", batch.toDF("timestamp", "value"))) == 15L)
+      assert(counted(cat.insert("e", "ign", batch.toDF("timestamp", "value"))) == 0L)
+      assert(cat.readSeries("e", "ign").count() == 15L)
+      assert(cat.readSeries("e", "ins").count() == 0L)
+    }
+  }
+}

@@ -39,13 +39,28 @@ class PlanSpec extends AnyFunSuite {
     try {
       val cat = new TsCatalog(spark, root)
       cat.createDb("p"); cat.createSeries("p", "s", SeriesMeta(None))
-      val base = 1700000000000000000L
-      cat.insert("p", "s", (0 until 100).map(i =>
-        (base + i * 60L * 1000000000L, i.toDouble)).toDF("timestamp", "value"))
-      val p = cat.readSeries("p", "s", Some((base, base + 900L * 1000000000L)))
-        .queryExecution.executedPlan.toString
-      assert(p.contains("PartitionFilters") && p.contains("bucket"), p.take(2000))
+      // one point per 900 s bucket: 48 buckets, past Spark's parallel
+      // listing threshold (32) for a whole-root read
+      val bucketNs = 900L * 1000000000L
+      val first = Math.floorDiv(1700000000000000000L, bucketNs)
+      cat.insert("p", "s", (0 until 48).map(i =>
+        ((first + i) * bucketNs + 7L, i.toDouble)).toDF("timestamp", "value"))
+      val (t0, t1) = ((first + 10) * bucketNs, (first + 12) * bucketNs + 10L)
+      val (df, jobs) = org.apache.spark.graft.ListenerBridge.jobsOf(spark.sparkContext)(
+        cat.readSeries("p", "s", Some((t0, t1))))
+      assert(jobs == 0, s"building the frame ran $jobs Spark job(s)")
+      val scans = df.queryExecution.sparkPlan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }
+      assert(scans.size == 1, df.queryExecution.sparkPlan.toString)
+      val scan = scans.head
+      assert(scan.relation.location.rootPaths.map(_.getName).toSet ==
+        (10 to 12).map(b => s"bucket=${first + b}").toSet,
+        scan.relation.location.rootPaths.mkString(", "))
+      assert(scan.partitionFilters.nonEmpty, scan.toString)
+      val p = df.queryExecution.executedPlan.toString
       assert(p.contains("GreaterThanOrEqual(timestamp,"), p.take(2000))
+      assert(df.collect().map(_.getDouble(1)).toSeq.sorted == Seq(10.0, 11.0, 12.0))
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
     }
