@@ -99,7 +99,6 @@ object StreamBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     import graft.core.Tables
     import graft.streaming.StreamingIngest

@@ -234,10 +234,12 @@ final class TsCatalog(spark: SparkSession, val root: String,
     * loads keep their parallel write.
     *
     * "ignore": drop batch rows whose timestamp already exists — the
-    * existing-side lookup reads ONLY the buckets the batch can collide
-    * with ([[bucketPrunePredicate]]: exact IN pruning for narrow
-    * batches, O(1) range bounds past the literal cap), so the cost
-    * scales with the batch's time span, not series size.
+    * existing-side lookup reads ONLY the listed buckets the batch can
+    * collide with ([[bucketPrunePredicate]]: the exact bucket set for
+    * narrow batches, min/max range bounds past the literal cap), passed
+    * to Spark as explicit paths ([[readBuckets]]), so the cost scales
+    * with the batch's time span, not series size, and Spark never lists
+    * the data root itself.
     */
   def insert(db: String, name: String, points: DataFrame): Long = {
     val meta = seriesMeta(db, name).getOrElse(SeriesMeta(None))
@@ -247,12 +249,10 @@ final class TsCatalog(spark: SparkSession, val root: String,
     val deduped =
       if (meta.dupPolicy == "ignore") {
         val b = batch.dropDuplicates("timestamp")
-        val dp = dataPath(db, name)
-        if (fs.exists(dp) && fs.listStatus(dp).nonEmpty) {
-          val existing = spark.read.schema(PointSchemaWithBucket)
-            .parquet(dp.toString)
-            .filter(bucketPrunePredicate(b))
-            .select(col("timestamp"))
+        val listed = buckets(db, name, None)
+        val hit = if (listed.isEmpty) Nil else listed.filter(bucketPrunePredicate(b))
+        if (hit.nonEmpty) {
+          val existing = readBuckets(db, name, hit, None).select(col("timestamp"))
           b.join(existing, Seq("timestamp"), "left_anti")
         } else b
       } else batch
@@ -270,40 +270,37 @@ final class TsCatalog(spark: SparkSession, val root: String,
     written.get("n").asInstanceOf[Long]
   }
 
-  /** Partition-pruning predicate on the existing side of an
-    * ignore-policy insert: which `bucket` partitions can contain
+  /** Bucket test on the existing side of an ignore-policy insert:
+    * which listed `bucket=` partitions ([[buckets]]) can contain
     * timestamps colliding with batch `b`?
     *
     * Dense/narrow batches (the PLANS.md norm — bucketNs is sized to
     * ingest density) get the tight form: the batch's distinct bucket
-    * ids as an IN filter, pruning exactly the touched partitions. But
-    * the literal list is driver-collected and inlined into the plan,
-    * so a years-long backfill into fine buckets would put 10^5-10^6
-    * literals in one In() — quadratic planning cost and a bloated
-    * broadcast. Past [[InLiteralCap]] distinct buckets the predicate
-    * degrades to min/max RANGE bounds on the ordered bucket column:
-    * O(1) plan size, still partition-pruned at listing time, reading
-    * at worst the untouched buckets inside the batch's span (which the
-    * timestamp-level anti-join then ignores — correctness never
-    * depends on the pruning being tight). The common case stays ONE
-    * small driver job (distinct + limit), the wide case pays one extra
-    * min/max aggregate.
+    * ids, selecting exactly the touched partitions. That set is
+    * collected to the driver, and a years-long backfill into fine
+    * buckets could have 10^5-10^6 of them, so past [[InLiteralCap]]
+    * distinct buckets the test degrades to min/max RANGE bounds: O(1)
+    * driver state, reading at worst the untouched buckets inside the
+    * batch's span (which the timestamp-level anti-join then ignores —
+    * correctness never depends on the pruning being tight). The common
+    * case stays ONE small driver job (distinct + limit), the wide case
+    * pays one extra min/max aggregate.
     */
-  private[graft] def bucketPrunePredicate(b: DataFrame): Column = {
+  private[graft] def bucketPrunePredicate(b: DataFrame): Long => Boolean = {
     val sample = b.select(bucketExpr.as("b")).distinct()
       .limit(InLiteralCap + 1).collect().map(_.getLong(0))
-    if (sample.length <= InLiteralCap)
-      col("bucket").isin(sample.toIndexedSeq: _*)
+    if (sample.length <= InLiteralCap) sample.toSet
     else {
       val mm = b.agg(min(bucketExpr).as("lo"), max(bucketExpr).as("hi"))
         .collect()(0)
-      col("bucket") >= mm.getLong(0) && col("bucket") <= mm.getLong(1)
+      val (lo, hi) = (mm.getLong(0), mm.getLong(1))
+      bucket => bucket >= lo && bucket <= hi
     }
   }
 
-  /** Max inlined bucket literals before [[bucketPrunePredicate]] falls
-    * back to range bounds. 1000 is far under any planner pain point
-    * while covering weeks of per-hour buckets. */
+  /** Max bucket ids [[bucketPrunePredicate]] collects before it falls
+    * back to range bounds. 1000 is small driver state while covering
+    * weeks of per-hour buckets. */
   private val InLiteralCap = 1000
 
   /** Exact floor-division bucket of a timestamp column — MUST agree

@@ -34,11 +34,6 @@ object Tables {
     // The NTZ→timestamp cast inside tsMicros is exact only under a UTC
     // session zone; pin it at the chokepoint so no caller can skew it.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // every query path goes through here — registering the native
-    // function set at the chokepoint means no query can resolve-fail
-    // on registration order (sum_micro in a sumDec-only query was
-    // reachable without any other registering call having run first)
-    graft.functions.GraftFunctions.register(spark)
     spark.read.parquet(s"$sfDir/$name.parquet")
   }
 

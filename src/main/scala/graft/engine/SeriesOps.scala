@@ -65,25 +65,18 @@ object SeriesOps {
     * oracle, and a determinism win at any scale. The sum runs on the
     * fixed-width `sum_micro` aggregate, bit-identical to
     * `sum(CAST(x AS DECIMAL(30,6)))::double` (SumMicro's contract)
-    * without the per-row BigDecimal pathway — callers must have graft
-    * functions registered ([[withFns]]). Still a single-pass partial
+    * without the per-row BigDecimal pathway — every session has it
+    * ([[graft.functions.GraftExtensions]]). Still a single-pass partial
     * aggregation.
     */
   private[graft] def exactAvg(c: Column, n: Column): Column =
     round(call_function("sum_micro", c.cast("double")) / n, 4)
 
-  /** Registers graft's native functions on the frame's session (needed
-    * by the `sum_micro`-based aggregates — idempotent, cheap). */
-  private def withFns(df: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    df
-  }
-
   /** Scalar mean (declared in the reference grammar, exec stubbed —
     * reference src/statement_execute.c:236-238; implemented for real here).
     */
   def avgValue(df: DataFrame): DataFrame =
-    withFns(df).agg(exactAvg(col("value"), count(lit(1))).as("avg_value"),
+    df.agg(exactAvg(col("value"), count(lit(1))).as("avg_value"),
            count(lit(1)).as("n"))
 
   /** Most-recent record (reference ts_last, src/timeseries.c:1180-1215).
@@ -124,7 +117,7 @@ object SeriesOps {
     * emits them). Map-side partial avg then a shuffle on the bucket key.
     */
   def sampleBy(df: DataFrame, intervalUnits: Long): DataFrame =
-    withFns(df).groupBy(sampleWindow(intervalUnits))
+    df.groupBy(sampleWindow(intervalUnits))
       .agg(exactAvg(col("value"), count(lit(1))).as("avg_value"),
            count(lit(1)).as("n_points"))
 
@@ -218,7 +211,7 @@ object SeriesOps {
     // [e-width, e): a boundary-aligned point t is INCLUDED in the
     // window starting at t (j = k-1 gives e = t + width) and EXCLUDED
     // from the window ending at t (smallest label is t + slide)
-    withFns(df).withColumn("j", explode(sequence(lit(0L), lit(k - 1))))
+    df.withColumn("j", explode(sequence(lit(0L), lit(k - 1))))
       .withColumn("sample_ts",
         col("j") * lit(slideUnits)
           + (col("timestamp") - pmod(col("timestamp"), lit(slideUnits)))
@@ -333,8 +326,7 @@ object SeriesOps {
     * [[graft.functions.LttbPick]]), which also folds in the window
     * count. No global point sort anywhere; no data-sized exchange.
     * Output: (sample_ts, sel_ts, sel_value, n_points). */
-  def sampleByLttb(df0: DataFrame, intervalUnits: Long): DataFrame = {
-    val df = withFns(df0)
+  def sampleByLttb(df: DataFrame, intervalUnits: Long): DataFrame = {
     val stats = df.groupBy(sampleWindow(intervalUnits)).agg(
       sum(pmod(col("timestamp"), lit(intervalUnits))).as("toff_sum"),
       call_function("sum_micro", col("value").cast("double")).as("v_sum"),

@@ -1,16 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.expr
-
-/** Registration for graft's native expressions.
+/** graft's native expressions, installed in every session by
+  * [[GraftExtensions]].
   *
-  * Two wiring paths, both standard:
-  *  - [[register]]: per-session FunctionRegistry entry (used by the
-  *    library itself — idempotent, works on any already-built session);
-  *  - [[GraftExtensions]]: `SparkSessionExtensions` injection for
-  *    spark configs that pass
-  *    `spark.sql.extensions=graft.functions.GraftExtensions`.
+  * One wiring path: `GraftExtensions` is a
+  * `SparkSessionExtensionsProvider` listed in
+  * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
+  * so `SparkSession.Builder` loads it for every session it builds (and
+  * `newSession()` inherits it). Nothing registers functions on a live
+  * session.
   */
 object GraftFunctions {
 
@@ -19,8 +17,7 @@ object GraftFunctions {
       org.apache.spark.sql.catalyst.expressions.Expression
 
   /** Single source of truth: (name, expression class, builder) —
-    * BOTH wiring paths derive from this list, so adding an expression
-    * here is the only step and the two registries cannot drift. */
+    * adding an expression here is the only step. */
   private val fns: Seq[(String, Class[_], Builder)] = Seq(
     ("shingles3", classOf[Shingles3], exprs => Shingles3(exprs.head)),
     ("shingle_hashes3", classOf[ShingleHashes3], exprs => ShingleHashes3(exprs.head)),
@@ -128,35 +125,22 @@ object GraftFunctions {
       MinHashSig(exprs.head, k.asInstanceOf[Number].intValue())
     }))
 
-  /** Idempotently register graft functions in the session's registry. */
-  def register(spark: SparkSession): Unit =
-    fns.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
-
-  /** The same function set as injectFunction tuples (for
+  /** The function set as injectFunction tuples (for
     * [[GraftExtensions]]). */
   private[functions] def injections = fns.map { case (name, cls, builder) =>
     (org.apache.spark.sql.catalyst.FunctionIdentifier(name),
       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(cls.getName, name),
       builder)
   }
-
-  /** `shingles3(textCol)` as a Column (registers on the active session). */
-  def shingles3(spark: SparkSession, textCol: String): Column = {
-    register(spark)
-    expr(s"shingles3($textCol)")
-  }
 }
 
-/** Session-extension hook: inject graft functions and optimizer rules
-  * at session build time (`.withExtensions(new GraftExtensions)` or the
-  * spark.sql.extensions conf). Functions derive from the SAME builder
-  * list as [[GraftFunctions.register]], so the two wiring paths cannot
-  * drift apart; rules can also be attached to a live session via
-  * `SampleWindowPrune.enable`. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
+/** The session extension that installs graft's functions and its
+  * optimizer rule ([[graft.plans.SampleWindowPrune]]). Spark's
+  * `SparkSession.Builder` finds it through `ServiceLoader` (the service
+  * file under `META-INF/services`) and applies it to every session it
+  * builds, so it must not also be listed in `spark.sql.extensions`:
+  * that would inject every function twice and run the rule twice. */
+class GraftExtensions extends org.apache.spark.sql.SparkSessionExtensionsProvider {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.injections.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => graft.plans.SampleWindowPrune)

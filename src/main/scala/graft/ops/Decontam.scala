@@ -34,7 +34,6 @@ object Decontam {
     * docs/PLANS.md), which made this derivation the whole query's
     * cost at sf0.1. */
   private def gramHashes(docs: DataFrame, n: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
         explode_outer(expr(s"word_ngrams(text, $n)")).as("gram"))

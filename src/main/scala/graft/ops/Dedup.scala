@@ -131,7 +131,6 @@ object Dedup {
       maxDf: Long = 32, minShared: Long = 2): DataFrame = {
     require(maxDf >= 2, s"maxDf must be >= 2, got $maxDf")
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val docsSh = TextFns.withShingles(spreadDocs(docs))
       .select(col("doc_id"), col("shingles"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -220,10 +219,7 @@ object Dedup {
     * Also the piece that makes MinHash dedup streamable
     * (StreamSurface.stream_dedup_minhash): a per-doc signature must not
     * need a mid-stream aggregation. */
-  def minhashSigCol(df: DataFrame, k: Int): Column = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    expr(s"minhash_sig(shingles, $k)")
-  }
+  def minhashSigCol(k: Int): Column = expr(s"minhash_sig(shingles, $k)")
 
   /** MinHash + banded-LSH near-dup pairs: k signatures in `bands` bands
     * of rows = k/bands; docs colliding on any band become candidates;
@@ -389,7 +385,7 @@ object Dedup {
     // row-level signatures: one native scan per doc, zero shuffle
     // (the exploded groupBy twin lives in minhashSignatures)
     val sigs = docsSh
-      .select(col("doc_id"), minhashSigCol(docsSh, k).as("sig"))
+      .select(col("doc_id"), minhashSigCol(k).as("sig"))
       .where(col("sig").isNotNull)
     val banded = bandedKeys(sigs, bands, r)
     val cand =
@@ -753,7 +749,7 @@ object Dedup {
     val exSh = shingled(existing)
     val inSh = shingled(incoming)
     def sigsOf(sh: DataFrame) = sh
-      .select(col("doc_id"), minhashSigCol(sh, k).as("sig"))
+      .select(col("doc_id"), minhashSigCol(k).as("sig"))
       .where(col("sig").isNotNull)
     val exBand = bandedKeys(sigsOf(exSh), bands, r)
     val inBand = bandedKeys(sigsOf(inSh), bands, r)
@@ -844,13 +840,13 @@ object Dedup {
       .select(col("doc_id"), col("shingles"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val exBand = bandedKeys(exSh
-      .select(col("doc_id"), minhashSigCol(exSh, k).as("sig"))
+      .select(col("doc_id"), minhashSigCol(k).as("sig"))
       .where(col("sig").isNotNull), bands, r)
       .withColumnRenamed("doc_id", "auth_id")
     val inSh = TextFns.withShingles(incoming)
       .select(col("doc_id"), col("shingles"))
     val inSig = inSh.select(col("doc_id"), col("shingles"),
-      minhashSigCol(inSh, k).as("sig")).where(col("sig").isNotNull)
+      minhashSigCol(k).as("sig")).where(col("sig").isNotNull)
     val inBand = bandedKeys(inSig, bands, r, carryCols = Seq("shingles"))
     inBand.join(exBand, Seq("band", "key"))
       .join(exSh.select(col("doc_id").as("auth_id"),
@@ -995,7 +991,6 @@ object Dedup {
   private def suppressBlocklistImpl(corpus: DataFrame, blocklist: DataFrame,
       estItems: Long, numBits: Long, cache: Boolean): DataFrame = {
     val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     // loud-fail instead of BloomFilterAggregate's silent Math.min clamp
     // (see scaladoc): a saturated sketch is a perf cliff, not an error
     // the results would ever surface
@@ -1069,7 +1064,6 @@ object Dedup {
     * kept with zeros. */
   def duplicateBlockStats(docs: DataFrame, blockTokens: Int = 10): DataFrame = {
     require(blockTokens >= 1, s"blockTokens must be >= 1, got $blockTokens")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // the block relation feeds BOTH the per-block doc counts and the
     // per-doc rollup — persist so tokenize+hash runs once per corpus
     // (caller releases via clearCache, the shared-relation convention)
@@ -1140,7 +1134,6 @@ object Dedup {
 
   def dupSpanCoverage(docs: DataFrame, spanTokens: Int = 10): DataFrame = {
     require(spanTokens >= 1, s"spanTokens must be >= 1, got $spanTokens")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val n = spanTokens
     val grams = positionedGramHashes(docs, n)
     val dup = crossDocDupGrams(grams)
@@ -1189,7 +1182,6 @@ object Dedup {
     * space-rejoined raw token stream — the normText-free analog). */
   def applySpanDedup(docs: DataFrame, spanTokens: Int = 10): DataFrame = {
     require(spanTokens >= 1, s"spanTokens must be >= 1, got $spanTokens")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val n = spanTokens
     val grams = positionedGramHashes(docs, n)
     val dup = crossDocDupGrams(grams)

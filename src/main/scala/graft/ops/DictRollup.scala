@@ -391,7 +391,6 @@ object DictRollup {
       hourUs: Long = HourUs): DataFrame = {
     requireDict(dict)
     val spark = ev.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val m = dict.size + 1 // + the reserved quarantine code
     val packed = packedExpr(dict, hourUs)
     // Null semantics, PINNED (r14 — they diverge from the generic twin
@@ -696,7 +695,6 @@ object DictRollup {
       hourUs: Long = HourUs): DataFrame = {
     requireDict(dict)
     val spark = raw.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val (scan, Seq(iTs, iTy, iUid, iVal), tsNanos) =
       columnarScanOf(raw, Seq("ts", "event_type", "user_id", "value"))
     val dictU = dict.map(
@@ -792,7 +790,6 @@ object DictRollup {
       hourUs: Long, withSplit: Boolean): DataFrame = {
     requireDict(dict)
     val spark = raw.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val cols = if (withSplit) Seq("ts", "event_id", "event_type", "value")
       else Seq("ts", "event_type", "value")
     val (scan, idx, tsNanos) = columnarScanOf(raw, cols)
@@ -997,10 +994,7 @@ object DictRollup {
       val proj = microsProjection(raw)
       if (hourUs != HourUs || estRowsOf(proj) > dictThresholdRows(raw))
         foldRollup(proj, dict, hourUs)
-      else {
-        graft.functions.GraftFunctions.register(raw.sparkSession)
-        graft.ops.Incremental.merge(graft.ops.Incremental.hourlyPartials(proj))
-      }
+      else graft.ops.Incremental.merge(graft.ops.Incremental.hourlyPartials(proj))
     }
 
   /** [[foldRollupAuto]] for the incremental (split-merge) family,
@@ -1018,7 +1012,6 @@ object DictRollup {
       if (hourUs != HourUs || estRowsOf(proj) > dictThresholdRows(raw))
         incrementalRollup(proj, dict, isNew, hourUs)
       else {
-        graft.functions.GraftFunctions.register(raw.sparkSession)
         graft.ops.Incremental.merge(
           graft.ops.Incremental.hourlyPartialsBy(proj, isNew).drop("split"))
       }
@@ -1050,7 +1043,6 @@ object DictRollup {
       dayUs: Long = 86400000000L): DataFrame = {
     requireDict(dict)
     val spark = raw.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val (scan, idx, tsNanos) =
       columnarScanOf(raw, Seq("ts", "event_type", "user_id"))
     val (iTs, iTy, iUid) = (idx(0), idx(1), idx(2))
@@ -1133,7 +1125,6 @@ object DictRollup {
   def sketchRollupAuto(raw: DataFrame, dict: Seq[String],
       dayUs: Long = 86400000000L): DataFrame =
     columnarOrElse(sketchRollupColumnar(raw, dict, dayUs)) {
-      graft.functions.GraftFunctions.register(raw.sparkSession)
       graft.ops.Approx.sketchRollup(microsProjection(raw), dayUs = dayUs)
     }
 
@@ -1358,7 +1349,6 @@ object DictRollup {
     * row kernels' packed keys need the declaration). */
   def foldRollupAuto(raw: DataFrame, hourUs: Long): DataFrame =
     columnarOrElse(foldRollupInferred(raw, hourUs)) {
-      graft.functions.GraftFunctions.register(raw.sparkSession)
       val proj = microsProjection(raw)
       graft.ops.Incremental.merge(
         if (hourUs == HourUs) graft.ops.Incremental.hourlyPartials(proj)
@@ -1390,7 +1380,6 @@ object DictRollup {
       dayUs: Long = 86400000000L): DataFrame = {
     require(dayUs > 0, s"dayUs must be positive: $dayUs")
     val spark = raw.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val catCap = openCatCap(raw)
     // filter-only composed inputs run ON the kernel (r16, verdict #4)
     val (scan, idx, tsNanos, pred) = columnarScanOfFiltered(raw,
@@ -1472,7 +1461,6 @@ object DictRollup {
     * (distinct-first) row form otherwise. */
   def sketchRollupAuto(raw: DataFrame, dayUs: Long): DataFrame =
     columnarOrElse(sketchRollupInferred(raw, dayUs)) {
-      graft.functions.GraftFunctions.register(raw.sparkSession)
       graft.ops.Approx.sketchRollup(microsProjection(raw), dayUs = dayUs)
     }
 
@@ -1484,7 +1472,6 @@ object DictRollup {
     * split-partials fold otherwise. */
   def incrementalRollupAuto(raw: DataFrame, hourUs: Long): DataFrame =
     columnarOrElse(incrementalRollupInferred(raw, hourUs)) {
-      graft.functions.GraftFunctions.register(raw.sparkSession)
       require(hourUs == HourUs,
         "undeclared-corpus incremental: only the 1-hour bucket has a " +
           "generic fallback (Incremental.hourlyPartialsBy pins it)")

@@ -80,7 +80,6 @@ object Packing {
       stride: Int = 30): DataFrame = {
     require(chunkTokens >= 1 && stride >= 1 && stride <= chunkTokens,
       s"need 1 <= stride <= chunkTokens, got stride=$stride chunk=$chunkTokens")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.selectExpr("doc_id", "word_ngrams_all(text, 1) AS toks")
       .selectExpr("doc_id", "toks", "CAST(size(toks) AS BIGINT) AS n_tokens")
       .filter(col("n_tokens") > 0)

@@ -48,7 +48,6 @@ object Profile {
     * one again) is on the aggregate's doc. */
   def profile(df: DataFrame, numericCols: Seq[String],
       otherCols: Seq[String]): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val integral: Set[org.apache.spark.sql.types.DataType] = Set(
       org.apache.spark.sql.types.LongType,
       org.apache.spark.sql.types.IntegerType,

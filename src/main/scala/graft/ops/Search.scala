@@ -43,7 +43,6 @@ object Search {
     * the Terms.termFreq derivation (normText tokens, exact
     * multiplicities, no token-level explode). */
   private def termFreq(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
         explode(call_function("norm_ngram_counts", col("text"), lit(1))))
       .select(col("doc_id"), col("key").as("term"), col("value").as("tf"))
@@ -56,7 +55,6 @@ object Search {
     require(k >= 1 && queries.nonEmpty, s"need k >= 1 and queries, got $k")
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // Posting-list shape (optimization r17, guide §2.3 "shuffle fewer
     // bytes" / §5): the old plan materialized the FULL (doc, term, tf)
     // relation — vocabulary × corpus rows — into a MEMORY_AND_DISK
@@ -214,7 +212,6 @@ object Search {
       s"distance-1 neighborhood index, got maxDist=$maxDist")
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val vocab = docs.select(col("doc_id"),
         explode(call_function("norm_ngram_counts", col("text"), lit(1))))
       .select(col("doc_id"), col("key").as("term"))

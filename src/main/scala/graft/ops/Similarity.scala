@@ -29,9 +29,7 @@ object Similarity {
     * (graft.functions.DotDec) — the interpreted
     * `aggregate(zip_with(...))` composition computes the identical
     * value but pays per-element lambda dispatch outside whole-stage
-    * codegen (measured ~3x on the IVF path; the Shingles3 lesson). The
-    * session must have graft functions registered — every public op
-    * here does so on entry. */
+    * codegen (measured ~3x on the IVF path; the Shingles3 lesson). */
   def dotDec(a: String, b: String): Column = expr(s"dot_dec($a, $b)")
 
   /** L2 norm of a float-array column via the same exact accumulation. */
@@ -197,7 +195,6 @@ object Similarity {
     * Output: (query_id, neighbor_id, sim, rank).
     */
   def bruteForceTopK(embeddings: DataFrame, queryPred: Column, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val base = embeddings.select(col("vec_id"), col("embedding"))
       .withColumn("nrm", normDec("embedding"))
     bruteTopKOn(base, queryPred, k)
@@ -235,7 +232,6 @@ object Similarity {
     require(k >= 1, s"k must be >= 1, got $k")
     require(coarseDims >= 1, s"coarseDims must be >= 1, got $coarseDims")
     require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     // the coarse pass touches ONLY the prefix: no full-dim norm on the
     // corpus scan, and the candidate-cut shuffle carries exactly
     // (query_id, neighbor_id, cs) — 3 narrow columns, not vectors
@@ -316,7 +312,6 @@ object Similarity {
     * [[bruteForceTopK]] is validated in SimilaritySpec. */
   def lshBucketTopK(embeddings: DataFrame, queryPred: Column, k: Int,
       nPlanes: Int = 6, dim: Int = 64, nTables: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     require(nTables >= 1, s"nTables must be >= 1, got $nTables")
     guardBook(embeddings.sparkSession, s"lsh:tables=$nTables,planes=$nPlanes")
     // table t uses plane rows [t*nPlanes, (t+1)*nPlanes) of the shared
@@ -453,7 +448,6 @@ object Similarity {
       nCentroids: Int = 8, kmeansIters: Int = 2,
       trainPred: Column = expr("vec_id % 2 = 0"),
       cacheKey: Option[String] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val base = withNorm(corpus)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cents =
@@ -477,7 +471,6 @@ object Similarity {
     * Output: (vec_id, cell, cs). */
   def placeIntoBook(arrivals: DataFrame,
       cents: Seq[(Long, Array[Double])]): DataFrame = {
-    graft.functions.GraftFunctions.register(arrivals.sparkSession)
     val withN = arrivals.select(col("vec_id"), col("embedding"))
       .withColumn("nrm", normDec("embedding"))
     val cs = centroidStructsOn("embedding", "nrm", cents)
@@ -506,7 +499,6 @@ object Similarity {
     */
   def trainCodebook(embeddings: DataFrame, nCentroids: Int, iters: Int,
       trainPred: Column): Seq[(Long, Array[Double])] = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val base = withNorm(embeddings)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try trainCodebookOn(base, nCentroids, iters, trainPred)
@@ -774,7 +766,6 @@ object Similarity {
       nCentroids: Int = 8, nProbe: Int = 2, kmeansIters: Int = 2,
       trainPred: Column = expr("vec_id % 2 = 0"),
       cacheKey: Option[String] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     // ONE normed corpus materialization feeds k-means training, the
     // corpus-side cell assignment, and the probe side — previously
     // training and search each derived it independently and every
@@ -835,7 +826,6 @@ object Similarity {
       k: Int, nCentroids: Int = 8, nProbe: Int = 2, kmeansIters: Int = 2,
       trainPred: Column = expr("vec_id % 2 = 0"),
       cacheKey: Option[String] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val corpusBase = withNorm(corpus)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cents =
@@ -875,7 +865,6 @@ object Similarity {
       nCentroids: Int = 8, nProbe: Int = 2, kmeansIters: Int = 2,
       trainPred: Column = expr("vec_id % 2 = 0"), rerank: Int = 50,
       cacheKey: Option[String] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val base = withNorm(embeddings)
       .transform(persistTracked)
     val cents = memoized(cacheKey, s"coarse|$nCentroids|$kmeansIters|$trainPred") {
@@ -1082,7 +1071,6 @@ object Similarity {
       trainPred: Column = expr("vec_id % 2 = 0"),
       nSub: Int = 16, kSub: Int = 8, rerank: Int = 1200,
       cacheKey: Option[String] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     guardBook(embeddings.sparkSession,
       s"ivfpq:nsub=$nSub,ksub=$kSub,rerank=$rerank,nprobe=$nProbe")
     val base = withNorm(embeddings)
@@ -1165,7 +1153,6 @@ object Similarity {
     * verification baseline; [[embeddingDupPairsLsh]] is the 100 TB
     * path. Output: (vec_a, vec_b, sim). */
   def embeddingDupPairs(embeddings: DataFrame, threshold: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val base = embeddings.select(col("vec_id"), col("label"), col("embedding"))
       .withColumn("nrm", normDec("embedding"))
     base.as("a").join(base.as("b"),
@@ -1225,7 +1212,6 @@ object Similarity {
     * on the bucket id. Output: (vec_a, vec_b, sim). */
   def embeddingDupPairsLsh(embeddings: DataFrame, threshold: Double,
       nPlanes: Int = 6, dim: Int = 64): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val ps = planes(nPlanes, dim)
     val base = embeddings.select(col("vec_id"), col("embedding"))
       .withColumn("nrm", normDec("embedding"))
@@ -1267,7 +1253,6 @@ object Similarity {
       nCentroids: Int = 8, kmeansIters: Int = 2,
       trainPred: Column = expr("vec_id % 2 = 0"),
       cacheKey: Option[String] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     // one normed corpus materialization feeds training, assignment and
     // both sides of the intra-cell join (the ivfTopK convention; the
     // caller releases the cache after materializing, clearCache
@@ -1315,7 +1300,6 @@ object Similarity {
       kmeansIters: Int = 2,
       trainPred: Column = expr("vec_id % 2 = 0"),
       cacheKey: Option[String] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val base = withNorm(embeddings)
       .transform(persistTracked)
     val cents = memoized(cacheKey, s"coarse|$nCentroids|$kmeansIters|$trainPred") {
@@ -1403,7 +1387,6 @@ object Similarity {
       trainPred: Column = expr("vec_id % 2 = 0"),
       corpusCacheKey: Option[String] = None,
       fullCacheKey: Option[String] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val base = withNorm(embeddings).transform(persistTracked)
     val qp = boundedQueryPred(base, queryPred, maxQueries)
     val tag = s"coarse|$nCentroids|$kmeansIters|$trainPred"
@@ -1503,7 +1486,6 @@ object Similarity {
     if (mode == "pair")
       return recallStalenessPair(embeddings, corpusPred, queryPred, k,
         maxQueries, nCentroids, nProbe, kmeansIters, trainPred)
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val base = withNorm(embeddings).transform(persistTracked)
     val qp = boundedQueryPred(base, queryPred, maxQueries)
     val freshCents = trainCodebookOn(base, nCentroids, kmeansIters, trainPred)

@@ -41,7 +41,6 @@ object Terms {
     * for the fused numbers at sf1). Semantics identical: normText
     * tokens, empty tokens never emitted, exact multiplicities. */
   private def termFreq(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
         explode(call_function("norm_ngram_counts", col("text"), lit(1))))
       .select(col("doc_id"), col("key").as("term"), col("value").as("tf"))
@@ -156,7 +155,6 @@ object Terms {
     *
     * Output: (doc_id, n_bigrams, sum_bits, mean_centibits, keep). */
   def bigramSurprisal(docs: DataFrame, minCb: Long, maxCb: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // ALL bigrams (with repeats) from ONE native walk of the
     // normalized text — the transform(sequence(...)) composition paid
     // per-gram interpreted-lambda dispatch (measured ~3x at sf1, the
@@ -230,7 +228,6 @@ object Terms {
     * subexpression elimination evaluates each walk once per row, the
     * text_stats_scan pattern). */
   def topNgramRepetition(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     def statsFor(n: Int, p: String): Seq[Column] = {
       val m = s"norm_ngram_counts(text, $n)"
       Seq(
@@ -263,7 +260,6 @@ object Terms {
     * Output: (doc_id, n_tokens, score, keep). */
   def hashedLinearScore(docs: DataFrame, buckets: Long = 4096L,
       threshold: Long = 0L): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val m = "norm_ngram_counts(text, 1)"
     val w = s"((cast(conv(substring(md5(e.key), 1, 15), 16, 10) AS BIGINT) " +
       s"% $buckets) * 2654435761) % 1997 - 998"
@@ -338,7 +334,6 @@ object Terms {
     // two plus a join. shingle_hashes3 emits the h60 longs directly,
     // so the explode carries 8-byte keys and the per-shingle md5+conv
     // projection never appears in the plan.
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val postings = graft.ops.Dedup.spreadDocs(docs)
       .select(col("doc_id"),
         explode(call_function("shingle_hashes3", col("text"))).as("th"))

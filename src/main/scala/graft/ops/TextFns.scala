@@ -66,8 +66,7 @@ object TextFns {
     * higher-order-function lambdas, so tokenization re-ran once per
     * PRODUCED SHINGLE (measured 30-60x slowdown at sf0.1). */
   def withShingles(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    df.withColumn("shingles",
-      graft.functions.GraftFunctions.shingles3(df.sparkSession, "text"))
+    df.withColumn("shingles", expr("shingles3(text)"))
 
   /** 32-bit token hash for SimHash (8 hex chars of md5 — small enough
     * that bit arithmetic stays in safely-positive Long range in every

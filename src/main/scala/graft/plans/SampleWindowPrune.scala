@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -57,9 +56,10 @@ import org.apache.spark.sql.types.{ArrayType, LongType, TimestampNTZType, Timest
   * the rewrite can only prune work, never change results (locked
   * bit-for-bit by SampleWindowPruneSpec).
   *
-  * Wiring: `spark.sql.extensions=graft.functions.GraftExtensions`
-  * (injectOptimizerRule) or [[SampleWindowPrune.enable]] on an
-  * already-built session (experimental.extraOptimizations).
+  * Wiring: [[graft.functions.GraftExtensions]] injects it into every
+  * session (injectOptimizerRule), so it is always on. To plan without
+  * it, as a baseline, exclude it by name:
+  * `spark.sql.optimizer.excludedRules=graft.plans.SampleWindowPrune`.
   */
 object SampleWindowPrune extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -69,14 +69,6 @@ object SampleWindowPrune extends Rule[LogicalPlan] with PredicateHelper {
     * no-op on its own output even when another rule rebuilds the
     * Filter node and drops the tag (tags do not survive node copies). */
   private val pruned = TreeNodeTag[Boolean]("graft.sampleWindowPruned")
-
-  /** Idempotently append the rule to an existing session's optimizer
-    * (the extension-injection path needs the config set before the
-    * session is built; this one works on any live session). */
-  def enable(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
 
   /** The NTZ micros projection reads `unix_micros(cast(ntz as
     * timestamp))` where the cast's zone resolves from the SESSION

@@ -22,10 +22,8 @@ import graft.core.Tables
   */
 object AnalyticsSurface {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s) // sum_micro et al.
+  private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
-  }
 
   /** Exact decimal(30,6)-semantics sum rounded to 4 dp —
     * order-independent, engine-stable, BIT-IDENTICAL to
@@ -116,7 +114,6 @@ object AnalyticsSurface {
     * win_top3_per_user oracle verbatim, a true differential test of
     * the two formulations. */
   private def top3PerUserAgg(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val ev = Tables.eventSeries(s, dir)
     ev.groupBy("user_id")
       .agg(call_function("topk_records",
@@ -313,7 +310,6 @@ object AnalyticsSurface {
     * decimal accumulation → bit-identical to the oracle's DECIMAL
     * window sum at every prefix. Shuffles once on user_id. */
   private def cumsumPerUser(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val ev = Tables.eventSeries(s, dir)
     val w = Window.partitionBy("user_id")
       .orderBy(col("timestamp").asc, col("value").asc)
@@ -338,7 +334,6 @@ object AnalyticsSurface {
     * actual (possibly null) key values with gid 0. */
   private def groupingSetsFromFineState(s: SparkSession, dir: String,
       withCohortLevel: Boolean): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // NOT persisted, deliberately: unlike the agg_incremental_rollup
     // case (whose grouped state is referenced through FILTERED
     // branches that defeat canonicalization), the levels below
@@ -417,7 +412,6 @@ object AnalyticsSurface {
     // single-pass rollup bit-identically (decimal associativity) —
     // folding a batch in never rescans the corpus
     "agg_incremental_rollup" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       // 80/20 hash split into standing state vs new batch. The MERGED
       // output is split-invariant (decimal associativity — the oracle
       // is the plain single-pass GROUP BY), so the split function only
@@ -450,7 +444,6 @@ object AnalyticsSurface {
     // for the merge-equals-rescan identity on top (same oracle; the
     // pair ratio between the two keys IS the measured harness price)
     "agg_rollup_fold" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       graft.ops.Incremental.merge(
         graft.ops.Incremental.hourlyPartials(Tables.eventSeries(s, dir)))
     }),
@@ -461,7 +454,6 @@ object AnalyticsSurface {
     // 3-long slot (no bitmap; the fold has no distinct aggregate).
     // The generic forms stay the defaults for undeclared corpora.
     "agg_rollup_fold_dict" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       graft.ops.DictRollup.foldRollup(Tables.eventSeries(s, dir),
         Seq("signup", "purchase", "view", "click", "error"))
     }),
@@ -469,7 +461,6 @@ object AnalyticsSurface {
     // xxhash64 predicate as the generic gate) in the packed key's low
     // bit, so its gate pays the identical real two-partial merge
     "agg_incremental_rollup_dict" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       graft.ops.DictRollup.incrementalRollup(Tables.eventSeries(s, dir),
         Seq("signup", "purchase", "view", "click", "error"),
         pmod(xxhash64(col("event_id"), lit("incr")), lit(100L)) < 20)
@@ -607,7 +598,6 @@ object AnalyticsSurface {
     // standing orders⋈customer view appends for this batch, computed
     // without re-joining the bases
     "join_incremental" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val o = Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
       val c = Tables.load(s, dir, "customer")
@@ -886,7 +876,6 @@ object AnalyticsSurface {
     // same 15 s) — identical values on integer sidecar fields,
     // contract on the codec scaladoc, parity fuzzed in JsonFastSpec
     "events_json_extract" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       t(s, dir, "events")
         .select(col("event_type"),
           expr("json_long(props, 'k')").as("k"))
@@ -986,7 +975,6 @@ object AnalyticsSurface {
     // (functions/BitmapNdv.scala — profile_events' long pole at 100M
     // events was exactly this shape)
     "agg_bitmap_distinct" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.load(s, dir, "events").agg(
         call_function("bitmap_ndv", col("event_id")).as("n_ids"),
         call_function("bitmap_ndv", col("user_id")).as("n_users"))

@@ -71,11 +71,9 @@ object RefSurface {
     // below the aggregation (window semantics differ from ts_sample_by:
     // boundary windows here aggregate ALL their rows, not just
     // in-range ones — the label filter, not a row filter, scopes it)
-    "ts_sample_by_pruned" -> ((s, dir) => {
-      graft.plans.SampleWindowPrune.enable(s)
+    "ts_sample_by_pruned" -> ((s, dir) =>
       SeriesOps.sampleBy(ev(s, dir), HOUR_US)
-        .filter(col("sample_ts") >= T0 && col("sample_ts") <= T1)
-    }),
+        .filter(col("sample_ts") >= T0 && col("sample_ts") <= T1)),
     "ts_sliding_window" -> ((s, dir) =>
       SeriesOps.slidingBy(evRanged(s, dir), HOUR_US, SLIDE_US)),
     // counter-analytics selectors over SAMPLE BY windows (extension

@@ -266,7 +266,6 @@ object StreamSurface {
     * (plan shape locked by SampleWindowPruneSpec's streaming case;
     * this gate locks the VALUES against the batch oracle). */
   private def streamSlidingPruned(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.SampleWindowPrune.enable(s)
     runToTable(s,
       SeriesOps.slidingBy(eventSeriesStream(s, dir), HOUR_US, RefSurface.SLIDE_US)
         .filter(col("sample_ts") >= SLIDE_T0 && col("sample_ts") <= SLIDE_T1),
@@ -328,7 +327,6 @@ object StreamSurface {
     * equal the batch sim_assign_incremental gate; its oracle applies
     * verbatim. */
   private def streamAssignIncremental(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val staged = stageParquet(dir, "embeddings.parquet")
     val corpus = s.read.schema(embeddingsSchema).parquet(staged)
       .filter(expr("vec_id % 10 < 8"))
@@ -340,7 +338,6 @@ object StreamSurface {
   }
 
   private def streamDedupMinhash(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val stream = s.readStream.schema(documentsSchema)
       .parquet(stageParquet(dir, "documents.parquet"))
     val sigs = graft.ops.TextFns.withShingles(stream)
@@ -413,7 +410,6 @@ object StreamSurface {
     * the batch window formulation: stream/batch/aggregate three-way
     * parity on one result set. */
   private def streamTop3(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val (staged, tsType) = stagedEvents(s, dir)
     val stream = s.readStream.schema(eventsSchema(tsType)).parquet(staged)
       .select(Tables.tsMicrosOf(tsType).as("timestamp"),
@@ -576,7 +572,6 @@ object StreamSurface {
     * gate renders its combined state. Oracle: agg_rollup_fold's,
     * verbatim. State bounded by the (type, hour) key population. */
   private def streamHourlyRollup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val (staged, tsType) = stagedEvents(s, dir)
     val stream = s.readStream.schema(eventsSchema(tsType)).parquet(staged)
       .select(col("event_type"), Tables.tsMicrosOf(tsType).as("timestamp"),

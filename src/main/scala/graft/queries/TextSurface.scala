@@ -73,7 +73,6 @@ object TextSurface {
     * engines within 1 ulp of a boundary, so the whole query stays in
     * the integer domain (`floor(a*10000/b)` + weighted integer sums). */
   private def textStats(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     docs(s, dir)
       // all five counts in ONE scan (native text_stats_scan expression;
       // semantics locked to the regex forms — see TextStatsCodec)
@@ -103,7 +102,6 @@ object TextSurface {
     * count-locked to the regex forms — graft.functions.LangScanCodec),
     * replacing four marker-regex passes + a CJK regexp_replace. */
   private def langId(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val withHits = docs(s, dir)
       .withColumn("ls", expr("lang_scan(text)"))
       .withColumn("en_hits", col("ls.en_hits"))
@@ -135,7 +133,6 @@ object TextSurface {
     * Project → Project: no shuffle, no explode — the filter runs at
     * scan speed on 100 TB. */
   private def qualityGopher(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     docs(s, dir)
       .withColumn("qs", expr("quality_scan(text)"))
       .withColumn("n_words", col("qs.n_words"))
@@ -163,14 +160,12 @@ object TextSurface {
     // Gopher verdict (graft.ops.Probe): deterministic surrogate-loss
     // GD, integer-exact gradient sums, weights hash-gate bit-for-bit
     "probe_train_quality" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       graft.ops.Probe.trainQualityProbe(qualityGopher(s, dir))
     }),
     // …and APPLY it: every doc scored with the trained probe — the
     // smooth ranking the hard bands cannot give (train -> score in
     // one composed operation)
     "probe_score_quality" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       graft.ops.Probe.scoreQualityProbe(qualityGopher(s, dir))
     }),
     // train/serve split hygiene: weights fit on HALF the corpus, every
@@ -178,7 +173,6 @@ object TextSurface {
     // production probe ships with (ProbeSpec locks held-out accuracy
     // above the majority class)
     "probe_holdout_quality" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       graft.ops.Probe.scoreHoldoutProbe(qualityGopher(s, dir), "doc_id % 2 = 0")
     }),
     // percentile-CALIBRATED quality bands (Percentiles.calibrateBands):
@@ -233,7 +227,6 @@ object TextSurface {
     // merge table is constant model state like `planes`, so the oracle
     // replays tokenization as a closed-form char-space + replace chain
     "text_bpe" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       docs(s, dir).select(col("doc_id"), expr("bpe_count(text)").as("n_bpe"))
     }),
     // tokenizer TRAINING over the corpus (graft.ops.Tokenizer): the

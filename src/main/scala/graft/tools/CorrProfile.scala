@@ -155,7 +155,6 @@ object CorrProfile {
       }
       println(f"[corrprofile] $name%-28s ${reps.map(r => f"$r%.2f").mkString(" ")}")
     }
-    graft.functions.GraftFunctions.register(spark)
     val ev = graft.core.Tables.eventSeries(spark, dir)
     val hourUs = 3600000000L
     time("ev_scan_count")(ev.select(count(lit(1))))

@@ -33,7 +33,6 @@ object EventAggProfile {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
 
     // GRAFT_EVPROFILE_ONLY=prefix1,prefix2 filters timed entries
     val only = sys.env.get("GRAFT_EVPROFILE_ONLY")
@@ -334,7 +333,6 @@ object EventAggProfile {
     // count under ALL-PRIMITIVE keys (r11 only measured bitmap under
     // the string key, where the ObjectHashAggregate string path lost)
     def hourlyBitmapPrim: DataFrame = {
-      graft.functions.GraftFunctions.register(spark)
       val fine = ev.groupBy(hourTs, typeCode)
         .agg(count(lit(1)).as("n"),
           expr("bitmap_ndv(user_id)").as("n_users"),
@@ -360,7 +358,6 @@ object EventAggProfile {
     // shippable form: no hardcoded type list — xxhash64 key + a
     // distinct-map recovery join (state-sized, broadcast)
     def hourlyBitmapHash: DataFrame = {
-      graft.functions.GraftFunctions.register(spark)
       val fine = ev.groupBy(hourTs, xxhash64(col("event_type")).as("tc"))
         .agg(count(lit(1)).as("n"),
           expr("bitmap_ndv(user_id)").as("n_users"),

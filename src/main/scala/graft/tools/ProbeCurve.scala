@@ -18,7 +18,6 @@ object ProbeCurve {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     for (iters <- Seq(4, 8, 16, 32)) {
       spark.sharedState.cacheManager.clearCache()
       val stats = graft.queries.TextSurface.queries("text_quality_gopher")(spark, sfDir)

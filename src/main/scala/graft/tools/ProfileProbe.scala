@@ -70,7 +70,6 @@ object ProfileProbe {
 
     // bitmap NDV: range-bounded partials, word-OR merge — the shape
     // profile() now uses for integral columns
-    graft.functions.GraftFunctions.register(spark)
     time("eventid_bitmap_ndv")(
       ev.select(col("event_id")).agg(
         call_function("bitmap_ndv", col("event_id"))))

@@ -29,7 +29,6 @@ object Q1Profile {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
       .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
 

@@ -7,7 +7,7 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.graft.ListenerBridge.jobsOf
+import org.apache.spark.graft.ListenerBridge.{jobDescriptionsOf, jobsOf}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.{SeriesMeta, TsCatalog}
@@ -74,6 +74,31 @@ class InsertJobsSpec extends AnyFunSuite {
       val (_, jobs) = jobsOf(spark.sparkContext)(exec.flush())
       assert(jobs == 2, s"flush of 2 series ran $jobs jobs")
       assert(cat.readSeries("bdb", "a").count() == 15 && cat.readSeries("bdb", "b").count() == 15)
+    }
+  }
+
+  test("an ignore-policy INSERT reads only its own buckets, with no listing job") {
+    import spark.implicits._
+    withCatalog { (cat, _) =>
+      val exec = new StatementExecutor(spark, cat, () => Base)
+      exec.executeSql("CREATEDB gdb"); exec.executeSql("CREATE s 'ignore'")
+      // one point per bucket: 48 buckets, past Spark's parallel listing
+      // threshold (32) for a directory handed to it whole
+      cat.insert("gdb", "s", (0 until 48).map(k => (Base + k * BucketNs, -1.0))
+        .toDF("timestamp", "value"))
+      val last = Base + 47 * BucketNs
+      // 15 rows in the newest bucket; the first repeats its stored point
+      val (ack, jobs) = jobDescriptionsOf(spark.sparkContext)(
+        exec.executeSql(s"INSERT INTO s VALUES ${values((0 until 15).map(i => last + i * 1000L))}"))
+      assert(ack == ExecResult.Ack("14 point(s) inserted, 0 error(s)"))
+      assert(!jobs.exists(_.startsWith("Listing leaf files")), jobs)
+      // before the driver-listed read: a listing job, the bucket-id
+      // collect and the write, 4 jobs in all
+      assert(jobs.size < 4, jobs)
+      val stored = cat.readSeries("gdb", "s").filter($"timestamp" === last)
+        .as[(Long, Double)].collect()
+      assert(stored.toSeq == Seq((last, -1.0)))
+      assert(cat.readSeries("gdb", "s").count() == 48 + 14)
     }
   }
 

@@ -18,7 +18,6 @@ class BitmapNdvSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def assertParity(df: org.apache.spark.sql.DataFrame): Unit = {
-    GraftFunctions.register(spark)
     val both = df.groupBy("k").agg(
       call_function("bitmap_ndv", col("v")).as("fast"),
       countDistinct(col("v")).as("ref"))
@@ -46,7 +45,6 @@ class BitmapNdvSpec extends AnyFunSuite {
   }
 
   test("partials merge exactly across partitionings (serialize round-trip)") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(13)
     val vals = (0 until 50000).map(_ => rnd.nextLong() % 3000000L)
     val expected = vals.distinct.size.toLong
@@ -58,21 +56,18 @@ class BitmapNdvSpec extends AnyFunSuite {
   }
 
   test("integer input works through the same aggregate") {
-    GraftFunctions.register(spark)
     val got = (0 until 1000).map(i => i % 321).toDF("v")
       .agg(call_function("bitmap_ndv", col("v"))).collect()(0).getLong(0)
     assert(got == 321L)
   }
 
   test("all-null input counts zero, like count distinct") {
-    GraftFunctions.register(spark)
     val got = Seq[java.lang.Long](null, null).toDF("v")
       .agg(call_function("bitmap_ndv", col("v"))).collect()(0).getLong(0)
     assert(got == 0L)
   }
 
   test("a value range past the container cap fails loudly, never silently") {
-    GraftFunctions.register(spark)
     // one value per 65,536-value span, one more span than the cap
     val wide = (0L to NdvBitmap.MaxContainers.toLong)
       .map(i => i * 65536L).toDF("v").repartition(1)
@@ -84,7 +79,6 @@ class BitmapNdvSpec extends AnyFunSuite {
   }
 
   test("bitmap_merge_ndv over serialized partials equals bitmap_ndv over the union") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(17)
     // build per-group serialized bitmaps by hand (the DictRollup
     // kernel's partial shape), overlapping value sets across groups
@@ -111,7 +105,6 @@ class BitmapNdvSpec extends AnyFunSuite {
   }
 
   test("non-integral input is rejected at analysis") {
-    GraftFunctions.register(spark)
     val e = intercept[Exception] {
       Seq(1.5).toDF("v").agg(call_function("bitmap_ndv", col("v"))).collect()
     }

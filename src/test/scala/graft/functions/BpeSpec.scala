@@ -43,7 +43,6 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("native bpe_count matches the replace-chain formulation through Spark SQL") {
-    GraftFunctions.register(spark)
     // the oracle's closed form, replayed with Spark's replace/regexp:
     // Spark regexp_replace uses $1 for groups where DuckDB uses \1
     val norm =
@@ -114,7 +113,6 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("document counts sum per-word counts over the normalized text") {
-    GraftFunctions.register(spark)
     val got = Seq("Scan, the WINDOW!  zq 42", "", "   ", "scan scan scan")
       .toDF("text").selectExpr("bpe_count(text) AS n").collect().map(_.getLong(0))
     val scan = BpeModel.tokenizeWord("scan").length

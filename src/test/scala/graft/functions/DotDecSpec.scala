@@ -23,7 +23,6 @@ class DotDecSpec extends AnyFunSuite {
 
   test("dot_dec matches the interpreted decimal lambda bit-for-bit on random vectors") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val rows = (0 until 200).map { i =>
       (i.toLong,
@@ -41,7 +40,6 @@ class DotDecSpec extends AnyFunSuite {
 
   test("dot_dec works against an inlined literal array and inside codegen") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val v = Array.tabulate(4)(i => (i + 1) * 0.5) // 0.5, 1.0, 1.5, 2.0
     val lit = v.mkString("array(", "D,", "D)")
     val df = Seq((1L, Array(1.0f, 2.0f, 3.0f, 4.0f))).toDF("id", "emb")
@@ -54,7 +52,6 @@ class DotDecSpec extends AnyFunSuite {
 
   test("dot_dec overflow fallback: huge magnitudes still match the lambda form") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // products ~1e15 overflow the fix12 long fast path (toFix12 throws
     // past |x| ≈ 9.2e6) and must land on the exact BigDecimal path with
     // identical rounding — and a sum that overflows the long
@@ -112,7 +109,6 @@ class DotDecSpec extends AnyFunSuite {
 
   test("dot_dec fails loudly on length mismatch instead of silently nulling") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq((1L, Array(1.0f, 2.0f), Array(1.0f))).toDF("id", "a", "b")
       .withColumn("d", expr("dot_dec(a, b)"))
     val e = intercept[Exception](df.collect())

@@ -20,7 +20,6 @@ class FastExprSpec extends AnyFunSuite {
     .getOrCreate()
 
   test("h60_long == legacy conv/substring/md5 chain == h60Scala, 2000 random strings") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     val strs = (0 until 2000).map { i =>
@@ -39,7 +38,6 @@ class FastExprSpec extends AnyFunSuite {
   }
 
   test("json_long == get_json_object-as-long on integer fields, generated objects") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     def randomJson(i: Int): String = {

@@ -1,29 +1,51 @@
 package graft.functions
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.functions.{col, expr}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The spark.sql.extensions wiring path must expose the SAME function
-  * surface as GraftFunctions.register — both derive from one list, and
-  * this spec locks it (the round-3 review found the paths had drifted
-  * by three functions). */
+import graft.engine.SeriesOps
+import graft.plans.SampleWindowPrune
+
+/** The single wiring path: `GraftExtensions` is service-loaded, so a
+  * session from a plain builder — no `withExtensions`, no conf, no
+  * registration call, the way the benchmark harness and every main
+  * build theirs — has graft's functions and its optimizer rule from
+  * the moment it exists. */
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  test("every native function resolves through the extensions path") {
-    // getOrCreate would silently REUSE the suite-shared session and
-    // never apply the extensions — clear, build fresh (same underlying
-    // SparkContext), restore the prior sessions afterwards
+  /** A freshly built plain session. getOrCreate would REUSE the
+    * suite-shared session, so clear the default and active sessions,
+    * build fresh (same underlying SparkContext), and restore them
+    * afterwards. */
+  private def withPlainSession(f: SparkSession => Unit): Unit = {
     val priorDefault = SparkSession.getDefaultSession
     val priorActive = SparkSession.getActiveSession
     SparkSession.clearDefaultSession(); SparkSession.clearActiveSession()
-    try {
-      val spark = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
+    try f(SparkSession.builder()
+      .master("local[2]")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate())
+    finally {
+      SparkSession.clearDefaultSession(); SparkSession.clearActiveSession()
+      priorDefault.foreach(SparkSession.setDefaultSession)
+      priorActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  private def unresolved(spark: SparkSession): Seq[String] =
+    GraftFunctions.injections.map(_._1).filterNot(
+      spark.sessionState.functionRegistry.functionExists)
+      .map(_.funcName)
+
+  test("every native function resolves through the extensions path") {
+    withPlainSession { spark =>
+      assert(GraftFunctions.injections.size >= 29)
+      assert(unresolved(spark).isEmpty)
       import spark.implicits._
       val row = Seq(("the quick brown fox jumps high", Array(1.0f, 2.0f)))
         .toDF("text", "vec")
@@ -52,10 +74,40 @@ class GraftExtensionsSpec extends AnyFunSuite {
       val agg = Seq(("k", 1.25), ("k", 2.25)).toDF("k", "v")
         .groupBy("k").agg(expr("sum_micro(v) AS s")).collect()(0)
       assert(agg.getAs[Double]("s") == 3.5)
-    } finally {
-      SparkSession.clearDefaultSession(); SparkSession.clearActiveSession()
-      priorDefault.foreach(SparkSession.setDefaultSession)
-      priorActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("newSession() inherits the functions") {
+    withPlainSession { spark =>
+      val child = spark.newSession()
+      assert(unresolved(child).isEmpty)
+      assert(child.sql("SELECT sum_micro(CAST(v AS DOUBLE)) FROM VALUES (1.5), (2.25) AS t(v)")
+        .collect()(0).getDouble(0) == 3.75)
+    }
+  }
+
+  test("the optimizer holds SampleWindowPrune exactly once") {
+    withPlainSession { spark =>
+      val rules = spark.sessionState.optimizer.extendedOperatorOptimizationRules
+      assert(rules.count(_ eq SampleWindowPrune) == 1, rules)
+    }
+  }
+
+  test("a label-filtered sampleBy pushes the raw-timestamp bound to parquet") {
+    withPlainSession { spark =>
+      import spark.implicits._
+      val dir = Files.createTempDirectory("graft-ext-spec")
+      try {
+        val path = dir.resolve("series").toString
+        (0 until 5000).map(i => (i.toLong * 70, (i % 100).toDouble))
+          .toDF("timestamp", "value").write.parquet(path)
+        val df = SeriesOps.sampleBy(spark.read.parquet(path), 3600L)
+          .filter(col("sample_ts") >= 36000L && col("sample_ts") <= 180000L)
+        // ceil_3600(36000) − 3600 = 32400: the rule's derived scan bound
+        val explained = df.queryExecution.executedPlan.toString
+        assert(explained.contains("GreaterThanOrEqual(timestamp,32400)"), explained)
+        assert(df.count() == 41)
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
   }
 }

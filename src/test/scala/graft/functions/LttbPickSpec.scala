@@ -12,16 +12,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * operator. */
 class LttbPickSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftFunctions.register(s)
-    s
-  }
+  private lazy val spark = SparkSession.builder()
+    .master("local[8]")
+    .config("spark.sql.shuffle.partitions", "8")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
 
   import spark.implicits._
 

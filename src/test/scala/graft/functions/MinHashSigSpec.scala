@@ -27,7 +27,6 @@ class MinHashSigSpec extends AnyFunSuite {
   }
 
   test("row-level signatures are bit-equal to the exploded groupBy twin") {
-    GraftFunctions.register(spark)
     val k = 16
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val rowSigs = TextFns.withShingles(docs)
@@ -42,7 +41,6 @@ class MinHashSigSpec extends AnyFunSuite {
   }
 
   test("empty shingle set gives NULL, matching the exploded form's no-row") {
-    GraftFunctions.register(spark)
     val rows = Seq("one two", "one two three")
       .toDF("text").selectExpr("minhash_sig(shingles3(text), 4) AS s").collect()
     assert(rows(0).isNullAt(0))
@@ -50,7 +48,6 @@ class MinHashSigSpec extends AnyFunSuite {
   }
 
   test("signature values match the driver-side permutation math") {
-    GraftFunctions.register(spark)
     val sig = Seq("a b c").toDF("text")
       .selectExpr("minhash_sig(shingles3(text), 8) AS s")
       .collect()(0).getSeq[Long](0)
@@ -60,7 +57,6 @@ class MinHashSigSpec extends AnyFunSuite {
   }
 
   test("expression stays inside whole-stage codegen") {
-    GraftFunctions.register(spark)
     // codegen.fallback=false: a doGenCode that fails to compile aborts
     // the query instead of silently degrading to interpreted eval —
     // without it this test would pass with dead generated code
@@ -77,7 +73,6 @@ class MinHashSigSpec extends AnyFunSuite {
   }
 
   test("k must be a plan-time literal") {
-    GraftFunctions.register(spark)
     val e = intercept[Exception] {
       Seq(("a b c d", 4)).toDF("text", "k")
         .selectExpr("minhash_sig(shingles3(text), k)").collect()

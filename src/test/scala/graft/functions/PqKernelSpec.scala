@@ -65,7 +65,6 @@ class PqKernelSpec extends AnyFunSuite {
     * column chain. */
   private def composedRef() = {
     import graft.ops.Similarity.normDec
-    graft.functions.GraftFunctions.register(spark)
     def dotLit(embCol: String, v: Array[Double]) =
       call_function("dot_dec", col(embCol), typedLit(v))
     def centroidStructsOn(embCol: String, nrmCol: String,

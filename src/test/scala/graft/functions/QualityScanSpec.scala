@@ -41,7 +41,6 @@ class QualityScanSpec extends AnyFunSuite {
         |  END AS BIGINT)""".stripMargin))
 
   private def assertParity(df: org.apache.spark.sql.DataFrame): Unit = {
-    GraftFunctions.register(spark)
     val bad = refCols(df.withColumn("qs", expr("quality_scan(text)")))
       .filter(
         col("qs.n_words") =!= col("r_n_words") ||
@@ -81,7 +80,6 @@ class QualityScanSpec extends AnyFunSuite {
   }
 
   test("derived repetition metrics on a known document") {
-    GraftFunctions.register(spark)
     // 6 words, 5 2-grams ("a b" x2, "b a" x2, "b c") → d2=3,
     // 4 3-grams ("a b a", "b a b", "a b c" — "a b a","b a b",… distinct=3)
     val r = Seq("a b a b c c").toDF("text")

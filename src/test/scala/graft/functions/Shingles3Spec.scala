@@ -16,7 +16,6 @@ class Shingles3Spec extends AnyFunSuite {
   import spark.implicits._
 
   test("shingle semantics match the oracle definition") {
-    GraftFunctions.register(spark)
     val got = Seq("The  quick, BROWN fox! jumps")
       .toDF("text").selectExpr("shingles3(text)").collect()(0)
       .getSeq[String](0)
@@ -24,7 +23,6 @@ class Shingles3Spec extends AnyFunSuite {
   }
 
   test("short and empty texts give empty arrays; duplicates are distinct") {
-    GraftFunctions.register(spark)
     val rows = Seq("", "one two", "a b a b a b")
       .toDF("text").selectExpr("shingles3(text) AS s").collect()
     assert(rows(0).getSeq[String](0).isEmpty)
@@ -34,7 +32,6 @@ class Shingles3Spec extends AnyFunSuite {
   }
 
   test("expression stays inside whole-stage codegen") {
-    GraftFunctions.register(spark)
     // a literal input would constant-fold to a LocalTableScan, so use a
     // real file scan to force an executed projection
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -51,9 +48,8 @@ class Shingles3Spec extends AnyFunSuite {
     val s2 = SparkSession.builder()
       .master("local[2]")
       .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
       .getOrCreate()
-    // same underlying context; the extension-injected function resolves
+    // a plain builder: the service-loaded extension's function resolves
     val got = s2.sql("SELECT shingles3('p q r s') AS s").collect()(0)
       .getSeq[String](0)
     assert(got == Seq("p q r", "q r s"))

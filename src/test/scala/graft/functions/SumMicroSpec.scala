@@ -18,7 +18,6 @@ class SumMicroSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def assertParity(df: org.apache.spark.sql.DataFrame): Unit = {
-    GraftFunctions.register(spark)
     val both = df.groupBy("k").agg(
       call_function("sum_micro", col("v")).as("fast"),
       sum(col("v").cast("decimal(30,6)")).cast("double").as("ref"))
@@ -82,7 +81,6 @@ class SumMicroSpec extends AnyFunSuite {
       ("b", java.lang.Double.valueOf(-9.0e23))).toDF("k", "v"))
     // at/beyond the boundary: the ANSI decimal cast throws — so must
     // sum_micro (DuckDB likewise errors on decimal overflow)
-    GraftFunctions.register(spark)
     Seq(1.0e24, -1.0e24, 1.0e25, 1.7e308).foreach { x =>
       val e = intercept[Exception] {
         Seq(("a", java.lang.Double.valueOf(x))).toDF("k", "v")
@@ -103,7 +101,6 @@ class SumMicroSpec extends AnyFunSuite {
   }
 
   test("all-null group yields null, like the decimal sum") {
-    GraftFunctions.register(spark)
     val r = Seq(("a", null: java.lang.Double))
       .toDF("k", "v").groupBy("k")
       .agg(call_function("sum_micro", col("v")).as("fast")).collect()(0)
@@ -151,7 +148,6 @@ class SumMicroSpec extends AnyFunSuite {
   }
 
   test("order independence: identical result under different partitionings") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(13)
     val rows = (0 until 3000).map(_ =>
       ("k", java.lang.Double.valueOf((rnd.nextDouble() - 0.5) * 1e6))).toDF("k", "v")

@@ -31,7 +31,6 @@ class TextStatsSpec extends AnyFunSuite {
       "regexp_extract_all(lower(text), '\\\\b(the|a|an|and|or|of|to|in|is|it)\\\\b', 0)")).cast("long"))
 
   private def assertParity(df: org.apache.spark.sql.DataFrame): Unit = {
-    GraftFunctions.register(spark)
     val bad = regexCols(df.withColumn("st", expr("text_stats_scan(text)")))
       .filter(
         col("st.n_chars_raw") =!= col("r_n_chars") ||
@@ -61,7 +60,6 @@ class TextStatsSpec extends AnyFunSuite {
 
   /** Same differential discipline for the langid scan. */
   private def assertLangParity(df: org.apache.spark.sql.DataFrame): Unit = {
-    GraftFunctions.register(spark)
     val markers = Map(
       "en" -> "\\\\b(the|and|of|is)\\\\b",
       "de" -> "\\\\b(der|die|das|und|ist)\\\\b",
@@ -93,7 +91,6 @@ class TextStatsSpec extends AnyFunSuite {
   }
 
   test("random ascii+unicode strings agree") {
-    GraftFunctions.register(spark)
     val charGen = Gen.frequency(
       8 -> Gen.oneOf(('a' to 'z') ++ ('A' to 'Z')),
       3 -> Gen.oneOf(' ', '\t', '\n', '\r', '\f', '\u000B'),

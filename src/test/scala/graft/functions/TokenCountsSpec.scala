@@ -18,7 +18,6 @@ class TokenCountsSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("token_counts: multiplicities over a space-separated stream; runs tolerated") {
-    GraftFunctions.register(spark)
     val m = Seq("a b a  c b a").toDF("t")
       .selectExpr("token_counts(t)").collect()(0).getMap[String, Long](0)
     assert(m == Map("a" -> 3L, "b" -> 2L, "c" -> 1L))
@@ -28,7 +27,6 @@ class TokenCountsSpec extends AnyFunSuite {
   }
 
   test("norm_ngram_counts(n=1) equals token_counts over the normText regex chain") {
-    GraftFunctions.register(spark)
     val texts = Seq("The  QUICK, brown-fox! 42 jumps 42",
       "Ünïcode straße ÉTÉ 2024", "", "!!!", "a")
     val got = texts.toDF("text")
@@ -42,7 +40,6 @@ class TokenCountsSpec extends AnyFunSuite {
   }
 
   test("multi-char full-lowercase canary: walk matches the regex chain on U+0130/U+01F0") {
-    GraftFunctions.register(spark)
     // U+0130 İ lowers to 'i' + combining U+0307 (a 1:M SpecialCasing
     // expansion): the stripped combining mark must SPLIT the token in
     // the walk exactly as it does in the regex chain. U+01F0 ǰ and the
@@ -61,7 +58,6 @@ class TokenCountsSpec extends AnyFunSuite {
   }
 
   test("norm_ngram_counts(n=2): sliding bigram multiplicities; short docs empty") {
-    GraftFunctions.register(spark)
     val m = Seq("a b a b a").toDF("t")
       .selectExpr("norm_ngram_counts(t, 2)").collect()(0).getMap[String, Long](0)
     assert(m == Map("a b" -> 2L, "b a" -> 2L))
@@ -71,7 +67,6 @@ class TokenCountsSpec extends AnyFunSuite {
   }
 
   test("shingle_hashes3 equals transform(shingles3, h60)") {
-    GraftFunctions.register(spark)
     val texts = Seq("The quick brown fox jumps over", "a b", "")
     val got = texts.toDF("text")
       .selectExpr("shingle_hashes3(text) AS h").collect()
@@ -84,7 +79,6 @@ class TokenCountsSpec extends AnyFunSuite {
   }
 
   test("fused counting expressions stay inside whole-stage codegen") {
-    GraftFunctions.register(spark)
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr("norm_ngram_counts(text, 2) AS m", "shingle_hashes3(text) AS h")
     val codegenned = df.queryExecution.executedPlan.collect {

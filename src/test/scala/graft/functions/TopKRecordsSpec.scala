@@ -19,7 +19,6 @@ class TopKRecordsSpec extends AnyFunSuite {
 
   private def top(rows: Seq[(Long, java.lang.Double, java.lang.Long)],
       k: Int): Seq[(Double, Long)] = {
-    GraftFunctions.register(spark)
     rows.toDF("g", "value", "ts")
       .groupBy("g").agg(org.apache.spark.sql.functions.expr(
         s"topk_records(value, ts, $k) AS t"))

@@ -26,7 +26,6 @@ class WordNgramsSpec extends AnyFunSuite {
   }
 
   private def assertParity(df: org.apache.spark.sql.DataFrame, n: Int): Unit = {
-    GraftFunctions.register(spark)
     val bad = df
       .withColumn("t", expr("regexp_extract_all(text, '\\\\S+', 0)"))
       .withColumn("ref", refGrams(n))
@@ -53,7 +52,6 @@ class WordNgramsSpec extends AnyFunSuite {
   }
 
   test("literal-n guard") {
-    GraftFunctions.register(spark)
     intercept[Exception] {
       Seq(("a b c", 2)).toDF("text", "n")
         .select(expr("word_ngrams(text, n)")).collect()
@@ -61,7 +59,6 @@ class WordNgramsSpec extends AnyFunSuite {
   }
 
   private def assertBlockParity(df: org.apache.spark.sql.DataFrame, n: Int): Unit = {
-    GraftFunctions.register(spark)
     // builtin-composition reference: floor(m/n) blocks of exactly n
     // tokens, in order, NOT distinct (word_blocks' semantics contract)
     val ref = expr(
@@ -90,7 +87,6 @@ class WordNgramsSpec extends AnyFunSuite {
   }
 
   test("word_blocks: repeats kept, tail dropped, short text empty") {
-    GraftFunctions.register(spark)
     val got = Seq("a b a b tail").toDF("text")
       .select(expr("word_blocks(text, 2)").as("b")).collect().head.getSeq[String](0)
     assert(got == Seq("a b", "a b")) // 5th token is ragged tail
@@ -100,7 +96,6 @@ class WordNgramsSpec extends AnyFunSuite {
   }
 
   test("word_ngrams_all: keeps repeats and order; distinct of it equals word_ngrams") {
-    GraftFunctions.register(spark)
     val all = Seq("a b a b a").toDF("text")
       .select(expr("word_ngrams_all(text, 2)").as("g")).collect().head.getSeq[String](0)
     assert(all == Seq("a b", "b a", "a b", "b a")) // multiplicity + order

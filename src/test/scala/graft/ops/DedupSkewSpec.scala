@@ -14,16 +14,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * one exact cluster, sane wall time. */
 class DedupSkewSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.GraftFunctions.register(s)
-    s
-  }
+  private lazy val spark = SparkSession.builder()
+    .master("local[8]")
+    .config("spark.sql.shuffle.partitions", "8")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
 
   private val template =
     "the quick brown fox jumps over the lazy dog while seventeen " +

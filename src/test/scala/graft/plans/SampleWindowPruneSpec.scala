@@ -35,11 +35,13 @@ class SampleWindowPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("timestamp", "value")
   }
 
-  private def withRule[A](f: => A): A = {
-    SampleWindowPrune.enable(spark)
-    try f
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == SampleWindowPrune)
+  /** The rule is in every session (GraftExtensions); the rule-off
+    * baseline excludes it by name, the way any Spark rule is turned off.
+    * `f` must plan (and run) inside the scope. */
+  private def withoutRule[A](f: => A): A = {
+    val key = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(key, SampleWindowPrune.ruleName)
+    try f finally spark.conf.unset(key)
   }
 
   test("rule-on results are bit-identical to rule-off, all bound shapes") {
@@ -51,8 +53,8 @@ class SampleWindowPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
       col("sample_ts") === 72000L,
       lit(180000L) >= col("sample_ts") && col("sample_ts") =!= 0L)
     filters.foreach { pred =>
-      val off = base.filter(pred).collect().map(_.toSeq).toSet
-      val on = withRule(base.filter(pred).collect().map(_.toSeq).toSet)
+      val off = withoutRule(base.filter(pred).collect().map(_.toSeq).toSet)
+      val on = base.filter(pred).collect().map(_.toSeq).toSet
       assert(on == off, s"pred $pred")
       assert(off.nonEmpty, s"pred $pred selects nothing — weak fixture")
     }
@@ -68,7 +70,7 @@ class SampleWindowPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("the pruning filter lands below the label projection") {
     val df = SeriesOps.sampleBy(stored, I)
       .filter(col("sample_ts") >= 36000L && col("sample_ts") <= 180000L)
-    val optimized = withRule(df.queryExecution.optimizedPlan)
+    val optimized = df.queryExecution.optimizedPlan
     // the injected filter must carry raw-timestamp bounds:
     // ceil_I(36000) - I = 32400 (lower), floor_I(180000) = 180000 (upper)
     val pruneFilters = optimized.collect {
@@ -81,10 +83,9 @@ class SampleWindowPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("on a physical timestamp column the bounds reach the parquet scan") {
     val df = SeriesOps.sampleBy(stored, I)
       .filter(col("sample_ts") >= 36000L && col("sample_ts") <= 180000L)
-    val (explained, optimized, rows) = withRule {
+    val (explained, optimized, rows) =
       (df.queryExecution.executedPlan.toString,
         df.queryExecution.optimizedPlan.toString, df.collect())
-    }
     // PushedFilters must contain the translated lower bound (the upper
     // bound is pushed too but Spark truncates the PushedFilters string;
     // both appear in full in the optimized plan's Filter, Or-ed with
@@ -93,10 +94,15 @@ class SampleWindowPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
       explained)
     assert(optimized.contains(">= 32400"), optimized)
     assert(optimized.contains("< 180000"), optimized)
-    // and results still match the rule-off computation
-    val off = SeriesOps.sampleBy(stored, I)
-      .filter(col("sample_ts") >= 36000L && col("sample_ts") <= 180000L)
-      .collect().map(_.toSeq).toSet
+    // and results still match the rule-off computation, whose scan
+    // carries no derived bound
+    val (offExplained, off) = withoutRule {
+      val offDf = SeriesOps.sampleBy(stored, I)
+        .filter(col("sample_ts") >= 36000L && col("sample_ts") <= 180000L)
+      (offDf.queryExecution.executedPlan.toString,
+        offDf.collect().map(_.toSeq).toSet)
+    }
+    assert(!offExplained.contains("GreaterThanOrEqual(timestamp,32400)"), offExplained)
     assert(rows.map(_.toSeq).toSet == off)
   }
 
@@ -111,8 +117,8 @@ class SampleWindowPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
       col("sample_ts") < Long.MaxValue,
       col("sample_ts") >= Long.MinValue && col("sample_ts") <= 180000L)
     preds.foreach { pred =>
-      val off = base.filter(pred).collect().map(_.toSeq).toSet
-      val on = withRule(base.filter(pred).collect().map(_.toSeq).toSet)
+      val off = withoutRule(base.filter(pred).collect().map(_.toSeq).toSet)
+      val on = base.filter(pred).collect().map(_.toSeq).toSet
       assert(on == off, s"pred $pred")
       assert(on.nonEmpty, s"pred $pred")
     }
@@ -128,16 +134,15 @@ class SampleWindowPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
       .selectExpr("raw_ns div 1000 AS timestamp", "value")
     val df = SeriesOps.sampleBy(micros, I)
       .filter(col("sample_ts") >= 36000L && col("sample_ts") <= 180000L)
-    val (explained, rows) = withRule {
+    val (explained, rows) =
       (df.queryExecution.executedPlan.toString, df.collect())
-    }
     // bounds translated to the raw nanos column: t >= 32400 becomes
     // raw >= 32399*1000 + 1; t < 180000 becomes raw < 180000*1000
     assert(explained.contains("GreaterThanOrEqual(raw_ns,32399001)"), explained)
     assert(explained.contains("LessThan(raw_ns,180000000)"), explained)
-    val off = SeriesOps.sampleBy(micros, I)
+    val off = withoutRule(SeriesOps.sampleBy(micros, I)
       .filter(col("sample_ts") >= 36000L && col("sample_ts") <= 180000L)
-      .collect().map(_.toSeq).toSet
+      .collect().map(_.toSeq).toSet)
     assert(rows.map(_.toSeq).toSet == off && off.nonEmpty)
   }
 
@@ -156,16 +161,15 @@ class SampleWindowPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
       col("value"))
     val df = SeriesOps.sampleBy(micros, I)
       .filter(col("sample_ts") >= 36000L && col("sample_ts") <= 180000L)
-    val (explained, rows) = withRule {
+    val (explained, rows) =
       (df.queryExecution.executedPlan.toString, df.collect())
-    }
     // exact micros projection (scale 1): t >= 32400 → ts >= ntz(32400us),
     // t < 180000 → ts < ntz(180000us) — pushed as NTZ-typed comparisons
     assert(explained.contains("GreaterThanOrEqual(ts,"), explained)
     assert(explained.contains("LessThan(ts,"), explained)
-    val off = SeriesOps.sampleBy(micros, I)
+    val off = withoutRule(SeriesOps.sampleBy(micros, I)
       .filter(col("sample_ts") >= 36000L && col("sample_ts") <= 180000L)
-      .collect().map(_.toSeq).toSet
+      .collect().map(_.toSeq).toSet)
     assert(rows.map(_.toSeq).toSet == off && off.nonEmpty)
   }
 
@@ -182,14 +186,13 @@ class SampleWindowPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
       col("value"))
     val df = SeriesOps.slidingBy(micros, I, S)
       .filter(col("sample_ts") >= 36000L && col("sample_ts") <= 180000L)
-    val (explained, rows) = withRule {
+    val (explained, rows) =
       (df.queryExecution.executedPlan.toString, df.collect())
-    }
     assert(explained.contains("GreaterThanOrEqual(ts,"), explained)
     assert(explained.contains("LessThan(ts,"), explained)
-    val off = SeriesOps.slidingBy(micros, I, S)
+    val off = withoutRule(SeriesOps.slidingBy(micros, I, S)
       .filter(col("sample_ts") >= 36000L && col("sample_ts") <= 180000L)
-      .collect().map(_.toSeq).toSet
+      .collect().map(_.toSeq).toSet)
     assert(rows.map(_.toSeq).toSet == off && off.nonEmpty)
   }
 
@@ -208,7 +211,7 @@ class SampleWindowPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
       def go = SeriesOps.sampleBy(wrapped, I)
         .filter(col("sample_ts") >= 36000L && col("sample_ts") <= 180000L)
         .collect().map(_.toSeq).toSet
-      try Right(if (rule) withRule(go) else go)
+      try Right(if (rule) go else withoutRule(go))
       catch { case e: Exception => Left(e.getClass.getSimpleName) }
     }
     assert(run(rule = true) == run(rule = false))
@@ -225,8 +228,8 @@ class SampleWindowPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
       col("sample_ts") === 72000L,
       lit(180000L) >= col("sample_ts") && col("sample_ts") =!= 0L)
     filters.foreach { pred =>
-      val off = base.filter(pred).collect().map(_.toSeq).toSet
-      val on = withRule(base.filter(pred).collect().map(_.toSeq).toSet)
+      val off = withoutRule(base.filter(pred).collect().map(_.toSeq).toSet)
+      val on = base.filter(pred).collect().map(_.toSeq).toSet
       assert(on == off, s"pred $pred")
       assert(off.nonEmpty, s"pred $pred selects nothing — weak fixture")
     }
@@ -241,16 +244,15 @@ class SampleWindowPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
       .selectExpr("raw_ns div 1000 AS timestamp", "value")
     val df = SeriesOps.slidingBy(micros, I, S)
       .filter(col("sample_ts") >= 36000L && col("sample_ts") <= 180000L)
-    val (explained, rows) = withRule {
+    val (explained, rows) =
       (df.queryExecution.executedPlan.toString, df.collect())
-    }
     // lower: ceil_S(36000) − width(4·S=3600) = 32400 → raw ≥ 32399·1000+1;
     // upper: floor_S(180000) − 0 = 180000 → raw < 180000·1000
     assert(explained.contains("GreaterThanOrEqual(raw_ns,32399001)"), explained)
     assert(explained.contains("LessThan(raw_ns,180000000)"), explained)
-    val off = SeriesOps.slidingBy(micros, I, S)
+    val off = withoutRule(SeriesOps.slidingBy(micros, I, S)
       .filter(col("sample_ts") >= 36000L && col("sample_ts") <= 180000L)
-      .collect().map(_.toSeq).toSet
+      .collect().map(_.toSeq).toSet)
     assert(rows.map(_.toSeq).toSet == off && off.nonEmpty)
   }
 
@@ -266,7 +268,7 @@ class SampleWindowPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
       def go = SeriesOps.slidingBy(wrapped, I, S)
         .filter(col("sample_ts") >= 36000L && col("sample_ts") <= 180000L)
         .collect().map(_.toSeq).toSet
-      try Right(if (rule) withRule(go) else go)
+      try Right(if (rule) go else withoutRule(go))
       catch { case e: Exception => Left(e.getClass.getSimpleName) }
     }
     assert(run(rule = true) == run(rule = false))
@@ -274,7 +276,7 @@ class SampleWindowPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("sliding fixpoint does not stack inserted filters") {
     val df = SeriesOps.slidingBy(stored, I, S).filter(col("sample_ts") >= 36000L)
-    val optimized = withRule(df.queryExecution.optimizedPlan)
+    val optimized = df.queryExecution.optimizedPlan
     val pruneFilters = optimized.collect {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter
           if f.condition.toString.contains("32400") => f
@@ -293,47 +295,43 @@ class SampleWindowPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("value",
         org.apache.spark.sql.types.DoubleType)))
-    withRule {
-      val stream = spark.readStream.schema(schema).parquet(srcDir)
-        .selectExpr("raw_ns div 1000 AS timestamp", "value")
-      val agg = SeriesOps.slidingBy(stream, I, S)
-        .filter(col("sample_ts") >= 36000L && col("sample_ts") <= 180000L)
-      val sink = "prune_stream_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(sink).start()
-      val plan = try {
-        q.processAllAvailable()
-        org.apache.spark.sql.graft.StreamBridge.lastExecutedPlan(q)
-      } finally q.stop()
-      // the implied raw bounds must be pushed into the microbatch scan
-      assert(plan.contains("GreaterThanOrEqual(raw_ns,32399001)"), plan)
-      assert(plan.contains("LessThan(raw_ns,180000000)"), plan)
-      // and the streamed result equals the batch computation (parity)
-      val got = spark.table(sink).collect().map(_.toSeq).toSet
-      val batch = SeriesOps.slidingBy(
-        spark.read.parquet(srcDir).selectExpr("raw_ns div 1000 AS timestamp", "value"),
-        I, S)
-        .filter(col("sample_ts") >= 36000L && col("sample_ts") <= 180000L)
-        .collect().map(_.toSeq).toSet
-      assert(got == batch && got.nonEmpty)
-    }
+    val stream = spark.readStream.schema(schema).parquet(srcDir)
+      .selectExpr("raw_ns div 1000 AS timestamp", "value")
+    val agg = SeriesOps.slidingBy(stream, I, S)
+      .filter(col("sample_ts") >= 36000L && col("sample_ts") <= 180000L)
+    val sink = "prune_stream_" +
+      java.util.UUID.randomUUID().toString.replace("-", "")
+    val q = agg.writeStream.outputMode("complete")
+      .format("memory").queryName(sink).start()
+    val plan = try {
+      q.processAllAvailable()
+      org.apache.spark.sql.graft.StreamBridge.lastExecutedPlan(q)
+    } finally q.stop()
+    // the implied raw bounds must be pushed into the microbatch scan
+    assert(plan.contains("GreaterThanOrEqual(raw_ns,32399001)"), plan)
+    assert(plan.contains("LessThan(raw_ns,180000000)"), plan)
+    // and the streamed result equals the batch computation (parity)
+    val got = spark.table(sink).collect().map(_.toSeq).toSet
+    val batch = SeriesOps.slidingBy(
+      spark.read.parquet(srcDir).selectExpr("raw_ns div 1000 AS timestamp", "value"),
+      I, S)
+      .filter(col("sample_ts") >= 36000L && col("sample_ts") <= 180000L)
+      .collect().map(_.toSeq).toSet
+    assert(got == batch && got.nonEmpty)
   }
 
   test("no false fire: non-window aggregates and non-label filters untouched") {
-    withRule {
-      // groupBy on a plain column — the rule must not touch it
-      val plain = series.groupBy("value").count().filter(col("count") > 0)
-      assert(plain.count() == 100)
-      // filter on the aggregate output, not the label
-      val byN = SeriesOps.sampleBy(series, I).filter(col("n_points") > 100)
-      assert(byN.count() > 0)
-    }
+    // groupBy on a plain column — the rule must not touch it
+    val plain = series.groupBy("value").count().filter(col("count") > 0)
+    assert(plain.count() == 100)
+    // filter on the aggregate output, not the label
+    val byN = SeriesOps.sampleBy(series, I).filter(col("n_points") > 100)
+    assert(byN.count() > 0)
   }
 
   test("fixpoint batch does not stack filters (idempotency tag)") {
     val df = SeriesOps.sampleBy(stored, I).filter(col("sample_ts") >= 36000L)
-    val optimized = withRule(df.queryExecution.optimizedPlan)
+    val optimized = df.queryExecution.optimizedPlan
     val pruneFilters = optimized.collect {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter
           if f.condition.toString.contains("32400") => f

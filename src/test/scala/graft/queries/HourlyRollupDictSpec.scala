@@ -91,7 +91,6 @@ class HourlyRollupDictSpec extends AnyFunSuite {
 
   test("hourlyRollupAuto picks the columnar kernel on a bare scan, the row kernel on a composed input") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val dir = Files.createTempDirectory("graft-hrda").toFile
     dir.deleteOnExit()
     val rows = (0 until 200).map { i =>
@@ -122,7 +121,6 @@ class HourlyRollupDictSpec extends AnyFunSuite {
 
   test("fold/incremental/sketch auto selectors: kernel on a bare scan, threshold-ruled fallback on composed inputs") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val dir = Files.createTempDirectory("graft-hrdauto").toFile
     dir.deleteOnExit()
     val rows = (0 until 200).map { i =>
@@ -198,7 +196,6 @@ class HourlyRollupDictSpec extends AnyFunSuite {
 
   test("INFERRED kernels equal the GENERIC forms on an undeclared fuzz corpus (rogue + NULL categories, pre-1970 hours)") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(47)
     val hourUs = 3600000000L
     // categories NO dictionary declares: the r14 verdict's
@@ -296,7 +293,6 @@ class HourlyRollupDictSpec extends AnyFunSuite {
 
   test("inferred kernel auto selectors (no declared dictionary): kernel on a bare scan, generic on composed inputs") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val dir = Files.createTempDirectory("graft-hrdinfa").toFile
     dir.deleteOnExit()
     val rows = (0 until 200).map { i =>
@@ -411,7 +407,6 @@ class HourlyRollupDictSpec extends AnyFunSuite {
 
   test("columnar category codec survives parquet dictionary fallback (mixed-encoding column chunk)") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val dir = Files.createTempDirectory("graft-hrdfb").toFile
     dir.deleteOnExit()
     // ~135k distinct ~20-byte event types blow parquet's 1 MB
@@ -466,7 +461,6 @@ class HourlyRollupDictSpec extends AnyFunSuite {
 
   test("NaN/Infinity values: all four fold forms agree (counted in n, skipped in the sum)") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val dir = Files.createTempDirectory("graft-hrdn").toFile
     dir.deleteOnExit()
     // micros6(NaN/Inf) is NULL (like the decimal cast), so sum skips
@@ -523,7 +517,6 @@ class HourlyRollupDictSpec extends AnyFunSuite {
 
   test("out-of-dictionary categories quarantine as a NULL-category row") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val ev = Seq(
       (1L, 0L, "signup", 1.5),
       (2L, 1L, "signup", 2.5),
@@ -547,7 +540,6 @@ class HourlyRollupDictSpec extends AnyFunSuite {
 
   test("null timestamp fails loudly instead of silently dropping the row") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val ev = Seq(
       (1L, Some(0L), "signup", 1.5),
       (2L, Some(1L), "signup", 2.5),
@@ -563,7 +555,6 @@ class HourlyRollupDictSpec extends AnyFunSuite {
 
   test("NULL event_type is out-of-dictionary: it merges into the quarantine row") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // 2 rogue strings + 2 NULL types in the same hour: the generic
     // form would keep (NULL, 'rogue') as SEPARATE groups; the
     // dictionary form's closed value set makes both out-of-dict, so

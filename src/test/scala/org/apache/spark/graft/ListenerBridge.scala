@@ -1,6 +1,8 @@
 package org.apache.spark.graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -13,10 +15,19 @@ object ListenerBridge {
 
   /** `body`'s result and the number of Spark jobs it started. */
   def jobsOf[T](sc: SparkContext)(body: => T): (T, Int) = {
-    val jobs = new AtomicInteger(0)
+    val (out, jobs) = jobDescriptionsOf(sc)(body)
+    (out, jobs.size)
+  }
+
+  /** `body`'s result and the description of each Spark job it started
+    * (`spark.job.description`; "" when unset), in start order. */
+  def jobDescriptionsOf[T](sc: SparkContext)(body: => T): (T, Seq[String]) = {
+    val jobs = new ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
+        jobs.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty(SparkContext.SPARK_JOB_DESCRIPTION)))
+          .getOrElse("")); ()
       }
     }
     waitUntilListenerBusEmpty(sc)
@@ -24,7 +35,7 @@ object ListenerBridge {
     try {
       val out = body
       waitUntilListenerBusEmpty(sc)
-      (out, jobs.get())
+      (out, jobs.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 }
