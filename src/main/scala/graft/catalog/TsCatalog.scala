@@ -1,9 +1,15 @@
 package graft.catalog
 
 import java.nio.charset.StandardCharsets
+import java.util.UUID
 
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -50,6 +56,7 @@ final case class SeriesMeta(
   * {{{
   * <root>/<db>/<series>/_series.json          series options
   * <root>/<db>/<series>/data/bucket=<n>/part-....parquet
+  * <root>/<db>/<series>/data/bucket=<n>/.part-....tmp     an append in flight
   * }}}
   *
   * `bucket = timestamp div bucketNs` is the analog of the reference's
@@ -61,6 +68,14 @@ final case class SeriesMeta(
   * (src/index.c:65-109).
   * At 100 TB the bucket width is the knob that keeps partition counts
   * sane; it is stored per-series so ingest jobs agree on it.
+  *
+  * Two write paths, one per input shape: [[insert]] writes a DataFrame
+  * in one Spark job (bulk loads, streaming micro-batches), [[append]]
+  * writes rows the driver already holds (a wire INSERT) with no job.
+  * Both add complete parquet files only — a point is visible, and
+  * acked, once its file is renamed into place — and neither fsyncs, as
+  * Spark's own committer does not and the reference's WAL pwrite does
+  * not (src/wal.c:70-83).
   */
 final class TsCatalog(spark: SparkSession, val root: String,
     val bucketNs: Long = TsCatalog.DefaultBucketNs) {
@@ -228,10 +243,10 @@ final class TsCatalog(spark: SparkSession, val root: String,
     * One Spark job: the write itself. The count is an observed metric
     * of that job ([[org.apache.spark.sql.Observation]]), read after
     * the parquet commit, so nothing is cached and the batch plan runs
-    * once. The write keeps the input's partitioning — a caller holding
-    * driver-local rows passes a one-partition frame and gets one task
-    * and one file per touched bucket; streaming micro-batches and bulk
-    * loads keep their parallel write.
+    * once. The write keeps the input's partitioning, so streaming
+    * micro-batches and bulk loads keep their parallel write. Rows
+    * already on the driver go through [[append]] instead, which runs
+    * no job.
     *
     * "ignore": drop batch rows whose timestamp already exists — the
     * existing-side lookup reads ONLY the listed buckets the batch can
@@ -268,6 +283,79 @@ final class TsCatalog(spark: SparkSession, val root: String,
       .write.mode("append").partitionBy("bucket")
       .parquet(dataPath(db, name).toString)
     written.get("n").asInstanceOf[Long]
+  }
+
+  /** Append a batch the driver already holds (a wire INSERT), honoring
+    * the series' duplication policy; returns the number of points
+    * written.
+    *
+    * No Spark job under "insert": the rows are sorted by timestamp
+    * (stably, so duplicates keep statement order), grouped by
+    * `Math.floorDiv(timestamp, bucketNs)` — the rule of [[buckets]] —
+    * and each group is written by Spark's own parquet writer (the
+    * `ParquetWriteSupport`, codec and schema of a job-written file) to
+    * a hidden `.part-<uuid>….tmp` file in its `bucket=` directory,
+    * which readers skip. Once every file is complete, each is renamed
+    * to `part-<uuid>.<codec>.parquet`, and only then does the call
+    * return for the caller to ack. Nothing is fsynced. A crash before
+    * the renames leaves hidden files only, which [[compact]] drops when
+    * it rewrites their bucket; a crash between the renames of a batch
+    * spanning buckets leaves the renamed buckets' points visible,
+    * unacked.
+    *
+    * "ignore": the first occurrence of each timestamp in statement
+    * order wins, and timestamps already stored are dropped. One Spark
+    * job collects the stored timestamps, reading only the buckets the
+    * batch touches, restricted to its [min, max].
+    */
+  def append(db: String, name: String, rows: Seq[(Long, Double)]): Long = {
+    val meta = seriesMeta(db, name).getOrElse(SeriesMeta(None))
+    val batch =
+      if (meta.dupPolicy == "ignore") {
+        val first = rows.distinctBy(_._1)
+        val stored = storedTimestamps(db, name, first.map(_._1))
+        first.filterNot(r => stored(r._1))
+      } else rows
+    val dp = dataPath(db, name)
+    val written = scala.collection.mutable.ArrayBuffer.empty[(Path, Path)]
+    try batch.sortBy(_._1).groupBy(r => Math.floorDiv(r._1, bucketNs)).foreach {
+      case (b, group) =>
+        val file = s"part-${UUID.randomUUID()}${pointWriter.extension}"
+        val dir = new Path(dp, s"bucket=$b")
+        val hidden = new Path(dir, s".$file.tmp")
+        written += ((hidden, new Path(dir, file)))
+        pointWriter.write(hidden, group)
+    } catch { case e: Throwable =>
+      written.foreach { case (hidden, _) => fs.delete(hidden, false) }
+      throw e
+    }
+    written.foreach { case (hidden, visible) =>
+      if (!fs.rename(hidden, visible))
+        throw new java.io.IOException(s"append: cannot rename $hidden to $visible")
+    }
+    batch.size
+  }
+
+  /** Which of `ts` a series already stores: one collect over the
+    * listed buckets `ts` falls in, restricted to `ts`' [min, max]. */
+  private def storedTimestamps(db: String, name: String, ts: Seq[Long]): Set[Long] =
+    if (ts.isEmpty) Set.empty
+    else {
+      val range = Some((ts.min, ts.max))
+      val touched = ts.map(Math.floorDiv(_, bucketNs)).toSet
+      val hit = buckets(db, name, range).filter(touched)
+      if (hit.isEmpty) Set.empty
+      else readBuckets(db, name, hit, range).select(col("timestamp"))
+        .collect().map(_.getLong(0)).toSet
+    }
+
+  /** Spark's parquet writer for point files, built on the first
+    * [[append]]: neither the constructor nor [[insert]] pays for it. */
+  private lazy val pointWriter: PointWriter = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(Map.empty))
+    new PointWriter(
+      new ParquetFileFormat().prepareWrite(spark, job, Map.empty, PointSchema),
+      job.getConfiguration)
   }
 
   /** Bucket test on the existing side of an ignore-policy insert:
@@ -426,6 +514,23 @@ final class TsCatalog(spark: SparkSession, val root: String,
 }
 
 object TsCatalog {
+  /** One point file per `write`, through the writer a Spark write
+    * task uses (`OutputWriterFactory.newInstance`); the configuration
+    * is shared by every file, as a write job's tasks share theirs. */
+  private final class PointWriter(factory: OutputWriterFactory,
+      conf: org.apache.hadoop.conf.Configuration) {
+    private def context = new TaskAttemptContextImpl(conf, new TaskAttemptID())
+
+    /** ".snappy.parquet" under the default codec. */
+    val extension: String = factory.getFileExtension(context)
+
+    def write(path: Path, rows: Seq[(Long, Double)]): Unit = {
+      val out = factory.newInstance(path.toString, PointSchema, context)
+      try rows.foreach { case (t, v) => out.write(InternalRow(t, v)) }
+      finally out.close()
+    }
+  }
+
   /** 900 s in nanos — mirrors the reference's in-memory chunk window
     * (TS_CHUNK_SIZE, src/timeseries.h:13). */
   val DefaultBucketNs: Long = 900L * 1000000000L

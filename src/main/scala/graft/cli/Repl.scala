@@ -3,7 +3,7 @@ package graft.cli
 import org.apache.spark.sql.SparkSession
 
 import graft.catalog.TsCatalog
-import graft.engine.{BufferedExecutor, ExecResult}
+import graft.engine.{ExecResult, StatementExecutor}
 
 /** Interactive REPL — the Spark-native analog of the reference client
   * (src/raftcli.c:16-47,126-183): reads dialect statements from stdin,
@@ -12,10 +12,10 @@ import graft.engine.{BufferedExecutor, ExecResult}
   * (the reference's stream batch size, src/timeseries.c:1040) via
   * `toLocalIterator` so the driver never materializes a full series.
   *
-  * INSERTs go through [[BufferedExecutor]] (batched commits with
-  * flush-before-read — the reference's WAL-buffered write path analog),
-  * so interactive point inserts ack in µs instead of a parquet commit
-  * per statement; `\q` flushes before exit.
+  * Statements run through the same [[StatementExecutor]] as the
+  * server: an INSERT is a driver-side parquet file write plus rename
+  * per touched bucket, with no Spark job, acked once the file is in
+  * place (nothing is fsynced, as with the reference's WAL pwrite).
   *
   * Run: sbt "runMain graft.cli.Repl [catalogRoot]"
   */
@@ -33,7 +33,7 @@ object Repl {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val exec = new BufferedExecutor(spark, new TsCatalog(spark, root))
+    val exec = new StatementExecutor(spark, new TsCatalog(spark, root))
 
     println(s"graft repl — catalog at $root  (\\q to quit)")
     val in = scala.io.Source.stdin.getLines()
@@ -45,7 +45,6 @@ object Repl {
       if (trimmed.nonEmpty) run(exec, trimmed)
       print("> "); Console.flush()
     }
-    exec.close() // commit any buffered inserts before exit
     spark.stop()
   }
 
@@ -62,7 +61,7 @@ object Repl {
     a
   }
 
-  private[graft] def run(exec: BufferedExecutor, sql: String): Unit = {
+  private[graft] def run(exec: StatementExecutor, sql: String): Unit = {
     val t0 = System.nanoTime()
     // the scope encloses BOTH construction and materialization
     // (render streams the rows)
@@ -84,7 +83,7 @@ object Repl {
       println(s"  ${r.toSeq.mkString(" ")}")
     case ExecResult.Rows(df) =>
       // stream in 1000-record batches; never collect() the full set
-      val it = df.toLocalIterator()
+      val it = ExecResult.rowIterator(df)
       var n = 0
       val batch = new StringBuilder
       while (it.hasNext) {

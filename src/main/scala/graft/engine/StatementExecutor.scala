@@ -1,6 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.catalog.{SeriesMeta, TsCatalog}
@@ -21,6 +24,16 @@ object ExecResult {
   final case class Ack(message: String) extends ExecResult
   final case class Listing(names: Seq[String]) extends ExecResult
   final case class Err(code: ErrCode.Value, message: String) extends ExecResult
+
+  /** The rows of a [[Rows]] frame, in order, for a caller that streams
+    * them. A frame over rows already on the driver (the
+    * `StatementExecutor.oneShot` answers) is read with `collect`,
+    * which runs no Spark job, where `toLocalIterator` would run one;
+    * any other frame streams a partition at a time. */
+  def rowIterator(df: DataFrame): Iterator[Row] = df.queryExecution.logical match {
+    case _: LocalRelation => df.collect().iterator
+    case _ => df.toLocalIterator().asScala
+  }
 }
 
 object ErrCode extends Enumeration {
@@ -107,9 +120,10 @@ final class StatementExecutor(spark: SparkSession, catalog: TsCatalog,
     case Statement.Insert(name, rows) =>
       withSeries(name, session) { (db, _) =>
         val (resolved, errors) = resolveRows(rows)
-        import spark.implicits._
-        // one partition: one write task, one file per touched bucket
-        val n = catalog.insert(db, name, resolved.toDF("timestamp", "value").coalesce(1))
+        // the rows are on the driver: one parquet file per touched
+        // bucket, written and renamed into place with no Spark job
+        // (one collect under "ignore"), acked after the rename
+        val n = catalog.append(db, name, resolved)
         Ack(s"$n point(s) inserted, $errors error(s)")
       }
 
@@ -266,9 +280,8 @@ final class StatementExecutor(spark: SparkSession, catalog: TsCatalog,
   }
 
   /** Resolve INSERT rows' time expressions with per-row error counting
-    * (reference src/statement_execute.c:430-445); shared with the
-    * buffered write path so the two INSERT paths cannot diverge. */
-  private[engine] def resolveRows(rows: Seq[(TimeExpr, Double)])
+    * (reference src/statement_execute.c:430-445). */
+  private def resolveRows(rows: Seq[(TimeExpr, Double)])
       : (Seq[(Long, Double)], Int) = {
     var errors = 0
     val resolved = rows.flatMap { case (texpr, v) =>
@@ -327,8 +340,7 @@ final class StatementExecutor(spark: SparkSession, catalog: TsCatalog,
       case None => Err(ErrCode.NoActiveDb, "no active database (USE <db> first)")
     }
 
-  private[engine] def withSeries(name: String,
-      session: TsSession = defaultSession)(
+  private def withSeries(name: String, session: TsSession)(
       f: (String, SeriesMeta) => ExecResult): ExecResult =
     withDb(session) { db =>
       catalog.seriesMeta(db, name) match {

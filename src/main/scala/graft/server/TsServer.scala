@@ -27,7 +27,8 @@ import graft.protocol.{Wire, WireResponse}
   *    anything that fits one batch answers as a `#` array;
   *  - rows never materialize on the driver beyond the current batch
   *    (`toLocalIterator`), so an arbitrarily large scan streams in
-  *    bounded memory;
+  *    bounded memory; answers already collected on the driver are read
+  *    back with no second job ([[ExecResult.rowIterator]]);
   *  - protocol records are strictly (timestamp, value) pairs
   *    (reference src/encoding.c:125-159 has no wider record), so
   *    SAMPLE BY results serialize their first two columns
@@ -216,8 +217,7 @@ final class TsServer(exec: StatementExecutor, port: Int = 0) {
       // there is no wire precedent to mirror)
       send(out, WireResponse.Str(0, df.collect()(0).toSeq.mkString(" ")))
     case ExecResult.Rows(df) =>
-      import scala.jdk.CollectionConverters._
-      val it = df.toLocalIterator().asScala
+      val it = ExecResult.rowIterator(df)
       val first = rowsToRecords(it, Wire.StreamBatchSize)
       if (!it.hasNext) send(out, WireResponse.Arr(first))
       else {

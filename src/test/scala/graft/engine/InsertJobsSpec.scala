@@ -12,9 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.{SeriesMeta, TsCatalog}
 
-/** The INSERT cost contract: a wire INSERT is the one Spark job that
-  * writes it, one task wide, so it adds one parquet file per bucket it
-  * touches; the count comes from the write itself and comes back even
+/** The INSERT cost contract: a wire INSERT runs no Spark job (one
+  * under the ignore policy, for the stored timestamps it may repeat)
+  * and adds one parquet file per bucket it touches; a DataFrame insert
+  * counts its rows in its one write job, and the count comes back even
   * when nothing is written. */
 class InsertJobsSpec extends AnyFunSuite {
 
@@ -42,7 +43,7 @@ class InsertJobsSpec extends AnyFunSuite {
   private def values(tss: Seq[Long]) =
     tss.zipWithIndex.map { case (t, i) => s"($t, $i.0)" }.mkString(", ")
 
-  test("a 15-row INSERT is one Spark job and one parquet file per touched bucket") {
+  test("a 15-row INSERT is no Spark job and one parquet file per touched bucket") {
     withCatalog { (cat, root) =>
       val exec = new StatementExecutor(spark, cat, () => Base)
       exec.executeSql("CREATEDB idb"); exec.executeSql("CREATE s")
@@ -51,29 +52,16 @@ class InsertJobsSpec extends AnyFunSuite {
       val (one, jobs1) = jobsOf(spark.sparkContext)(
         exec.executeSql(s"INSERT INTO s VALUES ${values((0 until 15).map(i => Base + i * 1000L))}"))
       assert(one == ExecResult.Ack("15 point(s) inserted, 0 error(s)"))
-      assert(jobs1 == 1, s"INSERT ran $jobs1 jobs")
+      assert(jobs1 == 0, s"INSERT ran $jobs1 jobs")
       assert(parquetFiles(data) == 1)
       // straddling the next bucket boundary
       val edge = Base + BucketNs
       val (two, jobs2) = jobsOf(spark.sparkContext)(
         exec.executeSql(s"INSERT INTO s VALUES ${values((-7 until 8).map(i => edge + i * 1000L))}"))
       assert(two == ExecResult.Ack("15 point(s) inserted, 0 error(s)"))
-      assert(jobs2 == 1, s"INSERT ran $jobs2 jobs")
+      assert(jobs2 == 0, s"INSERT ran $jobs2 jobs")
       assert(parquetFiles(data) == 3)
       assert(cat.readSeries("idb", "s").count() == 30)
-    }
-  }
-
-  test("BufferedExecutor.flush runs one job per touched series") {
-    withCatalog { (cat, _) =>
-      val exec = new BufferedExecutor(spark, cat, () => Base)
-      exec.executeSql("CREATEDB bdb"); exec.executeSql("CREATE a"); exec.executeSql("CREATE b")
-      for (s <- Seq("a", "b"); k <- 0 until 3)
-        exec.executeSql(s"INSERT INTO $s VALUES ${values((0 until 5).map(i => Base + k * 10000L + i))}")
-      assert(exec.buffered == 30)
-      val (_, jobs) = jobsOf(spark.sparkContext)(exec.flush())
-      assert(jobs == 2, s"flush of 2 series ran $jobs jobs")
-      assert(cat.readSeries("bdb", "a").count() == 15 && cat.readSeries("bdb", "b").count() == 15)
     }
   }
 
@@ -92,9 +80,9 @@ class InsertJobsSpec extends AnyFunSuite {
         exec.executeSql(s"INSERT INTO s VALUES ${values((0 until 15).map(i => last + i * 1000L))}"))
       assert(ack == ExecResult.Ack("14 point(s) inserted, 0 error(s)"))
       assert(!jobs.exists(_.startsWith("Listing leaf files")), jobs)
-      // before the driver-listed read: a listing job, the bucket-id
-      // collect and the write, 4 jobs in all
-      assert(jobs.size < 4, jobs)
+      // the stored-timestamp collect only: the bucket ids come from the
+      // rows in hand and the write is a driver-side file
+      assert(jobs.size == 1, jobs)
       val stored = cat.readSeries("gdb", "s").filter($"timestamp" === last)
         .as[(Long, Double)].collect()
       assert(stored.toSeq == Seq((last, -1.0)))

@@ -4,6 +4,7 @@ import java.net.Socket
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.graft.ListenerBridge.jobsOf
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -42,8 +43,8 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Minimal protocol client: frame a query, read until one complete
     * response decodes (streams: until the final chunk). */
-  private final class Client {
-    private val sock = new Socket("127.0.0.1", server.boundPort)
+  private final class Client(port: Int = server.boundPort) {
+    private val sock = new Socket("127.0.0.1", port)
     private val in = sock.getInputStream
     private val out = sock.getOutputStream
     private var buf = Array.emptyByteArray
@@ -306,5 +307,50 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
         case other => fail(s"expected scalar string, got $other")
       }
     } finally c.close()
+  }
+
+  test("SELECT latest(value) over TCP is one Spark job") {
+    val c = new Client
+    try {
+      c.send("USE wiredb")
+      c.readResponse()
+      // the answer is collected once and read back off the driver
+      val (r, jobs) = jobsOf(spark.sparkContext) {
+        c.send("SELECT latest(value) FROM cpu")
+        c.readResponse()
+      }
+      assert(r == WireResponse.Arr(Seq((3000L, 0.5))))
+      assert(jobs == 1, s"latest over TCP ran $jobs jobs")
+    } finally c.close()
+  }
+
+  test("acked INSERTs read back exactly once from a fresh catalog after a stop") {
+    val root = Files.createTempDirectory("graft-server-acked").toString
+    try {
+      val own = new TsServer(
+        new StatementExecutor(spark, new TsCatalog(spark, root)), port = 0).start()
+      val acked = Seq.newBuilder[(Long, Double)]
+      val c = new Client(own.boundPort)
+      try {
+        c.send("CREATEDB ackdb")
+        assert(c.readResponse() == WireResponse.Str(0, "database 'ackdb' created"))
+        c.send("CREATE s")
+        assert(c.readResponse() == WireResponse.Str(0, "timeseries 's' created"))
+        // 300 points 7 s apart: 20 INSERTs over three 900 s buckets
+        for (k <- 0 until 20) {
+          val points = (0 until 15).map { i =>
+            val n = k * 15 + i
+            (1700000000000000000L + n * 7000000000L, n * 0.5)
+          }
+          c.send("INSERT INTO s VALUES " +
+            points.map { case (t, v) => s"($t, $v)" }.mkString(", "))
+          assert(c.readResponse() == WireResponse.Str(0, "15 point(s) inserted, 0 error(s)"))
+          acked ++= points
+        }
+      } finally { c.close(); own.stop() }
+      val back = new TsCatalog(spark, root).readSeries("ackdb", "s").collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
+      assert(back == acked.result())
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 }
