@@ -205,77 +205,15 @@ object Bench {
       s""""os":${osTelemetry()}}"""
   }
 
-  /** Whether adaptive execution pays for itself on the input under
-    * `dir`: on when the whole tree (partitioned tables included) holds
-    * at least `minBytes`, and on whenever some path cannot be read —
-    * an input of unknown size is treated as a large one. */
-  private[graft] def adaptiveFor(dir: java.io.File, minBytes: Long): Boolean = {
-    def bytes(f: java.io.File): Option[Long] =
-      if (f.isFile) Some(f.length())
-      else Option(f.listFiles()).flatMap(_.foldLeft(Option(0L))((acc, c) =>
-        for (a <- acc; b <- bytes(c)) yield a + b))
-    bytes(dir).forall(_ >= minBytes)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // dev-only subset filter for iterating on one query's plan
     val only: String => Boolean =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet: String => Boolean)
         .getOrElse(_ => true)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Adaptive execution derived from INPUT SIZE (optimization r17,
-      // verdict item 3 — "price the floor tail"): AQE re-optimizes
-      // from runtime shuffle stats at the cost of one driver
-      // stage-materialization round trip per exchange. On a fixture
-      // whose whole input fits inside a single advisory partition
-      // there is nothing to adapt — every round trip is pure per-query
-      // floor, measured at −11.9 s over the 101-key sf0.1 fleet in a
-      // single A/B window (bench_r17_aqe_{on,off}.json: 83.5 vs
-      // 71.6 s, the OFF half running on the MORE loaded end of the
-      // window). Cluster-scale inputs (the 1B-row scale fixtures and
-      // anything production-sized) keep AQE: coalescing/skew handling
-      // matter exactly when shuffles are big. Threshold 1 GiB of
-      // source bytes (SPARK_GRAFT_AQE_MIN_BYTES), hard override
-      // SPARK_GRAFT_AQE=true|false for A/B runs — same parameterized
-      // pattern as the r16 stream width and AQE floor.
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE",
-        adaptiveFor(new java.io.File(sfDir), sys.env.get("SPARK_GRAFT_AQE_MIN_BYTES")
-          .flatMap(_.toLongOption).getOrElse(1L << 30)).toString))
-      // split big parquet files finer than the 128 MB default so a
-      // single-file scale fixture still fans out across the 32 cores
-      // (a 460 MB replicated lineitem read as 4 splits left 28 cores
-      // idle in the r10 agg_corr scale row); 32 MB is still far above
-      // the openCost floor, so the many-small-files tables are packed
-      // exactly as before — docs/SCALING.md records the sizing rule
-      .config("spark.sql.files.maxPartitionBytes", s"${32 * 1024 * 1024}")
-      // AQE coalesce floor (optimization r16, guide §2.5/§7.1): the
-      // stage profile showed AQE coalescing small-but-EXPENSIVE
-      // post-shuffle stages to one partition (minPartitionSize=1MB vs
-      // e.g. dedup_containment's 1.7 MB posting-list shuffle whose
-      // rows each expand to up to C(maxDf,2) pairs — a 2.1 s 1-task
-      // stage, 3.3 s of the key's 4.0 s in 1-task stages overall).
-      // Shuffle SIZE is a bad proxy for downstream COST when rows fan
-      // out; 256 KB keeps tiny-but-hot shuffles parallel while real
-      // data still coalesces toward advisoryPartitionSizeInBytes.
-      // Env-overridable for cluster deployments where fetch efficiency
-      // argues for the 1 MB default. (An openCostInBytes floor was
-      // ALSO tried and reverted: every sf fixture file is a single
-      // parquet row group, so extra splits were 31 empty tasks paying
-      // footer reads — q1_pricing regressed +0.5 s. Scan-side
-      // parallelism for compute-heavy single-row-group scans is
-      // handled by explicit conditional repartitions at the operators
-      // instead.)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART_SIZE", s"${256 * 1024}"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.build("graft-bench",
+      Some(new java.io.File(sfDir)))
     spark.sparkContext.setLogLevel("WARN")
     val jvmStart = jvmTelemetry()
 
@@ -298,10 +236,6 @@ object Bench {
     // a failed query records the sentinel -1 (and lands in "errors")
     // instead of its near-zero elapsed time — a crash must never make
     // the benchmark look faster
-    // serve-many mode: keep the codebook memo across reps so the IVF
-    // family is timed as TRAIN ONCE, SERVE MANY (the production serving
-    // shape). Off by default — see the clearCodebookMemo call below.
-    val keepMemo = sys.env.get("SPARK_GRAFT_BENCH_KEEP_MEMO").contains("1")
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         name: String): Double = {
       // drain the escaped-cache registry BEFORE the block sweep (r12
@@ -315,10 +249,8 @@ object Bench {
       // a codebook key with sim_topk_ivf_pq — excluded k-means/PQ
       // training while the DuckDB oracle paid its full kmeans CTE chain
       // per run, so paired ratios partially measured caching policy.
-      // Default timings are TRAIN-INCLUSIVE on both engines; the
-      // memoized serve-many cost is a separate, explicitly-labeled
-      // BASELINE.md row measured with SPARK_GRAFT_BENCH_KEEP_MEMO=1.
-      if (!keepMemo) graft.ops.Similarity.clearCodebookMemo()
+      // Timings are TRAIN-INCLUSIVE on both engines.
+      graft.ops.Similarity.clearCodebookMemo()
       // cleanup hygiene (r7 finding: pack_length_buckets degraded
       // monotonically ACROSS reps inside the full fleet while running
       // clean in isolation): dropping the SQL cache only unpins blocks

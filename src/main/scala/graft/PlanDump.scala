@@ -4,17 +4,15 @@ import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` for bench queries to one file per key —
   * the optimization-round evidence trail (plans/rN/<key>_before.txt /
   * _after.txt). Run:
   *
   *   sbt "runMain graft.PlanDump <sfDir> <outDir> <suffix> [k1,k2,...]"
   *
-  * Uses the same session shape as graft.Bench (local[$SPARK_GRAFT_CPUS],
-  * shuffle.partitions = cpus, AQE on, 32 MB splits) so the dumped plans
-  * are the plans the bench actually runs. Queries that train driver-side
+  * Builds its session with [[graft.core.GraftSession]], as graft.Bench
+  * does, so the dumped plans are the plans the bench runs on the same
+  * input (AQE off below 1 GiB of input). Queries that train driver-side
   * models (the sim family) execute their training jobs during plan
   * construction — that is part of the declared query and is dumped as-is.
   */
@@ -27,16 +25,8 @@ object PlanDump {
       case Some(csv) => csv.split(",").toSeq
       case None => Bench.headlineKeys
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", s"${32 * 1024 * 1024}")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.build("graft-plandump",
+      Some(new java.io.File(sfDir)))
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     keys.foreach { name =>

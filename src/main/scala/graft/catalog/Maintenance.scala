@@ -1,7 +1,5 @@
 package graft.catalog
 
-import org.apache.spark.sql.SparkSession
-
 import graft.tsql.TimeEval
 
 /** Maintenance entry point: retention enforcement + small-file
@@ -30,13 +28,7 @@ object Maintenance {
       case "s" => 1000000000L
       case other => sys.error(s"unknown timestamp unit '$other' (ns|us|ms|s)")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-maintenance")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.build("graft-maintenance")
     spark.sparkContext.setLogLevel("WARN")
     val summary = run(new TsCatalog(spark, root), maxFiles,
       TimeEval.nowNanos() / unitDiv)

@@ -1,7 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
-
 import graft.catalog.TsCatalog
 import graft.engine.{ExecResult, StatementExecutor}
 
@@ -24,14 +22,7 @@ object Repl {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse(
       sys.props("java.io.tmpdir") + "/graft_repl_catalog")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-repl")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.build("graft-repl")
     spark.sparkContext.setLogLevel("ERROR")
     val exec = new StatementExecutor(spark, new TsCatalog(spark, root))
 

@@ -312,13 +312,10 @@ object Dedup {
     * stage profile: 529 ms for the 584 KB sf0.1 corpus on one task),
     * so small corpora spread ~4-10 ways and anything ≥ 2 MB still
     * derives the full core count. The size comes from the optimizer's
-    * estimate for the relation (file bytes for a bare scan);
-    * SPARK_GRAFT_SPREAD_BYTES overrides the per-task byte target for
-    * A/B runs. */
+    * estimate for the relation (file bytes for a bare scan). */
   private[graft] def spreadDocs(docs: DataFrame): DataFrame = {
     val par = docs.sparkSession.sparkContext.defaultParallelism
-    val perTask = sys.env.get("SPARK_GRAFT_SPREAD_BYTES")
-      .flatMap(_.toLongOption).getOrElse(64L * 1024)
+    val perTask = 64L * 1024
     val bytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
     val width = ((bytes + perTask - 1) / perTask)
       .min(BigInt(par)).max(BigInt(1)).toInt

@@ -1075,15 +1075,10 @@ object Similarity {
       s"ivfpq:nsub=$nSub,ksub=$kSub,rerank=$rerank,nprobe=$nProbe")
     val base = withNorm(embeddings)
       .transform(persistTracked)
-    val dbg = sys.env.contains("GRAFT_SIM_PHASE_DEBUG")
-    val tTrain0 = System.nanoTime()
     val (cents, books) = memoized(cacheKey,
         s"pq|$nCentroids|$nSub|$kSub|$kmeansIters|$trainPred") {
       trainIvfPqCodebooksOn(base, nCentroids, nSub, kSub, kmeansIters, trainPred)
     }
-    if (dbg) System.err.println(
-      f"[pq-phase] train ${(System.nanoTime() - tTrain0) / 1e9}%.3f s")
-    val tBuild0 = System.nanoTime()
     val subDim = books.head.head._2.length
 
     // corpus side: coarse cell + per-subspace codes, computed in one
@@ -1132,7 +1127,7 @@ object Similarity {
     val queriesFull = base.filter(queryPred)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         col("nrm").as("qn"))
-    val out = base
+    base
       .select(col("vec_id").as("neighbor_id"), col("embedding"), col("nrm"))
       .join(broadcast(cand), "neighbor_id")
       .join(broadcast(queriesFull), "query_id")
@@ -1142,9 +1137,6 @@ object Similarity {
         Window.partitionBy("query_id")
           .orderBy(col("sim").desc, col("neighbor_id").asc)).cast("long"))
       .filter(col("rank") <= k)
-    if (dbg) System.err.println(
-      f"[pq-phase] df-build ${(System.nanoTime() - tBuild0) / 1e9}%.3f s")
-    out
   }
 
   /** Embedding near-duplicate pairs within label blocks: all same-label
@@ -1456,59 +1448,6 @@ object Similarity {
       .select(col("query_id"), col("r.n_hits").as("n_hits"),
         expr(s"r.n_hits * 10000 div $k").as("recall_bp"),
         col("r.variant").as("variant"))
-  }
-
-  /** Dev-only falsification probe for [[recallStalenessPair]]'s sf0.1
-    * decomposition (r16, verdict #5) — NOT gate-keyed, never composed
-    * into a product query. The r15 decomposition attributed the key's
-    * >2x-vs-referent residual to "~19 job floors plus TWO real
-    * codebook trainings"; this probe makes that claim falsifiable by
-    * running controlled ablations of the SAME shared harness:
-    *
-    *  - `pair`:   the shipped two-arm measurement, verbatim.
-    *  - `onearm`: one training, one search arm — the irreducible cost
-    *    of measuring a SINGLE real index build on this harness. If
-    *    the residual claim holds, this reads ≳ half the pair.
-    *  - `memo`:   two arms, ONE training (both arms search the fresh
-    *    book). pair − memo isolates the second TRAINING's real cost;
-    *    memo − onearm isolates the second SEARCH arm's. If pair −
-    *    memo ≈ 0 the "two real trainings" half of the claim is
-    *    falsified (the delta would be plan waste, not training).
-    *
-    * No memo cache keys on purpose: every rep pays real training, the
-    * quantity under measurement. Output schema matches the pair's (the
-    * memo arms differ in VALUES from the shipped key — the probe
-    * measures cost structure, not staleness). */
-  def recallStalenessProbe(embeddings: DataFrame, corpusPred: Column,
-      queryPred: Column, k: Int, maxQueries: Int,
-      nCentroids: Int, nProbe: Int, kmeansIters: Int,
-      trainPred: Column, mode: String): DataFrame = {
-    if (mode == "pair")
-      return recallStalenessPair(embeddings, corpusPred, queryPred, k,
-        maxQueries, nCentroids, nProbe, kmeansIters, trainPred)
-    val base = withNorm(embeddings).transform(persistTracked)
-    val qp = boundedQueryPred(base, queryPred, maxQueries)
-    val freshCents = trainCodebookOn(base, nCentroids, kmeansIters, trainPred)
-    val brute = bruteTopKOn(base, qp, k)
-      .select("query_id", "neighbor_id")
-      .transform(persistTracked)
-    def arm(cents: Seq[(Long, Array[Double])], name: String): DataFrame = {
-      val approx = ivfSearch(base, cents, qp, k, nProbe)
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-      // bounded ≤ maxQueries·k rows — broadcast, as in recallAtK (r16)
-      brute.join(broadcast(approx), Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(col("hit")).as("n_hits"))
-        .withColumn("recall_bp", expr(s"n_hits * 10000 div $k"))
-        .withColumn("variant", lit(name))
-    }
-    mode match {
-      case "onearm" => arm(freshCents, "rebuilt")
-      case "memo" =>
-        arm(freshCents, "placed").unionByName(arm(freshCents, "rebuilt"))
-      case other => throw new IllegalArgumentException(
-        s"recallStalenessProbe mode must be pair|onearm|memo, got '$other'")
-    }
   }
 
   /** Contrastive-training triplet mining over ANY ranked top-k frame

@@ -146,42 +146,15 @@ object SimilaritySurface {
         fullCacheKey = Some(s"$dir#embeddings"))),
   )
 
-  /** Dev-only (r16 verdict #5): the staleness pair's falsification
-    * ablations on EXACTLY the gate key's constants — same corpus
-    * split, sample bound, book shape and probe budget as
-    * `sim_recall_incremental`, so the probe's deltas speak about that
-    * key and nothing else. Driven by [[graft.tools.SimRecallProbe]];
-    * never in [[queries]]. */
-  def stalenessProbe(s: SparkSession, dir: String, mode: String) =
-    Similarity.recallStalenessProbe(emb(s, dir), expr("vec_id % 10 < 8"),
-      expr(QPRED), K, MAXQ, NCENTROIDS, NPROBE, KMEANS_ITERS,
-      expr(TRAIN_SQL), mode)
-
   private val NCENTROIDS = 8
   /** Sampled-query bound for the recall evaluators — deliberately
     * BINDING at gate scale (4 of the 5 vec_id < 5 queries survive the
     * smallest-id sample) so the bound itself is oracle-verified, not
     * dormant. At corpus scale this is the knob that keeps the exact
-    * brute-force referent a sampled measurement.
-    * Overridable (with [[QPRED]]) via SPARK_GRAFT_SIM_MAXQ /
-    * SPARK_GRAFT_SIM_QPRED for deployment-grade recall measurements at
-    * larger samples (the r11 verdict's MAXQ >= 50 evaluation row) —
-    * both the Spark plan and the oracle SQL derive from these
-    * constants, so an override keeps the two sides paired. Gate runs
-    * leave the env unset and pin MAXQ = 4. */
-  private val MAXQ = sys.env.get("SPARK_GRAFT_SIM_MAXQ") match {
-    // validated at object init (r12 advice): a bare .toInt here threw
-    // NumberFormatException wrapped in ExceptionInInitializerError,
-    // opaquely failing every sim_* query on a malformed env value —
-    // fall back to the gate default with a visible warning instead
-    case Some(v) => v.toIntOption.filter(_ >= 1).getOrElse {
-      System.err.println(
-        s"[graft] ignoring malformed SPARK_GRAFT_SIM_MAXQ='$v' " +
-          "(need a positive int); using default 4")
-      4
-    }
-    case None => 4
-  }
+    * brute-force referent a sampled measurement. Both the Spark plan
+    * and the oracle SQL derive from this constant (and [[QPRED]]), so
+    * the two sides stay paired. */
+  private val MAXQ = 4
   /** SemDeDup cell count. Deliberately much larger than the IVF search
     * book: the intra-cell pair stage is quadratic PER CELL and the
     * cell id is the join key, so k bounds both the candidate volume
@@ -203,25 +176,14 @@ object SimilaritySurface {
     * more (rerank-bound again). On a production book the cell count
     * is thousands, so nprobe=4 is sub-1% corpus coverage — the gate
     * book's 50% is an artifact of its deliberately tiny NCENTROIDS.
-    * Overridable (like [[MAXQ]]/[[PQ_RERANK]]) via
-    * SPARK_GRAFT_SIM_NPROBE — BOTH the Spark plan and the oracle SQL
-    * derive from this constant, so an override keeps the two sides
-    * paired. */
-  private val NPROBE = sys.env.get("SPARK_GRAFT_SIM_NPROBE") match {
-    case Some(v) => v.toIntOption.filter(_ >= 1).getOrElse {
-      System.err.println(
-        s"[graft] ignoring malformed SPARK_GRAFT_SIM_NPROBE='$v' " +
-          "(need a positive int); using default 4")
-      4
-    }
-    case None => 4
-  }
+    * BOTH the Spark plan and the oracle SQL derive from this constant,
+    * so the two sides stay paired. */
+  private val NPROBE = 4
   private val KMEANS_ITERS = 2
   private val TRAIN_SQL = "vec_id % 2 = 0"
   private val RERANK = 50
   /** Shared query predicate of the sim_topk_* / sim_recall_* family. */
-  private val QPRED =
-    sys.env.getOrElse("SPARK_GRAFT_SIM_QPRED", "vec_id < 5")
+  private val QPRED = "vec_id < 5"
   /** SQL mirror of Similarity.boundedQueryPred: the smallest MAXQ
     * vec_ids satisfying QPRED. Applied inside BOTH composed sides of
     * every recall oracle, so the oracle pays exactly the sampled work
@@ -243,13 +205,11 @@ object SimilaritySurface {
     * default the oracle can't affordably replay loses its
     * cross-engine verification, so 16x8 stays a pinned non-gate
     * option (Similarity.pinnedRecall). */
-  /** PQ subspace count. Gate default 8; overridable (like [[MAXQ]] /
-    * [[PQ_RERANK]]) via SPARK_GRAFT_SIM_NSUB for book-shape recall
-    * measurement — BOTH the Spark plan and the oracle SQL derive from
-    * this constant, so an override keeps the two sides paired. Must
-    * divide DIM (the subspaces are equal slices).
+  /** PQ subspace count. BOTH the Spark plan and the oracle SQL derive
+    * from this constant, so the two sides stay paired. Must divide DIM
+    * (the subspaces are equal slices).
     *
-    * Gate default 16 since r16 (raised from 8): the 16-subspace
+    * 16 since r16 (raised from 8): the 16-subspace
     * book's r14 veto ("the oracle's 16 chained k-means CTE replays
     * blow the gate budget") became obsolete when the chains gained
     * AS MATERIALIZED hints (~2x the 8-sub oracle, not exponential),
@@ -261,16 +221,7 @@ object SimilaritySurface {
     * 2.96/4.15 s → 5.62/6.25 s, DuckDB 1.06/1.11 s → 2.54/2.53 s on
     * topk/recall). A 46%-recall default is not deployable; 73% is
     * within 9 pts of the nprobe-4 coverage ceiling (82.0%). */
-  private val NSUB = sys.env.get("SPARK_GRAFT_SIM_NSUB") match {
-    case Some(v) => v.toIntOption.filter(d => d >= 1 && DIM % d == 0)
-      .getOrElse {
-        System.err.println(
-          s"[graft] ignoring malformed SPARK_GRAFT_SIM_NSUB='$v' " +
-            s"(need a positive divisor of $DIM); using default 16")
-        16
-      }
-    case None => 16
-  }
+  private val NSUB = 16
   private val KSUB = 8
   /** Gate default 1200 (late r14, raised from 600): the measured
     * rerank-recall curve on the 60k reference corpus at the then-8x8
@@ -281,19 +232,10 @@ object SimilaritySurface {
     * (recall_maxq50_r16.json) — 1200 still takes the last cheap
     * points. Rerank is a per-query CONSTANT: its cost fraction
     * shrinks as the corpus grows, so raising it is free at scale —
-    * 1200 takes the last cheap +7.4 pts. Overridable (like [[MAXQ]])
-    * via SPARK_GRAFT_SIM_PQ_RERANK for rerank-sensitivity
-    * measurement — BOTH the Spark plan and the oracle SQL derive from
-    * this constant, so an override keeps the two sides paired. */
-  private val PQ_RERANK = sys.env.get("SPARK_GRAFT_SIM_PQ_RERANK") match {
-    case Some(v) => v.toIntOption.filter(_ >= 1).getOrElse {
-      System.err.println(
-        s"[graft] ignoring malformed SPARK_GRAFT_SIM_PQ_RERANK='$v' " +
-          "(need a positive int); using default 1200")
-      1200
-    }
-    case None => 1200
-  }
+    * 1200 takes the last cheap +7.4 pts. BOTH the Spark plan and the
+    * oracle SQL derive from this constant, so the two sides stay
+    * paired. */
+  private val PQ_RERANK = 1200
   /** r14 measured LSH book: 8 independent 6-bit tables (the pinned
     * single-table book recalled 7.6% — vetoed at construction). */
   private val NTABLES = 8

@@ -155,14 +155,12 @@ object StreamSurface {
     * so nothing changes at scale). Aggregation results are
     * partition-count-independent. The conf override is scoped to the
     * streaming query (a started stream snapshots its conf; saved/
-    * restored around the eager run). GRAFT_STREAM_SHUFFLE forces a
-    * specific width for A/B runs. */
+    * restored around the eager run). */
   private def runToTable(s: SparkSession,
       stream: DataFrame, mode: String): DataFrame = {
     val sinkName = "graft_stream_sink_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    val widthOverride = sys.env.get("GRAFT_STREAM_SHUFFLE")
-      .orElse(byteSizedWidth(s, stream))
+    val widthOverride = byteSizedWidth(s, stream)
     val saved = s.conf.get("spark.sql.shuffle.partitions")
     widthOverride.foreach(v => s.conf.set("spark.sql.shuffle.partitions", v))
     try {

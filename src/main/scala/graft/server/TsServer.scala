@@ -3,8 +3,6 @@ package graft.server
 import java.io.{InputStream, OutputStream}
 import java.net.{ServerSocket, Socket}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.catalog.TsCatalog
 import graft.engine.{ExecResult, StatementExecutor}
 import graft.protocol.{Wire, WireResponse}
@@ -239,14 +237,7 @@ object ServerMain {
     val port = args.headOption.map(_.toInt).getOrElse(6767)
     val root = args.lift(1).getOrElse(
       sys.props("java.io.tmpdir") + "/graft_server_catalog")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-server")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.build("graft-server")
     spark.sparkContext.setLogLevel("ERROR")
     val server = new TsServer(
       new StatementExecutor(spark, new TsCatalog(spark, root)), port).start()

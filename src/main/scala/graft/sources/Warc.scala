@@ -48,7 +48,7 @@ import org.apache.spark.sql.functions._
   * `spark.sql.parquet.columnarReaderBatchSize` (e.g. 8): the default
   * 4096-row vectorized batch multiplied by multi-MB binary cells
   * reserves gigabytes of direct buffer per task (measured OOM at
-  * 32 tasks x 4 MB payloads; WarcProfile carries the config).
+  * 32 tasks x 4 MB payloads).
   */
 object Warc {
 
@@ -84,15 +84,13 @@ object Warc {
     * on doc_id % 23 = 7, the HTML wrapper) is replayed by the gate
     * oracles, mm_png-style.
     *
-    * Output: (file_id, payload binary). `nFiles` defaults to the
-    * gate fixture's [[NFiles]]; the throughput profile passes larger
-    * counts to exercise per-file parallelism at crawl scale. */
-  def filesFromDocuments(docs: DataFrame, nFiles: Long = NFiles): DataFrame = {
+    * Output: (file_id, payload binary). */
+  def filesFromDocuments(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select(col("doc_id"), col("text"), col("source"))
       .as[(Long, String, String)]
-      .groupByKey(_._1 % nFiles)
+      .groupByKey(_._1 % NFiles)
       .mapGroups { (fileId, it) =>
         val out = new ByteArrayOutputStream()
         val gz = fileId % 2 == 1
