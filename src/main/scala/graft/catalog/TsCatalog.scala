@@ -2,16 +2,25 @@ package graft.catalog
 
 import java.nio.charset.StandardCharsets
 import java.util.UUID
+import java.util.concurrent.Executors
+import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.hadoop.fs.Path
+import scala.collection.mutable.ArrayBuffer
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.{FileFormat, OutputWriterFactory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.engine.StatementExecutor.OneShotMaxRows
 
 /** Per-series options (reference ts_opts_t, src/timeseries.h:88-92).
   * Both duplication policies are real write options here (the reference
@@ -76,6 +85,16 @@ final case class SeriesMeta(
   * acked, once its file is renamed into place — and neither fsyncs, as
   * Spark's own committer does not and the reference's WAL pwrite does
   * not (src/wal.c:70-83).
+  *
+  * Two read paths, likewise: [[readSeries]]/[[readBuckets]] build a
+  * Spark scan, for reads of any size; [[localPoints]] reads a few
+  * buckets' files on the driver with no job, through the reader a scan
+  * task uses, and gives up past
+  * [[graft.engine.StatementExecutor.OneShotMaxRows]] rows (the wire
+  * reads and the `ignore`-policy lookup of [[append]]). The reference
+  * answers such reads from its own chunks the same way, with no
+  * distributed step (`ts_last`, src/timeseries.c:1180-1215; `ts_range`,
+  * src/partition.c:203-212). Both read only complete, renamed files.
   */
 final class TsCatalog(spark: SparkSession, val root: String,
     val bucketNs: Long = TsCatalog.DefaultBucketNs) {
@@ -237,6 +256,76 @@ final class TsCatalog(spark: SparkSession, val root: String,
     pruned.select(col("timestamp"), col("value"))
   }
 
+  /** The points of the given `bucket=` partitions (as listed by
+    * [[buckets]]) inside `range`, sorted stably by timestamp, read on
+    * the driver with no Spark job; `None` once more than
+    * [[graft.engine.StatementExecutor.OneShotMaxRows]] rows have been
+    * decoded, in range or not, so neither the driver's memory nor its
+    * decode time passes that bound, or on a null point (only a bulk
+    * [[insert]] of nullable columns stores one), which the caller's
+    * Spark plan handles. A bucket directory is listed when the read
+    * reaches it, so a read that gives up lists no further. Points are
+    * gathered in file name order, so equal timestamps keep one order
+    * while the bucket is unchanged. A file listed and then deleted (a
+    * concurrent [[compact]] or [[dropSeries]]) fails the read with
+    * `FileNotFoundException`, as a Spark scan does. */
+  private[graft] def localPoints(db: String, name: String, bucketIds: Seq[Long],
+      range: Option[(Long, Long)]): Option[Seq[(Long, Double)]] = {
+    val dp = dataPath(db, name)
+    val decoded = new AtomicInteger
+    val points = ArrayBuffer.empty[(Long, Double)]
+    val fits = bucketIds.iterator.forall { b =>
+      val files = fs.listStatus(new Path(dp, s"bucket=$b"))
+        .filter(f => isPointFile(f.getPath.getName)).sortBy(_.getPath.getName).toSeq
+      readPointFiles(files, range, decoded).map(points ++= _).isDefined
+    }
+    if (fits) Some(points.sortBy(_._1).toSeq) else None
+  }
+
+  /** The points of `files` inside `range`, in file order; `None` once
+    * `decoded`, shared by every reader of one [[localPoints]], passes
+    * the bound, or on a null point. The files are read concurrently on
+    * [[TsCatalog.ReadPool]]: a scan task's per-file set-up (footer,
+    * schema, reader) is most of the cost of a small file, and a wire
+    * INSERT adds one small file per bucket. */
+  private[graft] def readPointFiles(files: Seq[FileStatus], range: Option[(Long, Long)],
+      decoded: AtomicInteger = new AtomicInteger): Option[Seq[(Long, Double)]] = {
+    val (lo, hi) = range.getOrElse((Long.MinValue, Long.MaxValue))
+    def read(f: FileStatus): Option[ArrayBuffer[(Long, Double)]] =
+      if (decoded.get() > OneShotMaxRows) None
+      else {
+        val rows = pointReader(PartitionedFile(InternalRow.empty, SparkPath.fromPath(f.getPath),
+          0L, f.getLen, Array.empty[String], f.getModificationTime, f.getLen))
+        try {
+          val points = ArrayBuffer.empty[(Long, Double)]
+          var ok = true
+          while (ok && rows.hasNext) {
+            val r = rows.next()
+            ok = decoded.incrementAndGet() <= OneShotMaxRows && !r.isNullAt(0) && !r.isNullAt(1)
+            if (ok) {
+              val t = r.getLong(0)
+              if (t >= lo && t <= hi) points += ((t, r.getDouble(1)))
+            }
+          }
+          if (ok) Some(points) else None
+        } finally rows match {
+          // a reader left before its end would hold its file open
+          case c: java.io.Closeable => c.close()
+          case _ => ()
+        }
+      }
+    val parts = files.map(f => Future(read(f))(ReadPool)).map(Await.result(_, Duration.Inf))
+    if (parts.forall(_.isDefined)) Some(parts.flatMap(_.get)) else None
+  }
+
+  /** Spark's parquet reader for point files, the function a scan task
+    * calls per file (row at a time, no pushed filters), built on the
+    * first [[localPoints]]. */
+  private lazy val pointReader: PartitionedFile => Iterator[InternalRow] =
+    new ParquetFileFormat().buildReaderWithPartitionValues(spark, PointSchema,
+      new StructType(), PointSchema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConfWithOptions(Map.empty))
+
   /** Append a batch of points, honoring the series' duplication policy;
     * returns the number of points written.
     *
@@ -304,9 +393,10 @@ final class TsCatalog(spark: SparkSession, val root: String,
     * unacked.
     *
     * "ignore": the first occurrence of each timestamp in statement
-    * order wins, and timestamps already stored are dropped. One Spark
-    * job collects the stored timestamps, reading only the buckets the
-    * batch touches, restricted to its [min, max].
+    * order wins, and timestamps already stored are dropped. The stored
+    * timestamps are read on the driver ([[localPoints]]) from only the
+    * buckets the batch touches, restricted to its [min, max]; past the
+    * driver-row bound, one Spark job collects them instead.
     */
   def append(db: String, name: String, rows: Seq[(Long, Double)]): Long = {
     val meta = seriesMeta(db, name).getOrElse(SeriesMeta(None))
@@ -336,17 +426,20 @@ final class TsCatalog(spark: SparkSession, val root: String,
     batch.size
   }
 
-  /** Which of `ts` a series already stores: one collect over the
-    * listed buckets `ts` falls in, restricted to `ts`' [min, max]. */
+  /** Which of `ts` a series already stores, from the listed buckets
+    * `ts` falls in, restricted to `ts`' [min, max]: read on the driver,
+    * or by one collect past the driver-row bound. */
   private def storedTimestamps(db: String, name: String, ts: Seq[Long]): Set[Long] =
     if (ts.isEmpty) Set.empty
     else {
       val range = Some((ts.min, ts.max))
       val touched = ts.map(Math.floorDiv(_, bucketNs)).toSet
       val hit = buckets(db, name, range).filter(touched)
-      if (hit.isEmpty) Set.empty
-      else readBuckets(db, name, hit, range).select(col("timestamp"))
-        .collect().map(_.getLong(0)).toSet
+      localPoints(db, name, hit, range) match {
+        case Some(points) => points.map(_._1).toSet
+        case None => readBuckets(db, name, hit, range).select(col("timestamp"))
+          .collect().map(_.getLong(0)).toSet
+      }
     }
 
   /** Spark's parquet writer for point files, built on the first
@@ -456,7 +549,11 @@ final class TsCatalog(spark: SparkSession, val root: String,
 
   /** Compact small files within each bucket (the analog of the
     * reference's chunk flush/merge, src/partition.c:62-125): rewrite
-    * buckets whose file count exceeds `maxFilesPerBucket`.
+    * buckets whose file count exceeds `maxFilesPerBucket`, and delete
+    * bucket directories that hold no visible point file (the hidden
+    * leftovers of an [[append]] that crashed before its rename), so
+    * [[buckets]] stops listing them. Returns the number of buckets
+    * rewritten.
     *
     * CONCURRENT-READER CONTRACT (this and [[enforceRetention]]):
     * maintenance is NOT safe to run under concurrent reads — schedule
@@ -485,14 +582,14 @@ final class TsCatalog(spark: SparkSession, val root: String,
   def compact(db: String, name: String, maxFilesPerBucket: Int = 8): Int = {
     val dp = dataPath(db, name)
     if (!fs.exists(dp)) return 0
-    val toCompact =
+    val fileCounts =
       (try fs.listStatus(dp).toSeq
        catch { case _: java.io.FileNotFoundException => return 0 })
       .filter(_.getPath.getName.startsWith("bucket="))
-      .filter(st => fs.listStatus(st.getPath)
-        .count(f => f.getPath.getName.endsWith(".parquet")) > maxFilesPerBucket)
-    toCompact.foreach { st =>
-      val bucketDir = st.getPath
+      .map(st => st.getPath -> fs.listStatus(st.getPath).count(f => isPointFile(f.getPath.getName)))
+    fileCounts.foreach { case (bucketDir, n) => if (n == 0) fs.delete(bucketDir, true) }
+    val toCompact = fileCounts.collect { case (bucketDir, n) if n > maxFilesPerBucket => bucketDir }
+    toCompact.foreach { bucketDir =>
       val tmp = new Path(bucketDir.getParent, "._compact_" + bucketDir.getName)
       val old = new Path(bucketDir.getParent, "._old_" + bucketDir.getName)
       val df = spark.read.schema(PointSchema).parquet(bucketDir.toString)
@@ -514,6 +611,24 @@ final class TsCatalog(spark: SparkSession, val root: String,
 }
 
 object TsCatalog {
+  /** The driver threads that read point files
+    * ([[TsCatalog.readPointFiles]]), shared by every catalog of the
+    * JVM: half the cores, so reads leave the other half to the
+    * statements of other connections (a wire INSERT writes on its own
+    * thread), and daemons, so a statement never starts a thread and
+    * the pool never holds the JVM open. */
+  private lazy val ReadPool = ExecutionContext.fromExecutorService(Executors.newFixedThreadPool(
+    math.max(1, Runtime.getRuntime.availableProcessors / 2), { (r: Runnable) =>
+      val t = new Thread(r, "graft-point-reader")
+      t.setDaemon(true)
+      t
+    }))
+
+  /** A file of a `bucket=` directory that readers see: a parquet file
+    * whose name Spark's listing does not hide (a `.` or `_` prefix). */
+  private def isPointFile(name: String): Boolean =
+    name.endsWith(".parquet") && !name.startsWith(".") && !name.startsWith("_")
+
   /** One point file per `write`, through the writer a Spark write
     * task uses (`OutputWriterFactory.newInstance`); the configuration
     * is shared by every file, as a write job's tasks share theirs. */

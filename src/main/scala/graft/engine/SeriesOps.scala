@@ -35,7 +35,10 @@ object SeriesOps {
   /** [[scan]] sorted inside one partition: one task and one job, with
     * no range-partitioned exchange (whose sampling and shuffle are two
     * more jobs). For input one task can hold, such as a read inside
-    * one catalog bucket; the result drains as a single partition. */
+    * one catalog bucket; the result drains as a single partition. The
+    * wire executor uses it only for a bucket past the driver-row bound
+    * (`StatementExecutor.OneShotMaxRows`); smaller reads never reach
+    * Spark (`TsCatalog.localPoints`). */
   def scanOnePartition(df: DataFrame): DataFrame =
     df.select(col("timestamp"), col("value")).coalesce(1)
       .sortWithinPartitions("timestamp")
@@ -88,7 +91,8 @@ object SeriesOps {
 
   /** [[latest]] sorted inside one partition, like [[scanOnePartition]]:
     * one task, and the same scan, sort and drain code as that read, so
-    * whichever of the two runs first warms the other. */
+    * whichever of the two runs first warms the other. Like that read,
+    * it serves only a bucket past the driver-row bound. */
   def latestOnePartition(df: DataFrame): DataFrame =
     df.select(col("timestamp"), col("value")).coalesce(1)
       .sortWithinPartitions(col("timestamp").desc).limit(1)

@@ -3,6 +3,7 @@ package graft.engine
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
@@ -27,11 +28,15 @@ object ExecResult {
 
   /** The rows of a [[Rows]] frame, in order, for a caller that streams
     * them. A frame over rows already on the driver (the
-    * `StatementExecutor.oneShot` answers) is read with `collect`,
-    * which runs no Spark job, where `toLocalIterator` would run one;
-    * any other frame streams a partition at a time. */
+    * `StatementExecutor.oneShot` answers and the driver-side reads) is
+    * read straight off its LocalRelation: no Spark job, where
+    * `toLocalIterator` would run one, and no query execution, where
+    * `collect` would optimize, plan and run one. Any other frame
+    * streams a partition at a time. */
   def rowIterator(df: DataFrame): Iterator[Row] = df.queryExecution.logical match {
-    case _: LocalRelation => df.collect().iterator
+    case local: LocalRelation =>
+      val toRow = CatalystTypeConverters.createToScalaConverter(local.schema)
+      local.data.iterator.map(toRow(_).asInstanceOf[Row])
     case _ => df.toLocalIterator().asScala
   }
 }
@@ -121,8 +126,8 @@ final class StatementExecutor(spark: SparkSession, catalog: TsCatalog,
       withSeries(name, session) { (db, _) =>
         val (resolved, errors) = resolveRows(rows)
         // the rows are on the driver: one parquet file per touched
-        // bucket, written and renamed into place with no Spark job
-        // (one collect under "ignore"), acked after the rename
+        // bucket, written and renamed into place with no Spark job,
+        // acked after the rename
         val n = catalog.append(db, name, resolved)
         Ack(s"$n point(s) inserted, $errors error(s)")
       }
@@ -165,9 +170,11 @@ final class StatementExecutor(spark: SparkSession, catalog: TsCatalog,
             }
           }.reduce(_ && _)
         }
-        // lazy: `latest` reads bucket by bucket and never builds it;
-        // the in-range buckets come from one driver listing shared by
-        // every path
+        // the same WHERE over points read on the driver
+        val keep = (p: (Long, Double)) =>
+          where.isEmpty || where.exists(_.forall(StatementExecutor.holds(_, p)))
+        // lazy: the driver-side reads never build it; the in-range
+        // buckets come from one driver listing shared by every path
         lazy val inRange = catalog.buckets(db, name, rangeNs)
         lazy val filtered = SeriesOps.whereDnf(
           catalog.readBuckets(db, name, inRange, rangeNs), orGroups)
@@ -218,15 +225,22 @@ final class StatementExecutor(spark: SparkSession, catalog: TsCatalog,
             // re-wrapped as a LocalRelation — emptiness is read off the
             // collected rows instead of a separate isEmpty pre-probe,
             // which used to double the latency of every aggregate query.
-            // Plain scans stay lazy (streaming path).
             fn match {
               case None =>
-                // rows of one bucket sort in one task; more buckets take
-                // the range-partitioned global sort
-                val scan =
-                  if (inRange.size == 1) SeriesOps.scanOnePartition(filtered)
-                  else SeriesOps.scan(filtered)
-                Rows(limit.map(scan.limit).getOrElse(scan))
+                // a range the driver can hold is read there, with no
+                // job; past the bound the scan stays lazy (streaming
+                // path): rows of one bucket sort in one task, more
+                // buckets take the range-partitioned global sort
+                catalog.localPoints(db, name, inRange, rangeNs) match {
+                  case Some(points) =>
+                    val kept = points.filter(keep)
+                    localRows(limit.fold(kept)(kept.take))
+                  case None =>
+                    val scan =
+                      if (inRange.size == 1) SeriesOps.scanOnePartition(filtered)
+                      else SeriesOps.scan(filtered)
+                    Rows(limit.map(scan.limit).getOrElse(scan))
+                }
               case Some(SelectFn.Min) =>
                 oneShot(SeriesOps.minRecord(filtered)
                   .filter(col("timestamp").isNotNull))(Rows)
@@ -244,7 +258,7 @@ final class StatementExecutor(spark: SparkSession, catalog: TsCatalog,
                   .filter(col("n") > 0))(Scalar)
               // latest respects the range (fixing the reference quirk where
               // BETWEEN was ignored, src/statement_execute.c:261-271)
-              case Some(SelectFn.Latest) => latest(db, name, inRange, rangeNs, orGroups)
+              case Some(SelectFn.Latest) => latest(db, name, inRange, rangeNs, keep, orGroups)
               case Some(SelectFn.Earliest(n)) if n <= OneShotMaxRows =>
                 oneShot(SeriesOps.earliest(filtered, n))(Rows)
               case Some(SelectFn.Earliest(n)) =>
@@ -316,23 +330,34 @@ final class StatementExecutor(spark: SparkSession, catalog: TsCatalog,
     * Buckets are floor-divided time, so every point of a higher bucket
     * is strictly newer than every point of a lower one: the newest
     * in-range bucket answers on its own unless WHERE empties it, and
-    * only then are the remaining in-range buckets read — at most two
-    * jobs, usually one over one bucket instead of the whole range.
-    * One bucket is sorted inside one task, as a one-bucket scan is.
-    * Ties on the maximum timestamp share a bucket, so the candidate
-    * rows are those of a full scan. */
+    * only then are the remaining in-range buckets read. Each of the two
+    * reads is done on the driver with no job (the last surviving point
+    * of [[TsCatalog.localPoints]]), or past the driver-row bound by one
+    * Spark top-1, sorted inside one task for one bucket as a one-bucket
+    * scan is. Ties on the maximum timestamp share a bucket, so the
+    * candidate rows are those of a full scan. */
   private def latest(db: String, name: String, buckets: Seq[Long],
-      rangeNs: Option[(Long, Long)], orGroups: Seq[Column]): ExecResult = {
-    def in(buckets: Seq[Long]) = {
-      val rows = SeriesOps.whereDnf(catalog.readBuckets(db, name, buckets, rangeNs), orGroups)
-      oneShot(if (buckets.size == 1) SeriesOps.latestOnePartition(rows)
-        else SeriesOps.latest(rows))(Rows)
+      rangeNs: Option[(Long, Long)], keep: ((Long, Double)) => Boolean,
+      orGroups: Seq[Column]): ExecResult = {
+    def in(buckets: Seq[Long]) = catalog.localPoints(db, name, buckets, rangeNs) match {
+      case Some(points) => points.filter(keep).lastOption
+        .fold[ExecResult](Err(ErrCode.EmptyResultset, "empty result set"))(p => localRows(Seq(p)))
+      case None =>
+        val rows = SeriesOps.whereDnf(catalog.readBuckets(db, name, buckets, rangeNs), orGroups)
+        oneShot(if (buckets.size == 1) SeriesOps.latestOnePartition(rows)
+          else SeriesOps.latest(rows))(Rows)
     }
     in(buckets.takeRight(1)) match {
       case Err(ErrCode.EmptyResultset, _) if buckets.size > 1 => in(buckets.init)
       case r => r
     }
   }
+
+  /** Points the driver holds as a [[Rows]] frame over a LocalRelation,
+    * which [[ExecResult.rowIterator]] drains with no job. */
+  private def localRows(points: Seq[(Long, Double)]): ExecResult =
+    Rows(spark.createDataFrame(
+      points.map { case (t, v) => Row(t, v) }.asJava, TsCatalog.PointSchema))
 
   private def withDb(session: TsSession)(f: String => ExecResult): ExecResult =
     session.activeDb match {
@@ -353,7 +378,30 @@ final class StatementExecutor(spark: SparkSession, catalog: TsCatalog,
 }
 
 object StatementExecutor {
-  /** Bound on rows an aggregate statement may collect-and-rewrap
-    * (the oneShot path); larger results keep the lazy streaming plan. */
+  /** Bound on the rows one statement may hold on the driver: the rows
+    * an aggregate collects and rewraps (the oneShot path), and the rows
+    * a driver-side read decodes ([[TsCatalog.localPoints]], for plain
+    * scans, `latest` and the `ignore`-policy INSERT lookup). Past it a
+    * statement keeps its Spark plan, lazy and streamed where it can. */
   val OneShotMaxRows = 10000
+
+  /** WHERE predicate `p` over one point, compared as Spark compares
+    * the columns: Long order on `timestamp`, SQL double order on
+    * `value` (-0.0 equals 0.0; NaN equals NaN and sorts above every
+    * number). */
+  private def holds(p: WherePred, point: (Long, Double)): Boolean = {
+    val (t, v) = point
+    val c =
+      if (p.key.equalsIgnoreCase("timestamp")) java.lang.Long.compare(t, p.longValue)
+      else if (v == p.value) 0
+      else java.lang.Double.compare(v, p.value)
+    p.op match {
+      case CmpOp.Eq => c == 0
+      case CmpOp.Ne => c != 0
+      case CmpOp.Lt => c < 0
+      case CmpOp.Le => c <= 0
+      case CmpOp.Gt => c > 0
+      case CmpOp.Ge => c >= 0
+    }
+  }
 }

@@ -25,8 +25,9 @@ import graft.protocol.{Wire, WireResponse}
   *    anything that fits one batch answers as a `#` array;
   *  - rows never materialize on the driver beyond the current batch
   *    (`toLocalIterator`), so an arbitrarily large scan streams in
-  *    bounded memory; answers already collected on the driver are read
-  *    back with no second job ([[ExecResult.rowIterator]]);
+  *    bounded memory; answers already on the driver (aggregates, and
+  *    scans and `latest` inside the driver-row bound) are read back
+  *    with no job ([[ExecResult.rowIterator]]);
   *  - protocol records are strictly (timestamp, value) pairs
   *    (reference src/encoding.c:125-159 has no wider record), so
   *    SAMPLE BY results serialize their first two columns

@@ -107,6 +107,7 @@ class AppendSpec extends AnyFunSuite {
         case _ => false
       })
       assert(cat.compact("d", "s", maxFilesPerBucket = 1) == 1)
+      assert(cat.buckets("d", "s", None) == Seq(B))
       assert(!files(bucket).exists(_.getName.endsWith(".tmp")), files(bucket))
       assert(parquetFiles(bucket).size == 1)
       assert(points(cat, "s") == stored)

@@ -2,8 +2,6 @@ package graft.engine
 
 import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.graft.ListenerBridge.jobsOf
 import org.scalatest.BeforeAndAfterAll
@@ -11,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.TsCatalog
 
-/** A plain ranged SELECT inside one bucket is one Spark job from
+/** A plain ranged SELECT inside one bucket runs no Spark job from
   * execute to the last streamed row, and every plain SELECT answers in
   * timestamp order whatever order its points were inserted in. */
 class RangeReadSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -52,7 +50,7 @@ class RangeReadSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Executes `sql` and drains its rows as the server does. */
   private def drained(sql: String): Seq[(Long, Double)] = exec.executeSql(sql) match {
     case ExecResult.Rows(df) =>
-      df.toLocalIterator().asScala.map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      ExecResult.rowIterator(df).map(r => (r.getLong(0), r.getDouble(1))).toSeq
     case other => fail(s"$sql: $other")
   }
 
@@ -60,16 +58,16 @@ class RangeReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     catalog.readSeries("rdb", "s", Some(range)).orderBy("timestamp").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
-  test("a BETWEEN inside one bucket is one job and comes back in timestamp order") {
+  test("a BETWEEN inside one bucket runs no job and comes back in timestamp order") {
     val range = (at(0, 25), at(0, 305))
     val (rows, jobs) = jobsOf(spark.sparkContext)(
       drained(s"SELECT value FROM s BETWEEN ${range._1} AND ${range._2}"))
-    assert(jobs == 1, s"ranged read ran $jobs jobs")
+    assert(jobs == 0, s"ranged read ran $jobs jobs")
     assert(rows.nonEmpty && rows == oracle(range))
     assert(rows.map(_._1) == rows.map(_._1).sorted)
     val (limited, limitJobs) = jobsOf(spark.sparkContext)(
       drained(s"SELECT value FROM s BETWEEN ${range._1} AND ${range._2} LIMIT 5"))
-    assert(limitJobs == 1, s"ranged LIMIT read ran $limitJobs jobs")
+    assert(limitJobs == 0, s"ranged LIMIT read ran $limitJobs jobs")
     assert(limited == oracle(range).take(5))
   }
 
