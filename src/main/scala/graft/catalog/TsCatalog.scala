@@ -103,23 +103,11 @@ final class TsCatalog(spark: SparkSession, val root: String,
 
   private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Session-scoped active database (reference `USE`,
-    * src/dbcontext.c:153-167). */
-  @volatile var activeDb: Option[String] = None
-
   // ---- database ops (reference src/dbcontext.c:85-167) ----
 
-  def createDb(name: String): Boolean = {
-    val created = fs.mkdirs(new Path(root, name))
-    // first database created becomes active (reference src/dbcontext.c:112-118)
-    if (activeDb.isEmpty) activeDb = Some(name)
-    created
-  }
+  def createDb(name: String): Boolean = fs.mkdirs(new Path(root, name))
 
   def dbExists(name: String): Boolean = fs.exists(new Path(root, name))
-
-  def useDb(name: String): Boolean =
-    dbExists(name) && { activeDb = Some(name); true }
 
   def listDbs(): Seq[String] =
     if (!fs.exists(new Path(root))) Nil

@@ -89,14 +89,6 @@ object SeriesOps {
     df.select(col("timestamp"), col("value"))
       .orderBy(col("timestamp").desc).limit(1)
 
-  /** [[latest]] sorted inside one partition, like [[scanOnePartition]]:
-    * one task, and the same scan, sort and drain code as that read, so
-    * whichever of the two runs first warms the other. Like that read,
-    * it serves only a bucket past the driver-row bound. */
-  def latestOnePartition(df: DataFrame): DataFrame =
-    df.select(col("timestamp"), col("value")).coalesce(1)
-      .sortWithinPartitions(col("timestamp").desc).limit(1)
-
   /** Oldest n records (earliest(value, n) — declared-only in the
     * reference grammar doc, src/statement_parse.h:103).
     */
@@ -106,12 +98,6 @@ object SeriesOps {
 
   /** Oldest record (reference ts_first, src/timeseries.c:1139-1178). */
   def first(df: DataFrame): DataFrame = earliest(df, 1)
-
-  /** Exact-timestamp point lookup (reference ts_find,
-    * src/timeseries.c:729-780). Equality predicate pushes to the scan.
-    */
-  def pointLookup(df: DataFrame, t: Long): DataFrame =
-    df.filter(col("timestamp") === t).select(col("timestamp"), col("value"))
 
   /** SAMPLE BY: tumbling-window average (reference ts_avg_sample,
     * src/timeseries.c:1265-1308). Buckets are arithmetic on the Long

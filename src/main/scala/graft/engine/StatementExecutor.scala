@@ -279,10 +279,7 @@ final class StatementExecutor(spark: SparkSession, catalog: TsCatalog,
     case Statement.Delete(name, None) =>
       // bare DELETE x drops database x (reference src/statement_parse.c:943-957)
       if (catalog.dropDb(name)) {
-        // clear dangling references in BOTH scopes: this session's
-        // active db and the catalog's embedder-global one
         if (session.activeDb.contains(name)) session.activeDb = None
-        if (catalog.activeDb.contains(name)) catalog.activeDb = None
         Ack(s"database '$name' deleted")
       } else Err(ErrCode.DbNotFound, s"database '$name' not found")
 
@@ -333,9 +330,8 @@ final class StatementExecutor(spark: SparkSession, catalog: TsCatalog,
     * only then are the remaining in-range buckets read. Each of the two
     * reads is done on the driver with no job (the last surviving point
     * of [[TsCatalog.localPoints]]), or past the driver-row bound by one
-    * Spark top-1, sorted inside one task for one bucket as a one-bucket
-    * scan is. Ties on the maximum timestamp share a bucket, so the
-    * candidate rows are those of a full scan. */
+    * Spark top-1 job. Ties on the maximum timestamp share a bucket, so
+    * the candidate rows are those of a full scan. */
   private def latest(db: String, name: String, buckets: Seq[Long],
       rangeNs: Option[(Long, Long)], keep: ((Long, Double)) => Boolean,
       orGroups: Seq[Column]): ExecResult = {
@@ -344,8 +340,7 @@ final class StatementExecutor(spark: SparkSession, catalog: TsCatalog,
         .fold[ExecResult](Err(ErrCode.EmptyResultset, "empty result set"))(p => localRows(Seq(p)))
       case None =>
         val rows = SeriesOps.whereDnf(catalog.readBuckets(db, name, buckets, rangeNs), orGroups)
-        oneShot(if (buckets.size == 1) SeriesOps.latestOnePartition(rows)
-          else SeriesOps.latest(rows))(Rows)
+        oneShot(SeriesOps.latest(rows))(Rows)
     }
     in(buckets.takeRight(1)) match {
       case Err(ErrCode.EmptyResultset, _) if buckets.size > 1 => in(buckets.init)

@@ -55,22 +55,6 @@ object DictRollup {
 
   private val HourUs = 3600000000L
 
-  /** The 4-byte split salt "incr" as its NATIVE-order int word:
-    * XXH64.hashInt(word, seed) == XXH64.hashUnsafeBytes(bytes, seed)
-    * for any 4-byte input (the xxhash 4-byte-tail path IS hashInt —
-    * it reads the tail via native-order Platform.getInt;
-    * HourlyRollupDictSpec locks the equivalence over random seeds),
-    * so the kernels skip the bounds-checked byte walk per row. The
-    * word is derived once at class-load in the platform's own byte
-    * order (ADVICE r14: a hardcoded 0x72636e69 assumed little-endian;
-    * on a big-endian JVM it would flip split bits — the spec would
-    * fail loudly there, but the constant should not be conditional).
-    * Package-visible for the spec. */
-  private[graft] val SaltIncrLE: Int =
-    java.nio.ByteBuffer.wrap("incr".getBytes(
-        java.nio.charset.StandardCharsets.US_ASCII))
-      .order(java.nio.ByteOrder.nativeOrder()).getInt
-
   private def micros6(c: org.apache.spark.sql.Column) =
     org.apache.spark.sql.graftbridge.ColumnBridge.column(
       graft.functions.Micros6(
@@ -209,7 +193,7 @@ object DictRollup {
     * dictionary LOUDLY (a category column with data-scale cardinality
     * belongs on the generic, spillable form — the kernel refuses
     * rather than silently paging). */
-  private final class OpenCodec(catCap: Int) {
+  private[graft] final class OpenCodec(catCap: Int) {
     private val byValue = new java.util.HashMap[
       org.apache.spark.unsafe.types.UTF8String, Integer](64)
     private val names = new scala.collection.mutable.ArrayBuffer[String](16)
@@ -224,8 +208,8 @@ object DictRollup {
       if (got != null) return got.intValue()
       if (names.size > catCap) throw new IllegalArgumentException(
         "inferred dictionary rollup: more than " + catCap +
-          " distinct categories in one partition " +
-          "(spark.graft.rollup.openCatCap) — declare a dictionary or " +
+          " distinct categories in one partition (the packed key's " +
+          "category code is 20 bits wide) — declare a dictionary or " +
           "use the generic form, whose aggregate state can spill")
       val c = names.size
       // the vector's bytes are batch-reused — intern a stable copy
@@ -503,17 +487,17 @@ object DictRollup {
   // data-scale shuffle), minus the per-row decode boundary.
   // ------------------------------------------------------------------
 
-  /** The columnar scan of `raw` restricted to `cols`, with output
-    * indices and the ts encoding (both driver fixture generations:
-    * TIMESTAMP(NANOS) read as epoch-nanos Long via nanosAsLong, or
-    * TIMESTAMP(MICROS) read as NTZ — micros either way after decode,
-    * matching Tables.tsMicros' trunc `ts div 1000`). */
   /** A compiled residual row predicate over the scan's batches —
     * (batch, rowIdx) → keep. Null ⟺ no filters (the bare-scan hot
     * path pays nothing). */
   private type BatchPred =
     (org.apache.spark.sql.vectorized.ColumnarBatch, Int) => Boolean
 
+  /** The columnar scan of `raw` restricted to `cols`, with output
+    * indices and the ts encoding (both events fixture generations:
+    * TIMESTAMP(NANOS) read as epoch-nanos Long via nanosAsLong, or
+    * TIMESTAMP(MICROS) read as NTZ — micros either way after decode,
+    * matching Tables.tsMicros' trunc `ts div 1000`). */
   private def columnarScanOf(raw: DataFrame, cols: Seq[String]):
       (org.apache.spark.sql.execution.FileSourceScanExec, Seq[Int], Boolean) = {
     val (scan, idx, tsNanos, pred) =
@@ -757,34 +741,32 @@ object DictRollup {
     finalizeHourly(spark.createDataFrame(partials, partialSchema), dict, hourUs)
   }
 
-  /** The incremental kernels' 80/20 split of event_id (r15 verdict #2
-    * decomposition, BASELINE.md): the r14 kernels computed the exact
-    * xxhash64(event_id, 'incr') chain the GENERIC gate uses, which the
-    * 1B profile (EventAggProfile i_split_*) measured at ~0.5-0.9 ns/row
-    * of the incremental twin's ~2 ns/row premium over the fold. Any
-    * deterministic uniform split merges to the identical total (limb
-    * sums are associative — HourlyRollupDictSpec locks incremental ==
-    * fold), so the split function is a harness choice, not a semantics
-    * one: the kernels now default to ONE multiply-xorshift mix (the
-    * NdvBitmap Fibonacci scramble) of event_id — still deterministic
-    * per event, still ~80/20-uniform, ~5 ops instead of the two-stage
-    * xxhash chain. `spark.graft.rollup.splitHash=xxh64` restores the
-    * generic gate's chain for same-window A/B measurement. */
-  private def splitXxh64(raw: DataFrame): Boolean =
-    raw.sparkSession.conf.getOption("spark.graft.rollup.splitHash")
-      .contains("xxh64")
+  /** The incremental kernels' 80/20 split bit of an event_id (r15
+    * verdict #2 decomposition, BASELINE.md): the r14 kernels computed
+    * the exact xxhash64(event_id, 'incr') chain the GENERIC gate uses,
+    * which the 1B profile (EventAggProfile i_split_*) measured at
+    * ~0.5-0.9 ns/row of the incremental twin's ~2 ns/row premium over
+    * the fold. Any deterministic uniform split merges to the identical
+    * total (limb sums are associative — HourlyRollupDictSpec locks the
+    * kernel incremental == the generic one, whose split is the xxhash
+    * chain), so the split function is a harness choice, not a semantics
+    * one: ONE multiply-xorshift mix (the NdvBitmap Fibonacci scramble)
+    * of event_id — deterministic per event, ~80/20-uniform, ~5 ops. A
+    * NULL event_id mixes as 0. */
+  private def splitBit(id: Long): Int = {
+    var h = id * -7046029254386353131L
+    h ^= h >>> 32
+    if (Math.floorMod(h, 100L) < 20L) 1 else 0
+  }
 
   /** Columnar twin of [[foldRollup]] / [[incrementalRollup]] over the
-    * RAW events relation: `split = None` is the fold; `split = Some`
-    * carries the 80/20 hash split in the packed key's low bit —
-    * computed IN the kernel from event_id (see [[splitXxh64]]; any
-    * deterministic split merges to the identical total — decimal
-    * associativity — so the split function is a harness choice, not a
-    * semantics one). Trunc-hour pack like the generic
-    * Incremental.hourTs. The split path keeps one last-key memo PER
-    * SPLIT BIT: split bits alternate pseudo-randomly row to row, so a
-    * single memo would miss ~32% of rows (P[same bit twice] =
-    * .8²+.2² = .68) and pay a LongMap probe each miss — the r15
+    * RAW events relation: `withSplit = false` is the fold; `true`
+    * carries the 80/20 split in the packed key's low bit — computed
+    * IN the kernel from event_id ([[splitBit]]). Trunc-hour pack like
+    * the generic Incremental.hourTs. The split path keeps one last-key
+    * memo PER SPLIT BIT: split bits alternate pseudo-randomly row to
+    * row, so a single memo would miss ~32% of rows (P[same bit twice]
+    * = .8²+.2² = .68) and pay a LongMap probe each miss — the r15
     * premium decomposition's third term. */
   private def sumRollupColumnar(raw: DataFrame, dict: Seq[String],
       hourUs: Long, withSplit: Boolean): DataFrame = {
@@ -804,7 +786,6 @@ object DictRollup {
       StructField("n", LongType, nullable = false),
       StructField("h6", LongType, nullable = true),
       StructField("l6", LongType, nullable = true)))
-    val xxh = withSplit && splitXxh64(raw)
     val partials = scan.executeColumnar().mapPartitions { it =>
       val slots = new scala.collection.mutable.LongMap[SumSlot](64)
       val codec = new CategoryCodec(dictU)
@@ -829,29 +810,10 @@ object DictRollup {
           val code = if (vTy.isNullAt(i)) dictU.length else codec.code(vTy, i)
           // trunc-hour: (ts - ts % h) / h — the Incremental.hourTs shape
           var k = (ts - ts % hourUs) / hourUs * m + code
-          var split = 0
-          if (withSplit) {
-            var h = 0L
-            if (xxh) {
-              // the generic gate's exact chain: xxhash64(event_id,
-              // 'incr') — seed 42, fold the long, then the 4-byte salt
-              // via hashInt of its native-order word (XXH64's
-              // 4-byte-tail path IS hashInt, spec-locked over random
-              // seeds in HourlyRollupDictSpec)
-              h = 42L
-              if (!vId.isNullAt(i))
-                h = org.apache.spark.sql.catalyst.expressions.XXH64
-                  .hashLong(vId.getLong(i), h)
-              h = org.apache.spark.sql.catalyst.expressions.XXH64
-                .hashInt(SaltIncrLE, h)
-            } else if (!vId.isNullAt(i)) {
-              // the default kernel split: one multiply-xorshift mix
-              h = vId.getLong(i) * -7046029254386353131L
-              h ^= h >>> 32
-            }
-            if (Math.floorMod(h, 100L) < 20L) split = 1
-            k = k * 2 + split
-          }
+          val split =
+            if (withSplit) splitBit(if (vId.isNullAt(i)) 0L else vId.getLong(i))
+            else 0
+          if (withSplit) k = k * 2 + split
           var slot =
             if (split == 0) { if (!empty && k == lastK0) lastSlot0 else null }
             else { if (!empty && k == lastK1) lastSlot1 else null }
@@ -903,119 +865,12 @@ object DictRollup {
       hourUs: Long = HourUs): DataFrame =
     sumRollupColumnar(raw, dict, hourUs, withSplit = false)
 
-  /** SCALE/SHAPE-ADAPTIVE hourly rollup over the RAW events relation
-    * (the sessionizeAuto discipline applied to this family,
-    * docs/SCALING.md "Dictionary-rollup form selection"): the columnar
-    * kernel when the input collapses to one vectorized parquet scan of
-    * the events schema (wins at every measured scale; inverts the 1B
-    * pair), else the row kernel over the standard micros projection —
-    * the composable form for composed inputs (joins, filters, derived
-    * columns). Selection is plan-shape only — no job runs to decide.
-    * Gate keys pin each form explicitly; this is the serving-path
-    * convenience. */
-  def hourlyRollupAuto(raw: DataFrame, dict: Seq[String],
-      hourUs: Long = HourUs): DataFrame = {
-    val columnar =
-      try Some(hourlyRollupColumnar(raw, dict, hourUs))
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage.contains("columnar dict kernel") => None
-      }
-    columnar.getOrElse {
-      hourlyRollup(raw.select(
-        graft.core.Tables.tsMicrosOf(raw.schema("ts").dataType).as("timestamp"),
-        col("event_type"), col("user_id"), col("value")), dict, hourUs)
-    }
-  }
-
   /** Columnar twin of [[incrementalRollup]] (same oracle as
     * agg_incremental_rollup; split carried in the packed key's low
     * bit, computed in-kernel). */
   def incrementalRollupColumnar(raw: DataFrame, dict: Seq[String],
       hourUs: Long = HourUs): DataFrame =
     sumRollupColumnar(raw, dict, hourUs, withSplit = true)
-
-  /** Plan-stats row estimate shared by the scale-adaptive selectors —
-    * the sessionizeAuto estimator: rowCount stat when available, else
-    * sizeInBytes over the 40 B/row events-projection heuristic, both
-    * clamped before toLong (BigInt join-stat products wrap negative
-    * past Long.MaxValue). Plan-time only; no job runs to decide. */
-  private def estRowsOf(df: DataFrame): Long = {
-    val stats = df.queryExecution.optimizedPlan.stats
-    stats.rowCount.map(_.min(BigInt(Long.MaxValue)).toLong)
-      .getOrElse(stats.sizeInBytes.min(BigInt(Long.MaxValue)).toLong / 40L)
-  }
-
-  /** Measured fold-family crossover between the generic HashAggregate
-    * and the row kernel (docs/SCALING.md "Dictionary-rollup form
-    * selection": generic 3.41 s vs row kernel 3.95 s at 3e8 rows, row
-    * kernel −21-25% at 1B — the boundary sits between those points, so
-    * the default takes the kernel PAST 3e8). Overridable per session
-    * via `spark.graft.rollup.dictThresholdRows`. */
-  private def dictThresholdRows(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.rollup.dictThresholdRows")
-      .flatMap(_.toLongOption).getOrElse(300000000L)
-
-  /** The standard micros projection the row forms take over the RAW
-    * events relation ([[hourlyRollupAuto]]'s fallback projection plus
-    * event_id, which the incremental split hash needs). */
-  private def microsProjection(raw: DataFrame): DataFrame =
-    raw.select(
-      graft.core.Tables.tsMicrosOf(raw.schema("ts").dataType).as("timestamp"),
-      col("event_id"), col("event_type"), col("user_id"), col("value"))
-
-  private def columnarOrElse(columnar: => DataFrame)(
-      fallback: => DataFrame): DataFrame = {
-    val viaKernel =
-      try Some(columnar)
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage.contains("columnar dict kernel") => None
-      }
-    viaKernel.getOrElse(fallback)
-  }
-
-  /** SCALE/SHAPE-ADAPTIVE fold rollup over the RAW events relation —
-    * the [[hourlyRollupAuto]] discipline applied to the fold family
-    * (docs/SCALING.md "Dictionary-rollup form selection"): the
-    * columnar kernel when the input collapses to one vectorized
-    * parquet scan of the events schema; on composed inputs the ROW
-    * kernel past [[dictThresholdRows]] (default 3e8 — the measured
-    * crossover), the generic codegen'd HashAggregate fold below it
-    * (best at small scale: no row-by-row kernel boundary). A
-    * non-default `hourUs` always takes the row kernel — the generic
-    * [[graft.ops.Incremental.hourlyPartials]] pins the 1-hour bucket.
-    * Selection is plan-shape + plan-stats only — no job runs to
-    * decide. Gate keys pin each form explicitly; this is the
-    * serving-path convenience. */
-  def foldRollupAuto(raw: DataFrame, dict: Seq[String],
-      hourUs: Long = HourUs): DataFrame =
-    columnarOrElse(foldRollupColumnar(raw, dict, hourUs)) {
-      val proj = microsProjection(raw)
-      if (hourUs != HourUs || estRowsOf(proj) > dictThresholdRows(raw))
-        foldRollup(proj, dict, hourUs)
-      else graft.ops.Incremental.merge(graft.ops.Incremental.hourlyPartials(proj))
-    }
-
-  /** [[foldRollupAuto]] for the incremental (split-merge) family,
-    * under the STANDARD 80/20 split — xxhash64(event_id, 'incr') mod
-    * 100 < 20, the predicate every incremental gate pins and the
-    * columnar kernel computes in-kernel. A custom split predicate
-    * means composing [[incrementalRollup]] / the generic
-    * [[graft.ops.Incremental.hourlyPartialsBy]] explicitly (the
-    * columnar kernel cannot honor an arbitrary column). */
-  def incrementalRollupAuto(raw: DataFrame, dict: Seq[String],
-      hourUs: Long = HourUs): DataFrame =
-    columnarOrElse(incrementalRollupColumnar(raw, dict, hourUs)) {
-      val proj = microsProjection(raw)
-      val isNew = pmod(xxhash64(col("event_id"), lit("incr")), lit(100L)) < 20
-      if (hourUs != HourUs || estRowsOf(proj) > dictThresholdRows(raw))
-        incrementalRollup(proj, dict, isNew, hourUs)
-      else {
-        graft.ops.Incremental.merge(
-          graft.ops.Incremental.hourlyPartialsBy(proj, isNew).drop("split"))
-      }
-    }
 
   /** Columnar twin of [[graft.ops.Approx.sketchRollup]] under a
     * declared dictionary (same oracle — DuckDB's own
@@ -1110,24 +965,6 @@ object DictRollup {
           lit(graft.ops.Approx.BandLn125) + lit(0.5)).cast("long").as("est_band"))
   }
 
-  /** SHAPE-ADAPTIVE sketch rollup over the RAW events relation: the
-    * columnar kernel when the input collapses to one vectorized
-    * parquet scan of the events schema (it wins at every measured
-    * scale — 2.26x/1.72x/1.25x vs the row twin's 5.19x/3.64x/2.48x,
-    * BASELINE.md r14 — and its state never depends on value
-    * cardinality), else the composable row form
-    * [[graft.ops.Approx.sketchRollup]] (distinct-first, with its
-    * documented degenerate-cardinality caveat). No scale threshold:
-    * unlike the fold family there is no measured scale where the row
-    * form beats the kernel on a bare scan. NULL/out-of-dict semantics
-    * follow whichever form runs (the standard dict-twin divergence —
-    * identical on declared corpora). */
-  def sketchRollupAuto(raw: DataFrame, dict: Seq[String],
-      dayUs: Long = 86400000000L): DataFrame =
-    columnarOrElse(sketchRollupColumnar(raw, dict, dayUs)) {
-      graft.ops.Approx.sketchRollup(microsProjection(raw), dayUs = dayUs)
-    }
-
   // ------------------------------------------------------------------
   // INFERRED-dictionary kernels (r15, verdict #1): the fleet's only
   // remaining >2x-at-1B keys were the GENERIC fold (2.76x) and
@@ -1150,31 +987,22 @@ object DictRollup {
   //
   // State honesty: per-task slots = hours-spanned x observed
   // categories — the DATA sizes the state, where the declared kernels
-  // are declaration-bounded. spark.graft.rollup.openCatCap (default
-  // 2^20) bounds the local dictionary LOUDLY; past it the kernel
-  // refuses and names the generic (spillable) form — it never pages
-  // silently. 100 TB: same exchange story as the declared kernels
-  // (tasks x slots partial rows, zero data-scale shuffle), with the
-  // partials carrying the decoded category string instead of a
-  // packed code.
+  // are declaration-bounded. OpenMaxCat (2^20, the width of the
+  // packed key's category code) bounds the local dictionary LOUDLY;
+  // past it the kernel refuses and names the generic (spillable)
+  // form — it never pages silently. 100 TB: same exchange story as
+  // the declared kernels (tasks x slots partial rows, zero data-scale
+  // shuffle), with the partials carrying the decoded category string
+  // instead of a packed code.
   // ------------------------------------------------------------------
 
   /** Packed open-kernel slot key: local category code (20 bits, the
-    * openCatCap ceiling) | trunc-hour index (42 bits, sign-carried —
+    * [[OpenMaxCat]] ceiling) | trunc-hour index (42 bits, sign-carried —
     * covers every representable micros timestamp at the 1-hour
     * bucket) | split bit. */
   private val OpenHourBits = 42
   private val OpenHourMask = (1L << OpenHourBits) - 1
   private val OpenMaxCat = 1 << 20
-
-  private def openCatCap(df: DataFrame): Int = {
-    val cap = df.sparkSession.conf
-      .getOption("spark.graft.rollup.openCatCap")
-      .flatMap(_.toIntOption).getOrElse(OpenMaxCat)
-    require(cap >= 1 && cap <= OpenMaxCat,
-      s"spark.graft.rollup.openCatCap must be in [1, $OpenMaxCat]: $cap")
-    cap
-  }
 
   /** Shared body of [[foldRollupInferred]] / [[incrementalRollupInferred]]:
     * one columnar kernel pass over the bare vectorized parquet scan,
@@ -1190,7 +1018,6 @@ object DictRollup {
       withSplit: Boolean): DataFrame = {
     require(hourUs > 0, s"hourUs must be positive: $hourUs")
     val spark = raw.sparkSession
-    val catCap = openCatCap(raw)
     val cols = if (withSplit) Seq("ts", "event_id", "event_type", "value")
       else Seq("ts", "event_type", "value")
     // filter-only composed inputs run ON the kernel (r16, verdict #4):
@@ -1209,10 +1036,9 @@ object DictRollup {
       Seq(StructField("n", LongType, nullable = false),
         StructField("h6", LongType, nullable = true),
         StructField("l6", LongType, nullable = true)))
-    val xxh = withSplit && splitXxh64(raw)
     val partials = scan.executeColumnar().mapPartitions { it =>
       val slots = new scala.collection.mutable.LongMap[SumSlot](64)
-      val codec = new OpenCodec(catCap)
+      val codec = new OpenCodec(OpenMaxCat)
       // dual last-key memo (split 0 / split 1); the fold path only
       // ever touches memo 0
       var lastK0 = Long.MinValue; var lastSlot0: SumSlot = null
@@ -1243,23 +1069,9 @@ object DictRollup {
             throw new IllegalArgumentException(
               s"inferred dictionary rollup: hour index $hourIdx overflows " +
                 s"the $OpenHourBits-bit packed key (hourUs=$hourUs)")
-          var split = 0
-          if (withSplit) {
-            // the kernel 80/20 split — see [[splitXxh64]]
-            var h = 0L
-            if (xxh) {
-              h = 42L
-              if (!vId.isNullAt(i))
-                h = org.apache.spark.sql.catalyst.expressions.XXH64
-                  .hashLong(vId.getLong(i), h)
-              h = org.apache.spark.sql.catalyst.expressions.XXH64
-                .hashInt(SaltIncrLE, h)
-            } else if (!vId.isNullAt(i)) {
-              h = vId.getLong(i) * -7046029254386353131L
-              h ^= h >>> 32
-            }
-            if (Math.floorMod(h, 100L) < 20L) split = 1
-          }
+          val split =
+            if (withSplit) splitBit(if (vId.isNullAt(i)) 0L else vId.getLong(i))
+            else 0
           val k = (code.toLong << (OpenHourBits + 1)) |
             ((hourIdx & OpenHourMask) << 1) | split
           var slot =
@@ -1335,29 +1147,11 @@ object DictRollup {
     sumRollupOpen(raw, hourUs, withSplit = false)
 
   /** [[foldRollupInferred]] for the incremental (split-merge) family
-    * under the standard 80/20 xxhash64(event_id, 'incr') split — the
-    * inferred twin of agg_incremental_rollup (same oracle). */
+    * under the kernels' 80/20 split ([[splitBit]]) — the inferred twin
+    * of agg_incremental_rollup (same oracle). */
   def incrementalRollupInferred(raw: DataFrame,
       hourUs: Long = HourUs): DataFrame =
     sumRollupOpen(raw, hourUs, withSplit = true)
-
-  /** [[foldRollupAuto]] for a corpus WITHOUT a declared dictionary:
-    * the inferred columnar kernel when the input collapses to one
-    * bare vectorized parquet scan of the events schema, else the
-    * generic codegen'd fold (the composable, spillable form — an
-    * undeclared composed input has no row-kernel tier, because the
-    * row kernels' packed keys need the declaration). */
-  def foldRollupAuto(raw: DataFrame, hourUs: Long): DataFrame =
-    columnarOrElse(foldRollupInferred(raw, hourUs)) {
-      val proj = microsProjection(raw)
-      graft.ops.Incremental.merge(
-        if (hourUs == HourUs) graft.ops.Incremental.hourlyPartials(proj)
-        else throw new IllegalArgumentException(
-          "undeclared-corpus fold: only the 1-hour bucket has a generic " +
-            "fallback (Incremental.hourlyPartials pins it)"))
-    }
-
-  def foldRollupAuto(raw: DataFrame): DataFrame = foldRollupAuto(raw, HourUs)
 
   /** INFERRED-dictionary columnar twin of
     * [[graft.ops.Approx.sketchRollup]] (gate: agg_sketch_rollup — same
@@ -1369,7 +1163,7 @@ object DictRollup {
     * exactly on any corpus (HLL updates are duplicate-insensitive, so
     * folding raw rows builds the identical registers the row twin's
     * distinct-first pipeline does). State = days x OBSERVED categories
-    * sketches per task, the open kernels' [[openCatCap]] bound; like
+    * sketches per task, the open kernels' [[OpenMaxCat]] bound; like
     * the dict sketch kernel, state never depends on VALUE cardinality
     * — the row twin's degenerate-cardinality caveat is retired for
     * undeclared corpora too. Null semantics: null timestamp fails
@@ -1380,7 +1174,6 @@ object DictRollup {
       dayUs: Long = 86400000000L): DataFrame = {
     require(dayUs > 0, s"dayUs must be positive: $dayUs")
     val spark = raw.sparkSession
-    val catCap = openCatCap(raw)
     // filter-only composed inputs run ON the kernel (r16, verdict #4)
     val (scan, idx, tsNanos, pred) = columnarScanOfFiltered(raw,
       Seq("ts", "event_type", "user_id"), allowFilter = true)
@@ -1392,7 +1185,7 @@ object DictRollup {
     val partials = scan.executeColumnar().mapPartitions { it =>
       val slots = new scala.collection.mutable.LongMap[
         org.apache.datasketches.hll.HllSketch](64)
-      val codec = new OpenCodec(catCap)
+      val codec = new OpenCodec(OpenMaxCat)
       var lastK = Long.MinValue
       var lastSlot: org.apache.datasketches.hll.HllSketch = null
       var empty = true
@@ -1456,34 +1249,6 @@ object DictRollup {
           lit(graft.ops.Approx.BandLn125) + lit(0.5)).cast("long").as("est_band"))
   }
 
-  /** [[sketchRollupAuto]] for a corpus WITHOUT a declared dictionary —
-    * inferred columnar kernel on a bare scan, the composable
-    * (distinct-first) row form otherwise. */
-  def sketchRollupAuto(raw: DataFrame, dayUs: Long): DataFrame =
-    columnarOrElse(sketchRollupInferred(raw, dayUs)) {
-      graft.ops.Approx.sketchRollup(microsProjection(raw), dayUs = dayUs)
-    }
-
-  def sketchRollupAuto(raw: DataFrame): DataFrame =
-    sketchRollupAuto(raw, 86400000000L)
-
-  /** [[incrementalRollupAuto]] for a corpus WITHOUT a declared
-    * dictionary — inferred columnar kernel on a bare scan, generic
-    * split-partials fold otherwise. */
-  def incrementalRollupAuto(raw: DataFrame, hourUs: Long): DataFrame =
-    columnarOrElse(incrementalRollupInferred(raw, hourUs)) {
-      require(hourUs == HourUs,
-        "undeclared-corpus incremental: only the 1-hour bucket has a " +
-          "generic fallback (Incremental.hourlyPartialsBy pins it)")
-      val isNew = pmod(xxhash64(col("event_id"), lit("incr")), lit(100L)) < 20
-      graft.ops.Incremental.merge(
-        graft.ops.Incremental.hourlyPartialsBy(
-          microsProjection(raw), isNew).drop("split"))
-    }
-
-  def incrementalRollupAuto(raw: DataFrame): DataFrame =
-    incrementalRollupAuto(raw, HourUs)
-
   // ------------------------------------------------------------------
   // Streaming row-form twins (r16, verdict #7): the inferred kernels'
   // per-partition dictionary-inference + packed-key fold, re-expressed
@@ -1501,7 +1266,7 @@ object DictRollup {
     * [[OpenCodec]] minus the columnar fast path: NULL is its own group
     * (code 0), growth past `catCap` fails with the same loud refusal
     * naming the spillable generic form. */
-  private final class OpenRowCodec(catCap: Int) {
+  private[graft] final class OpenRowCodec(catCap: Int) {
     private val byValue = new java.util.HashMap[String, Integer](64)
     private val names = new scala.collection.mutable.ArrayBuffer[String](16)
     names += null // code 0 = NULL category
@@ -1512,8 +1277,8 @@ object DictRollup {
       if (got != null) return got.intValue()
       if (names.size > catCap) throw new IllegalArgumentException(
         "inferred dictionary rollup: more than " + catCap +
-          " distinct categories in one partition " +
-          "(spark.graft.rollup.openCatCap) — declare a dictionary or " +
+          " distinct categories in one partition (the packed key's " +
+          "category code is 20 bits wide) — declare a dictionary or " +
           "use the generic form, whose aggregate state can spill")
       val c = names.size
       byValue.put(s, Integer.valueOf(c))
@@ -1542,7 +1307,6 @@ object DictRollup {
   def openSumPartialsRows(events: DataFrame, hourUs: Long = HourUs,
       withSplit: Boolean = false): DataFrame = {
     require(hourUs > 0, s"hourUs must be positive: $hourUs")
-    val catCap = openCatCap(events)
     val spark = events.sparkSession
     import spark.implicits._
     val src = events.select(col("event_type").cast("string"),
@@ -1550,7 +1314,7 @@ object DictRollup {
         (if (withSplit) col("split") else lit(0)).cast("int").as("split"))
       .as[(Option[String], Option[Long], Option[Double], Int)]
     src.mapPartitions { it =>
-      val codec = new OpenRowCodec(catCap)
+      val codec = new OpenRowCodec(OpenMaxCat)
       val slots = new scala.collection.mutable.LongMap[SumSlot](64)
       while (it.hasNext) {
         val (ty, tsOpt, vOpt, split) = it.next()
@@ -1600,14 +1364,13 @@ object DictRollup {
   def openSketchPartialsRows(events: DataFrame,
       dayUs: Long = 86400000000L): DataFrame = {
     require(dayUs > 0, s"dayUs must be positive: $dayUs")
-    val catCap = openCatCap(events)
     val spark = events.sparkSession
     import spark.implicits._
     val src = events.select(col("event_type").cast("string"),
         col("timestamp").cast("long"), col("user_id").cast("long"))
       .as[(Option[String], Option[Long], Option[Long])]
     src.mapPartitions { it =>
-      val codec = new OpenRowCodec(catCap)
+      val codec = new OpenRowCodec(OpenMaxCat)
       val slots = new scala.collection.mutable.LongMap[
         org.apache.datasketches.hll.HllSketch](64)
       while (it.hasNext) {

@@ -29,13 +29,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Media-table schema: id + opaque payload + declared type + metadata. */
-  val MediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("payload", BinaryType, nullable = false),
-    StructField("media_type", StringType, nullable = false),
-    StructField("source", StringType, nullable = true)))
-
   // ---- deterministic fixture geometry (mirrored by the SQL oracle) ----
   private[ops] def fillByte(id: Long): Int = (id % 251).toInt
   private[ops] def imgW(id: Long): Int = (16 + id % 97).toInt

@@ -165,30 +165,22 @@ object Similarity {
     "ivfpq:nsub=16,ksub=8,rerank=600,nprobe=4" -> 0.658,
     "ivfpq:nsub=16,ksub=8,rerank=1200,nprobe=2" -> 0.528)
 
+  /** Books whose pinned mean recall@10 sits below this refuse to
+    * construct ([[guardBook]]). */
+  private val MinRecall = 0.25
+
   /** Construction-time bad-book guard (r13 verdict #3): a book whose
-    * PINNED recall provenance sits below `spark.graft.sim.minRecall`
-    * (default 0.25) REFUSES to construct — a user reaching for it
-    * would get near-noise neighbors, and until r14 the veto lived only
-    * in a COVERAGE.md sentence. Explicitly acknowledged override:
-    * `spark.graft.sim.allowLowRecallBooks=true` logs the provenance
-    * loudly and proceeds (for recall research on the bad books —
-    * how the artifact itself re-measures them). */
-  private def guardBook(spark: org.apache.spark.sql.SparkSession,
-      sig: String): Unit = {
-    val minRecall = spark.conf.getOption("spark.graft.sim.minRecall")
-      .flatMap(_.toDoubleOption).getOrElse(0.25)
-    pinnedRecall.get(sig).filter(_ < minRecall).foreach { r =>
-      val msg = f"ANN book '$sig' has pinned mean recall@10 of ${r * 100}%.1f%% " +
-        f"on the 60k reference corpus (< ${minRecall * 100}%.1f%% threshold, " +
-        "spark.graft.sim.minRecall; provenance: recall_maxq50 artifact). " +
-        "Use the measured defaults, or set " +
-        "spark.graft.sim.allowLowRecallBooks=true to construct it anyway."
-      if (spark.conf.getOption("spark.graft.sim.allowLowRecallBooks")
-          .contains("true"))
-        System.err.println(s"[graft] WARNING: $msg")
-      else throw new IllegalArgumentException(msg)
+    * PINNED recall provenance sits below [[MinRecall]] REFUSES to
+    * construct — a user reaching for it would get near-noise
+    * neighbors, and until r14 the veto lived only in a COVERAGE.md
+    * sentence. */
+  private def guardBook(sig: String): Unit =
+    pinnedRecall.get(sig).filter(_ < MinRecall).foreach { r =>
+      throw new IllegalArgumentException(
+        f"ANN book '$sig' has pinned mean recall@10 of ${r * 100}%.1f%% " +
+          f"on the 60k reference corpus (< ${MinRecall * 100}%.1f%% threshold; " +
+          "provenance: recall_maxq50 artifact). Use the measured defaults.")
     }
-  }
 
   /** Exact top-k cosine neighbors for each query vector.
     * `queryPred` selects the query rows (e.g. vec_id < 5).
@@ -313,7 +305,7 @@ object Similarity {
   def lshBucketTopK(embeddings: DataFrame, queryPred: Column, k: Int,
       nPlanes: Int = 6, dim: Int = 64, nTables: Int = 8): DataFrame = {
     require(nTables >= 1, s"nTables must be >= 1, got $nTables")
-    guardBook(embeddings.sparkSession, s"lsh:tables=$nTables,planes=$nPlanes")
+    guardBook(s"lsh:tables=$nTables,planes=$nPlanes")
     // table t uses plane rows [t*nPlanes, (t+1)*nPlanes) of the shared
     // deterministic sequence — table 0 IS the legacy single-table book
     val ps = planes(nPlanes * nTables, dim)
@@ -355,14 +347,6 @@ object Similarity {
     * [[bucketId]] on why not an inlined literal array). */
   private def dotLit(embCol: String, v: Array[Double]): Column =
     call_function("dot_dec", col(embCol), typedLit(v))
-
-  /** L2 norm of a constant vector, computed ONCE driver-side with the
-    * identical decimal accumulation (VecCodec.dotDecConst mirrors the
-    * CAST-to-DECIMAL(30,12) rounding both engines use), then inlined as
-    * a literal — an interpreted in-plan aggregate over a literal array
-    * is NOT constant-folded by Catalyst and would run per row. */
-  private def normLit(v: Array[Double]): Column =
-    lit(math.sqrt(graft.functions.VecCodec.dotDecConst(v, v)))
 
   /** Per-row array of (rounded cosine to centroid, -cid) structs for a
     * literal codebook over arbitrary embedding/norm columns; `greatest`
@@ -783,6 +767,10 @@ object Similarity {
     * population) and [[ivfTopKStale]] (book from the last rebuild). */
   private def ivfSearch(base: DataFrame, cents: Seq[(Long, Array[Double])],
       queryPred: Column, k: Int, nProbe: Int): DataFrame = {
+    // a probe past the book's last cell is a NULL cell id that matches
+    // nothing — refuse rather than silently probe fewer cells
+    require(nProbe <= cents.size,
+      s"nProbe ($nProbe) exceeds the codebook's ${cents.size} cells")
     // per-row array of (cosine-to-centroid, -cid) structs
     val centStructs = centroidStructs(cents)
     val assigned = base.withColumn("cell",
@@ -870,6 +858,8 @@ object Similarity {
     val cents = memoized(cacheKey, s"coarse|$nCentroids|$kmeansIters|$trainPred") {
       trainCodebookOn(base, nCentroids, kmeansIters, trainPred)
     }
+    require(nProbe <= cents.size,
+      s"nProbe ($nProbe) exceeds the codebook's ${cents.size} cells")
 
     val centStructs = centroidStructs(cents)
     val assigned = base
@@ -1071,8 +1061,7 @@ object Similarity {
       trainPred: Column = expr("vec_id % 2 = 0"),
       nSub: Int = 16, kSub: Int = 8, rerank: Int = 1200,
       cacheKey: Option[String] = None): DataFrame = {
-    guardBook(embeddings.sparkSession,
-      s"ivfpq:nsub=$nSub,ksub=$kSub,rerank=$rerank,nprobe=$nProbe")
+    guardBook(s"ivfpq:nsub=$nSub,ksub=$kSub,rerank=$rerank,nprobe=$nProbe")
     val base = withNorm(embeddings)
       .transform(persistTracked)
     val (cents, books) = memoized(cacheKey,
@@ -1391,6 +1380,9 @@ object Similarity {
       kmeansIters, trainPred)
     val staleCents = memoized(corpusCacheKey, tag) { fused._1 }
     val freshCents = memoized(fullCacheKey, tag) { fused._2 }
+    require(nProbe <= staleCents.size && nProbe <= freshCents.size,
+      s"nProbe ($nProbe) exceeds a codebook's cells " +
+        s"(${staleCents.size} stale, ${freshCents.size} fresh)")
     // ONE scored frame serves the brute referent AND both search arms
     // (optimization r17, guide §1.2/§2.4): the brute referent already
     // scores every (sampled query, corpus vector) cosine, and each

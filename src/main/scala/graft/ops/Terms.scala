@@ -142,10 +142,10 @@ object Terms {
     * exact integer arithmetic, hash-gateable (the transcendental
     * argument in [[unigramSurprisal]]).
     *
-    * Scale shape: the token array materializes ONCE per document
-    * (normTokens); bigrams are a transform over that array — one
-    * concat per gram, never a re-tokenize (the WordNgrams lesson) —
-    * then one (doc_id, bigram) combine. The model aggregates on
+    * Scale shape: ONE native walk of each document's normalized text
+    * (`norm_ngram_counts`) yields its bigrams with their in-document
+    * counts — never a re-tokenize (the WordNgrams lesson) — so the
+    * (doc_id, bigram) combine happens in-row. The model aggregates on
     * bigram and on its first word, both with map-side partial combine
     * (Zipf-head safe); joins are equality joins on the bigram/word
     * keys (AQE broadcasts the model when it fits — vocab² is sparse,

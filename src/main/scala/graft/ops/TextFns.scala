@@ -21,12 +21,6 @@ object TextFns {
   def normText(c: Column): Column =
     trim(regexp_replace(regexp_replace(lower(c), "[^a-z0-9 ]", " "), " +", " "))
 
-  /** Raw whitespace-delimited tokens (counts tokens of the ORIGINAL text). */
-  def rawTokens(c: Column): Column = expr(s"regexp_extract_all(${c.toString}, '\\\\S+', 0)")
-
-  /** Tokens of the normalized text (single-space separated by construction). */
-  def normTokens(c: Column): Column = split(normText(c), " ")
-
   /** Deterministic 60-bit hash shared with the DuckDB oracle:
     * first 15 hex chars of md5 parsed base-16. Fits in a Long with room
     * to spare; collision odds at 2^60 are irrelevant for candidate

@@ -135,8 +135,9 @@ object AnalyticsSurface {
   /** The WINDOW form of sessionize over (user_id, timestamp) rows —
     * one user_id shuffle, a partition-wide sort, two analytic
     * functions. Preferred at small scale: no grouped arrays, no
-    * second pass; the sort is the cost that loses to the segmented
-    * form past ~1e8 rows (see [[sessionizeAuto]]). */
+    * second pass; the sort is the cost that loses to
+    * [[sessionizeSegmented]] past ~1e8 rows (docs/SCALING.md
+    * "Sessionize form selection"). */
   def sessionizeWindow(ev: DataFrame, gapUs: Long = DefaultGapUs): DataFrame = {
     val byUser = Window.partitionBy("user_id").orderBy("timestamp")
     ev.withColumn("prev_ts", lag("timestamp", 1).over(byUser))
@@ -145,35 +146,6 @@ object AnalyticsSurface {
           .otherwise(0))
       .groupBy("user_id")
       .agg(sum("is_break").as("n_sessions"), count(lit(1)).as("n_events"))
-  }
-
-  /** SCALE-ADAPTIVE sessionize (r12 verdict #6): picks the
-    * [[sessionizeSegmented]] form when Catalyst's size estimate for
-    * `ev` exceeds `thresholdRows`, else [[sessionizeWindow]]. The
-    * measured boundary (BASELINE.md 300M-event rows): at 1e8 rows the
-    * two forms tie, at 3e8 the segmented form wins 2.34x vs 3.71x
-    * paired AND carries bounded per-group state where the window
-    * form's partition sort keeps growing — so the default threshold
-    * is 1e8 rows, overridable via the
-    * `spark.graft.sessionize.segThresholdRows` session conf. The
-    * estimate is plan-time only (rowCount stat when available, else
-    * sizeInBytes over a 40 B/row events-projection heuristic) — no
-    * job runs to decide. docs/SCALING.md "Sessionize form selection"
-    * records the rule. */
-  def sessionizeAuto(ev: DataFrame, gapUs: Long = DefaultGapUs,
-      bucketUs: Long = 3600000000L): DataFrame = {
-    val thresholdRows = ev.sparkSession.conf
-      .getOption("spark.graft.sessionize.segThresholdRows")
-      .flatMap(_.toLongOption).getOrElse(100000000L)
-    val stats = ev.queryExecution.optimizedPlan.stats
-    // sizeInBytes is a BigInt because join-stat products overflow
-    // Long; clamp BEFORE toLong or the estimate wraps negative at
-    // exactly the scale where the segmented form is mandatory
-    val estRows = stats.rowCount
-      .map(_.min(BigInt(Long.MaxValue)).toLong)
-      .getOrElse(stats.sizeInBytes.min(BigInt(Long.MaxValue)).toLong / 40L)
-    if (estRows > thresholdRows) sessionizeSegmented(ev, gapUs, bucketUs)
-    else sessionizeWindow(ev, gapUs)
   }
 
   /** [[sessionize]] as a GROUPED-ARRAY aggregate instead of two

@@ -107,7 +107,7 @@ class DriverReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(moreJobs > 0, s"${n + 1}-point read ran no job")
     assert(more.size == n + 1 && more == oracle("bound", range))
     val (newest, newestJobs) = run("SELECT latest(value) FROM bound")
-    assert(newestJobs > 0 && newest == Seq((at(0, 60000L), -1.0)))
+    assert(newestJobs == 1 && newest == Seq((at(0, 60000L), -1.0)))
   }
 
   test("a WHERE that empties the newest bucket still runs no job") {

@@ -462,7 +462,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(boundedLsh == fullOnSample)
   }
 
-  test("bad-book guard: pinned low-recall books refuse construction; override logs and proceeds") {
+  test("bad-book guard: pinned low-recall books refuse construction") {
     // the two r13-vetoed books (recall_maxq50_r13.json: 7.6% / 1.2%
     // mean recall@10) — until r14 the veto lived only in a COVERAGE.md
     // sentence; now construction itself refuses them
@@ -478,19 +478,25 @@ class SimilaritySpec extends AnyFunSuite {
     }
     assert(e2.getMessage.contains("recall") &&
       e2.getMessage.contains("ivfpq:nsub=4,ksub=4,rerank=50"))
-    // explicit acknowledgment constructs anyway (recall research on
-    // the bad books — how the artifact re-measures them)
-    spark.conf.set("spark.graft.sim.allowLowRecallBooks", "true")
+  }
+
+  test("IVF search refuses an nProbe past the codebook's cells") {
+    // a fifth probe of a 4-cell book would be a NULL cell id that no
+    // vector matches, silently searching fewer cells than asked
     try {
-      val df = Similarity.lshBucketTopK(emb, col("vec_id") === 0, 5,
-        nPlanes = 6, dim = 16, nTables = 1)
-      assert(df.columns.toSeq == Seq("query_id", "neighbor_id", "sim", "rank"))
-    } finally spark.conf.unset("spark.graft.sim.allowLowRecallBooks")
-    // a raised threshold vetoes books the default admits
-    spark.conf.set("spark.graft.sim.minRecall", "0.99")
-    try intercept[IllegalArgumentException] {
-      Similarity.lshBucketTopK(emb, col("vec_id") === 0, 5,
-        nPlanes = 6, dim = 16, nTables = 8)
-    } finally spark.conf.unset("spark.graft.sim.minRecall")
+      val e1 = intercept[IllegalArgumentException] {
+        Similarity.ivfTopK(emb, col("vec_id") === 0, 3, nCentroids = 4, nProbe = 5)
+      }
+      assert(e1.getMessage.contains("nProbe (5)"), e1.getMessage)
+      val eq8 = intercept[IllegalArgumentException] {
+        Similarity.ivfTopKQ8(emb, col("vec_id") === 0, 3, nCentroids = 4, nProbe = 5)
+      }
+      assert(eq8.getMessage.contains("nProbe (5)"), eq8.getMessage)
+      val e2 = intercept[IllegalArgumentException] {
+        Similarity.recallStalenessPair(emb, col("vec_id") < 25, col("vec_id") < 5,
+          k = 5, maxQueries = 3, nCentroids = 4, nProbe = 5)
+      }
+      assert(e2.getMessage.contains("nProbe (5)"), e2.getMessage)
+    } finally Similarity.releaseEscapedCaches()
   }
 }

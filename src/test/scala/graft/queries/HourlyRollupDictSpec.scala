@@ -3,7 +3,7 @@ package graft.queries
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The dictionary-declared hourly rollup (one-pass bitmap-NDV over
@@ -76,122 +76,103 @@ class HourlyRollupDictSpec extends AnyFunSuite {
       "columnar hourly kernel diverged from the row kernel")
     assert(rowsOf("agg_rollup_fold_dict_col") == df,
       "columnar fold kernel diverged from the row kernel")
+    // split-function invariance (r15): the columnar kernel splits by
+    // a multiply-mix of event_id, the row twin and the generic gate by
+    // the xxhash64 chain — DIFFERENT partitions of the corpus — and the
+    // merged rollup must be bit-identical under both
     assert(rowsOf("agg_incremental_rollup_dict_col") == di,
       "columnar incremental kernel diverged from the row kernel")
-    // split-function invariance (r15): the kernels' default
-    // multiply-mix split and the generic gate's xxhash64 chain are
-    // DIFFERENT partitions of the corpus, and the merged rollup must
-    // be bit-identical under both — the "split is a harness choice"
-    // claim, asserted rather than stated
-    spark.conf.set("spark.graft.rollup.splitHash", "xxh64")
-    try assert(rowsOf("agg_incremental_rollup_dict_col") == di,
-      "merged rollup changed under the xxh64 split (split-invariance broken)")
-    finally spark.conf.unset("spark.graft.rollup.splitHash")
   }
 
-  test("hourlyRollupAuto picks the columnar kernel on a bare scan, the row kernel on a composed input") {
+  /** 200 events over 7 ten-minute steps, written twice: whole to
+    * `full` and cut to event_id >= 50 to `cut`, so a kernel over a
+    * filtered `full` has the keyed generic forms over `cut` as its
+    * reference. */
+  private def filteredCorpus(prefix: String, typeOf: Int => String) = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-hrda").toFile
-    dir.deleteOnExit()
     val rows = (0 until 200).map { i =>
       (i.toLong, (i % 7).toLong * 600000000L * 1000L, 1L + i % 9,
-        dict(i % dict.size), i * 0.25, "{}")
-    }
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(s"${dir.getAbsolutePath}/events.parquet")
-    val raw = graft.core.Tables.load(spark, dir.getAbsolutePath, "events")
-    // bare scan -> columnar branch; composed input (a filter forces a
-    // non-bare plan... a filter still collapses into the scan, so use
-    // a derived column) -> row-kernel branch; both equal the generic
-    val auto = graft.ops.DictRollup.hourlyRollupAuto(raw, dict)
-      .orderBy("hour_ts", "event_type").collect().toSeq
-    // row-preserving FILTER: it lands in the scan's dataFilters, which
-    // the columnar guard rejects, so the auto must fall back to the
-    // row kernel — same values either way. (A ts + 0 projection would
-    // NOT exercise the fallback: the optimizer folds it back to a
-    // bare scan, which the kernel then legitimately accepts.)
-    val composed = graft.ops.DictRollup.hourlyRollupAuto(
-      raw.filter(col("event_id") >= 0L),
-      dict).orderBy("hour_ts", "event_type").collect().toSeq
-    val colK = AnalyticsSurface.queries("agg_hourly_rollup_dict_col")(
-      spark, dir.getAbsolutePath).orderBy("hour_ts", "event_type").collect().toSeq
-    assert(auto == colK, "auto on a bare scan diverged from the columnar kernel")
-    assert(composed == colK, "auto on a composed input diverged in VALUES")
+        typeOf(i), i * 0.25, "{}")
+    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    val full = Files.createTempDirectory(prefix).toFile
+    val cut = Files.createTempDirectory(prefix + "cut").toFile
+    full.deleteOnExit(); cut.deleteOnExit()
+    rows.write.mode("overwrite").parquet(s"${full.getAbsolutePath}/events.parquet")
+    rows.filter(col("event_id") >= 50L)
+      .write.mode("overwrite").parquet(s"${cut.getAbsolutePath}/events.parquet")
+    (full.getAbsolutePath, cut.getAbsolutePath)
   }
 
-  test("fold/incremental/sketch auto selectors: kernel on a bare scan, threshold-ruled fallback on composed inputs") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-hrdauto").toFile
-    dir.deleteOnExit()
-    val rows = (0 until 200).map { i =>
-      (i.toLong, (i % 7).toLong * 600000000L * 1000L, 1L + i % 9,
-        dict(i % dict.size), i * 0.25, "{}")
+  private def sorted(df: org.apache.spark.sql.DataFrame, cols: String*) =
+    df.orderBy(cols.head, cols.tail: _*).collect().toSeq
+
+  /** A kernel form's partials enter the plan as a LogicalRDD leaf; the
+    * generic forms read the parquet relation direct. */
+  private def viaKernel(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collectLeaves()
+      .exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+
+  test("row kernels on a filtered input equal the generic forms on the pre-filtered corpus") {
+    val (full, cut) = filteredCorpus("graft-hrdrow", i => dict(i % dict.size))
+    val ev = graft.core.Tables.eventSeries(spark, full).filter(col("event_id") >= 50L)
+    def ref(key: String) =
+      sorted(AnalyticsSurface.queries(key)(spark, cut), "hour_ts", "event_type")
+    val hourly = graft.ops.DictRollup.hourlyRollup(ev, dict)
+    assert(viaKernel(hourly))
+    assert(sorted(hourly, "hour_ts", "event_type") == ref("agg_hourly_rollup"))
+    val fold = graft.ops.DictRollup.foldRollup(ev, dict)
+    assert(viaKernel(fold))
+    assert(sorted(fold, "hour_ts", "event_type") == ref("agg_rollup_fold"))
+    val incr = graft.ops.DictRollup.incrementalRollup(ev, dict,
+      pmod(xxhash64(col("event_id"), lit("incr")), lit(100L)) < 20)
+    assert(viaKernel(incr))
+    assert(sorted(incr, "hour_ts", "event_type") == ref("agg_incremental_rollup"))
+  }
+
+  test("inferred kernels on a filter-only input equal the generic forms on the pre-filtered corpus") {
+    val (full, cut) = filteredCorpus("graft-hrdinff", i => s"undeclared_${i % 11}")
+    val raw = graft.core.Tables.load(spark, full, "events")
+    // a filter-only composed input runs ON the kernel (r16: the
+    // FilterExec residual re-evaluates inside the scan loop)
+    val filtered = raw.filter(col("event_id") >= 50L)
+    def ref(key: String, cols: String*) =
+      sorted(AnalyticsSurface.queries(key)(spark, cut), cols: _*)
+    val fold = graft.ops.DictRollup.foldRollupInferred(filtered)
+    assert(viaKernel(fold))
+    assert(sorted(fold, "hour_ts", "event_type") ==
+      ref("agg_rollup_fold", "hour_ts", "event_type"))
+    val incr = graft.ops.DictRollup.incrementalRollupInferred(filtered)
+    assert(viaKernel(incr))
+    assert(sorted(incr, "hour_ts", "event_type") ==
+      ref("agg_incremental_rollup", "hour_ts", "event_type"))
+    val sketch = graft.ops.DictRollup.sketchRollupInferred(filtered)
+    assert(viaKernel(sketch))
+    assert(sorted(sketch, "event_type") == ref("agg_sketch_rollup", "event_type"))
+    // the cut is selective, so the references differ from the whole corpus
+    assert(ref("agg_rollup_fold", "hour_ts", "event_type") !=
+      sorted(AnalyticsSurface.queries("agg_rollup_fold")(spark, full),
+        "hour_ts", "event_type"))
+  }
+
+  test("columnar kernels refuse an input they cannot read as one scan with the columnar dict kernel error") {
+    val (full, _) = filteredCorpus("graft-hrdrefuse", i => dict(i % dict.size))
+    val raw = graft.core.Tables.load(spark, full, "events")
+    def refused(build: => org.apache.spark.sql.DataFrame): Unit = {
+      val e = intercept[IllegalArgumentException](build)
+      assert(e.getMessage.contains("columnar dict kernel"), e.getMessage)
     }
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(s"${dir.getAbsolutePath}/events.parquet")
-    val raw = graft.core.Tables.load(spark, dir.getAbsolutePath, "events")
-    // a row-preserving FILTER lands in the scan's dataFilters, which
-    // the columnar guard rejects (a ts+0 projection would NOT do: the
-    // optimizer folds it back to a bare scan, which the kernel then
-    // legitimately accepts) — so the auto must take the fallback
-    // branch, with the same VALUES either way
-    def composedOf(r: org.apache.spark.sql.DataFrame) =
-      r.filter(col("event_id") >= 0L)
-    // a kernel form's partials enter the plan as a LogicalRDD leaf;
-    // the generic HashAggregate fold reads the parquet relation direct
-    def viaKernel(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.optimizedPlan.collectLeaves()
-        .exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
-    def sorted(df: org.apache.spark.sql.DataFrame, cols: String*) =
-      df.orderBy(cols.head, cols.tail: _*).collect().toSeq
-
-    val foldRef = sorted(AnalyticsSurface.queries("agg_rollup_fold")(
-      spark, dir.getAbsolutePath), "hour_ts", "event_type")
-    val foldBare = graft.ops.DictRollup.foldRollupAuto(raw, dict)
-    assert(viaKernel(foldBare), "fold auto must take the columnar kernel on a bare scan")
-    assert(sorted(foldBare, "hour_ts", "event_type") == foldRef)
-    val foldComposed = graft.ops.DictRollup.foldRollupAuto(composedOf(raw), dict)
-    assert(!viaKernel(foldComposed),
-      "fold auto must take the GENERIC form on a composed input under the 3e8 threshold")
-    assert(sorted(foldComposed, "hour_ts", "event_type") == foldRef)
-    spark.conf.set("spark.graft.rollup.dictThresholdRows", "1")
-    try {
-      val foldRowKernel = graft.ops.DictRollup.foldRollupAuto(composedOf(raw), dict)
-      assert(viaKernel(foldRowKernel),
-        "fold auto must take the ROW kernel on a composed input past the threshold")
-      assert(sorted(foldRowKernel, "hour_ts", "event_type") == foldRef)
-    } finally spark.conf.unset("spark.graft.rollup.dictThresholdRows")
-
-    // ADVICE r14: the fold family had branch-SHAPE assertions but the
-    // incremental/sketch autos were value-checked only — a selection
-    // regression (always-generic) would have passed. Mirror them.
-    val incrRef = sorted(AnalyticsSurface.queries("agg_incremental_rollup")(
-      spark, dir.getAbsolutePath), "hour_ts", "event_type")
-    val incrBare = graft.ops.DictRollup.incrementalRollupAuto(raw, dict)
-    assert(viaKernel(incrBare),
-      "incremental auto must take the columnar kernel on a bare scan")
-    assert(sorted(incrBare, "hour_ts", "event_type") == incrRef)
-    val incrComposed = graft.ops.DictRollup.incrementalRollupAuto(composedOf(raw), dict)
-    assert(!viaKernel(incrComposed),
-      "incremental auto must take the GENERIC form on a composed input under the 3e8 threshold")
-    assert(sorted(incrComposed, "hour_ts", "event_type") == incrRef)
-    spark.conf.set("spark.graft.rollup.dictThresholdRows", "1")
-    try {
-      val incrRowKernel = graft.ops.DictRollup.incrementalRollupAuto(composedOf(raw), dict)
-      assert(viaKernel(incrRowKernel),
-        "incremental auto must take the ROW kernel on a composed input past the threshold")
-      assert(sorted(incrRowKernel, "hour_ts", "event_type") == incrRef)
-    } finally spark.conf.unset("spark.graft.rollup.dictThresholdRows")
-
-    val sketchRef = sorted(AnalyticsSurface.queries("agg_sketch_rollup")(
-      spark, dir.getAbsolutePath), "event_type")
-    val sketchBare = graft.ops.DictRollup.sketchRollupAuto(raw, dict)
-    assert(viaKernel(sketchBare), "sketch auto must take the columnar kernel on a bare scan")
-    assert(sorted(sketchBare, "event_type") == sketchRef)
-    val sketchComposed = graft.ops.DictRollup.sketchRollupAuto(composedOf(raw), dict)
-    assert(!viaKernel(sketchComposed),
-      "sketch auto must take the composable row form on a composed input")
-    assert(sorted(sketchComposed, "event_type") == sketchRef)
+    // an unsupported predicate shape refuses at construction, naming
+    // the generic form, instead of evaluating part of the filter
+    val computed = raw.filter(col("event_id") % 2L >= 0L)
+    refused(graft.ops.DictRollup.foldRollupInferred(computed))
+    refused(graft.ops.DictRollup.incrementalRollupInferred(computed))
+    refused(graft.ops.DictRollup.sketchRollupInferred(computed))
+    // the declared-dictionary columnar kernels take a bare scan only
+    val filtered = raw.filter(col("event_id") >= 0L)
+    refused(graft.ops.DictRollup.hourlyRollupColumnar(filtered, dict))
+    refused(graft.ops.DictRollup.foldRollupColumnar(filtered, dict))
+    refused(graft.ops.DictRollup.incrementalRollupColumnar(filtered, dict))
+    refused(graft.ops.DictRollup.sketchRollupColumnar(filtered, dict))
   }
 
   test("INFERRED kernels equal the GENERIC forms on an undeclared fuzz corpus (rogue + NULL categories, pre-1970 hours)") {
@@ -267,109 +248,34 @@ class HourlyRollupDictSpec extends AnyFunSuite {
     val is = sketchRows("agg_sketch_rollup_inferred")
     assert(gs == is, s"row twin vs INFERRED sketch diverged:\n${gs.zip(is).filter(p => p._1 != p._2).take(5)}")
     assert(is.exists(_.isNullAt(0)), "expected a NULL-category sketch group")
-    // no-dict auto: inferred kernel on the bare scan, row form on a
-    // composed input — same values either way
+    // the inferred sketch kernel also runs on a filter-only composed
+    // input (r16) with the same values
     val raw = graft.core.Tables.load(spark, dir.getAbsolutePath, "events")
-    def viaKernelDf(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.optimizedPlan.collectLeaves()
-        .exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
-    val sAutoBare = graft.ops.DictRollup.sketchRollupAuto(raw)
-    assert(viaKernelDf(sAutoBare), "no-dict sketch auto must take the inferred kernel on a bare scan")
-    assert(sAutoBare.orderBy("event_type").collect().toSeq == is)
-    // r16: a FILTER-ONLY composed input now runs ON the kernel (the
-    // FilterExec residual re-evaluates inside the scan loop)
-    val sAutoFiltered = graft.ops.DictRollup.sketchRollupAuto(
+    val sFiltered = graft.ops.DictRollup.sketchRollupInferred(
       raw.filter(col("event_id") >= 0L))
-    assert(viaKernelDf(sAutoFiltered),
-      "no-dict sketch auto must take the kernel on a filter-only composed input")
-    assert(sAutoFiltered.orderBy("event_type").collect().toSeq == is)
-    // an UNSUPPORTED predicate shape (OR) still routes to the row form
-    val sAutoComposed = graft.ops.DictRollup.sketchRollupAuto(
-      raw.filter(col("event_id") >= 0L || col("user_id") >= 0L))
-    assert(!viaKernelDf(sAutoComposed),
-      "no-dict sketch auto must take the row form on an unsupported composed input")
-    assert(sAutoComposed.orderBy("event_type").collect().toSeq == is)
-  }
-
-  test("inferred kernel auto selectors (no declared dictionary): kernel on a bare scan, generic on composed inputs") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-hrdinfa").toFile
-    dir.deleteOnExit()
-    val rows = (0 until 200).map { i =>
-      (i.toLong, (i % 7).toLong * 600000000L * 1000L, 1L + i % 9,
-        s"undeclared_${i % 11}", i * 0.25, "{}")
-    }
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(s"${dir.getAbsolutePath}/events.parquet")
-    val raw = graft.core.Tables.load(spark, dir.getAbsolutePath, "events")
-    def viaKernel(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.optimizedPlan.collectLeaves()
-        .exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
-    def sorted(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("hour_ts", "event_type").collect().toSeq
-    val foldRef = sorted(AnalyticsSurface.queries("agg_rollup_fold")(
-      spark, dir.getAbsolutePath))
-    val bare = graft.ops.DictRollup.foldRollupAuto(raw)
-    assert(viaKernel(bare), "no-dict fold auto must take the inferred kernel on a bare scan")
-    assert(sorted(bare) == foldRef)
-    // r16: filter-only composed inputs run ON the kernel (FilterExec
-    // residual re-evaluated in the scan loop); an unsupported
-    // predicate shape (OR / computed expression) still routes generic
-    val filtered = graft.ops.DictRollup.foldRollupAuto(
-      raw.filter(col("event_id") >= 0L))
-    assert(viaKernel(filtered),
-      "no-dict fold auto must take the kernel on a filter-only composed input")
-    assert(sorted(filtered) == foldRef)
-    val composed = graft.ops.DictRollup.foldRollupAuto(
-      raw.filter(col("event_id") % 2L >= 0L))
-    assert(!viaKernel(composed),
-      "no-dict fold auto must take the GENERIC form on an unsupported composed input")
-    assert(sorted(composed) == foldRef)
-    val incrRef = sorted(AnalyticsSurface.queries("agg_incremental_rollup")(
-      spark, dir.getAbsolutePath))
-    val incrBare = graft.ops.DictRollup.incrementalRollupAuto(raw)
-    assert(viaKernel(incrBare), "no-dict incremental auto must take the inferred kernel on a bare scan")
-    assert(sorted(incrBare) == incrRef)
-    val incrFiltered = graft.ops.DictRollup.incrementalRollupAuto(
-      raw.filter(col("event_id") >= 0L))
-    assert(viaKernel(incrFiltered),
-      "no-dict incremental auto must take the kernel on a filter-only composed input")
-    assert(sorted(incrFiltered) == incrRef)
-    val incrComposed = graft.ops.DictRollup.incrementalRollupAuto(
-      raw.filter(col("event_id") % 2L >= 0L))
-    assert(!viaKernel(incrComposed),
-      "no-dict incremental auto must take the GENERIC form on an unsupported composed input")
-    assert(sorted(incrComposed) == incrRef)
-    // a SELECTIVE supported filter agrees with the generic form on
-    // values, not just membership: drop the hour-0 rows
-    val cut = graft.ops.DictRollup.foldRollupAuto(raw.filter(col("ts") > 0L))
-    assert(viaKernel(cut), "selective raw-ts filter must stay on the kernel")
-    assert(sorted(cut) ==
-      sorted(graft.ops.Incremental.merge(graft.ops.Incremental.hourlyPartials(
-        graft.core.Tables.eventSeries(spark, dir.getAbsolutePath)
-          .filter(col("timestamp") > 0L)))))
+    assert(viaKernel(sFiltered))
+    assert(sFiltered.orderBy("event_type").collect().toSeq == is)
   }
 
   test("inferred kernel refuses loudly past openCatCap instead of paging silently") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-hrdcap").toFile
-    dir.deleteOnExit()
-    val rows = (0 until 200).map { i =>
-      (i.toLong, (i % 7).toLong * 3600000000L * 1000L, 1L + i % 9,
-        s"cat_$i", i * 0.25, "{}")
+    // the kernels build their codecs with OpenMaxCat (2^20, the packed
+    // key's category code width); a codec built with cap 8 shows the
+    // refusal without writing a million categories
+    def refusal(code: Int => Int): Unit = {
+      (0 until 8).foreach(code) // eight categories fit
+      val e = intercept[IllegalArgumentException](code(8))
+      assert(e.getMessage.contains("distinct categories in one partition") &&
+        e.getMessage.contains("generic form"), e.getMessage)
     }
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"${dir.getAbsolutePath}/events.parquet")
-    spark.conf.set("spark.graft.rollup.openCatCap", "8")
-    try {
-      val e = intercept[org.apache.spark.SparkException] {
-        AnalyticsSurface.queries("agg_rollup_fold_inferred")(
-          spark, dir.getAbsolutePath).collect()
-      }
-      val msg = e.getMessage + Option(e.getCause).map(_.getMessage).getOrElse("")
-      assert(msg.contains("openCatCap"), s"expected the loud cap refusal: $msg")
-    } finally spark.conf.unset("spark.graft.rollup.openCatCap")
+    val row = new graft.ops.DictRollup.OpenRowCodec(8)
+    refusal(i => row.code(s"cat_$i"))
+    // the columnar codec, over a plain-encoded string vector
+    val vec = new org.apache.spark.sql.execution.vectorized.OnHeapColumnVector(
+      9, org.apache.spark.sql.types.StringType)
+    (0 until 9).foreach(i => vec.putByteArray(i, s"cat_$i".getBytes("UTF-8")))
+    val columnar = new graft.ops.DictRollup.OpenCodec(8)
+    columnar.reset(vec)
+    try refusal(i => columnar.code(vec, i)) finally vec.close()
   }
 
   test("inferred kernel guards the packed hour index for non-default hourUs") {
@@ -386,23 +292,6 @@ class HourlyRollupDictSpec extends AnyFunSuite {
     }
     val msg = e.getMessage + Option(e.getCause).map(_.getMessage).getOrElse("")
     assert(msg.contains("overflows"), s"expected the packed-key overflow guard: $msg")
-  }
-
-  test("the kernels' hashInt salt specialization equals the generic xxhash64 salt-bytes chain") {
-    // the incremental kernels hash the 4-byte "incr" salt via
-    // XXH64.hashInt of its LE word instead of the bounds-checked byte
-    // walk; xxhash's 4-byte-tail path IS hashInt, but lock it against
-    // drift over random seeds (a divergence would silently flip split
-    // bits and break the merge-equals-rescan identity)
-    import org.apache.spark.sql.catalyst.expressions.XXH64
-    val salt = org.apache.spark.unsafe.types.UTF8String.fromString("incr")
-    val rnd = new scala.util.Random(7)
-    (0 until 100000).foreach { _ =>
-      val seed = rnd.nextLong()
-      assert(XXH64.hashUnsafeBytes(salt.getBaseObject, salt.getBaseOffset,
-          salt.numBytes, seed) ===
-        XXH64.hashInt(graft.ops.DictRollup.SaltIncrLE, seed))
-    }
   }
 
   test("columnar category codec survives parquet dictionary fallback (mixed-encoding column chunk)") {

@@ -120,7 +120,7 @@ class SessionizeTwinSpec extends AnyFunSuite {
       u100.mkString(","))
   }
 
-  test("sessionizeAuto picks the window form small and the segmented form past the threshold") {
+  test("window and segmented sessionize agree on a 100-row relation") {
     import spark.implicits._
     val ev = (1L to 20L).flatMap(u => (0 until 5).map(i =>
       (u, 1700000000000000L + i * 1000000L)))
@@ -129,18 +129,13 @@ class SessionizeTwinSpec extends AnyFunSuite {
       df.queryExecution.optimizedPlan.collect {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
       }.nonEmpty
-    // default threshold (1e8 rows): this 100-row relation -> window form
-    val small = AnalyticsSurface.sessionizeAuto(ev)
-    assert(hasWindowNode(small), "expected the window form below the threshold")
-    // force the threshold under the estimate -> segmented form
-    spark.conf.set("spark.graft.sessionize.segThresholdRows", "0")
-    try {
-      val seg = AnalyticsSurface.sessionizeAuto(ev)
-      assert(!hasWindowNode(seg), "expected the segmented form past the threshold")
-      // both forms answer identically, so the cutover is invisible
-      assert(small.orderBy("user_id").collect().toSeq ==
-        seg.orderBy("user_id").collect().toSeq)
-    } finally spark.conf.unset("spark.graft.sessionize.segThresholdRows")
+    val window = AnalyticsSurface.sessionizeWindow(ev)
+    val seg = AnalyticsSurface.sessionizeSegmented(ev)
+    assert(hasWindowNode(window) && !hasWindowNode(seg))
+    // docs/SCALING.md "Sessionize form selection" says which form to
+    // call at which scale; they answer identically
+    assert(window.orderBy("user_id").collect().toSeq ==
+      seg.orderBy("user_id").collect().toSeq)
   }
 
   test("window and bounded-aggregate top3 agree on tie-heavy data") {
