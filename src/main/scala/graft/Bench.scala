@@ -101,7 +101,7 @@ object Bench {
     // windowed funnel, now on the zero-row-shuffle recount shape
     "win_sessionize_seg", "agg_funnel_gap", "session_window_seg",
     // round-13 addition: the dictionary-declared hourly rollup (the
-    // one-pass bitmap-NDV plan a SeriesMeta.dictionary unlocks)
+    // one-pass bitmap-NDV plan a declared category dictionary unlocks)
     "agg_hourly_rollup_dict",
     // round-14 additions: the dict-kernel fold/incremental twins
     // (packed-key slot state, zero data-scale exchange) and the

@@ -29,32 +29,10 @@ import graft.engine.StatementExecutor.OneShotMaxRows
   * already exists (reference DP_IGNORE/DP_INSERT, src/timeseries.h:43).
   * Retention is enforced by [[TsCatalog.enforceRetention]] (parsed but
   * never enforced in the reference — no reaper exists there).
-  *
-  * `dictionary` (r13, beyond the reference's surface): an optional
-  * DECLARED category dictionary — the closed set of values a series'
-  * category/tag column may take, ordered; its index is the category's
-  * integer code. Production catalogs carry exactly this (enum/dict
-  * encodings); declaring it unlocks the all-primitive-key aggregation
-  * plans that a string category key forces out of HashAggregate's
-  * generated fast hash map (measured: the agg_hourly_rollup floor
-  * decomposition, BASELINE.md r12). Consumers:
-  * [[graft.queries.AnalyticsSurface.hourlyRollupWithDict]].
   */
 final case class SeriesMeta(
     retentionNs: Option[Long],
-    dupPolicy: String = "insert",
-    dictionary: Option[Seq[String]] = None) {
-  // dictionary entries round-trip through the catalog's minimal JSON
-  // writer — no escaping layer, so the values must not need one.
-  // Brackets are banned too: the reader's array capture is bracket-
-  // bounded, so a ']' inside a value would write fine and silently
-  // parse back as dictionary=None (round-trip data loss, no error)
-  dictionary.foreach(d => require(
-    d.nonEmpty && d.distinct.size == d.size &&
-      d.forall(v => v.nonEmpty &&
-        !v.exists(c => c == '"' || c == '\\' || c == '[' || c == ']')),
-    s"dictionary must be non-empty, distinct, quote/backslash/bracket-free: $d"))
-}
+    dupPolicy: String = "insert")
 
 /** Filesystem-backed database/series catalog.
   *
@@ -64,6 +42,7 @@ final case class SeriesMeta(
   *
   * {{{
   * <root>/<db>/<series>/_series.json          series options
+  * <root>/<db>/<series>/._series.json.<uuid>.tmp  a create in flight
   * <root>/<db>/<series>/data/bucket=<n>/part-....parquet
   * <root>/<db>/<series>/data/bucket=<n>/.part-....tmp     an append in flight
   * }}}
@@ -76,7 +55,8 @@ final case class SeriesMeta(
   * two-level seek as the reference's chunk window + sparse index
   * (src/index.c:65-109).
   * At 100 TB the bucket width is the knob that keeps partition counts
-  * sane; it is stored per-series so ingest jobs agree on it.
+  * sane; it is stored per series, and a catalog of another width
+  * refuses the series ([[seriesMeta]]).
   *
   * Two write paths, one per input shape: [[insert]] writes a DataFrame
   * in one Spark job (bulk loads, streaming micro-batches), [[append]]
@@ -146,8 +126,17 @@ final class TsCatalog(spark: SparkSession, val root: String,
     fs.exists(p) && fs.delete(p, true)
   }
 
+  private def metaPath(db: String, name: String) = new Path(seriesPath(db, name), "_series.json")
+
+  /** The options of a series, from its `_series.json`; None while it
+    * has none (never created, or dropped). [[writeMeta]] renames a
+    * complete file into place, so a file that is not exactly what it
+    * writes is damaged and fails the read with its path, never reading
+    * as defaults; so does a series stored at another bucket width than
+    * this catalog's, which would mis-prune every range and reap live
+    * buckets. */
   def seriesMeta(db: String, name: String): Option[SeriesMeta] = {
-    val p = new Path(seriesPath(db, name), "_series.json")
+    val p = metaPath(db, name)
     if (!fs.exists(p)) return None
     // exists→open is a TOCTOU window against a concurrent dropSeries
     // (CatalogSoakSpec caught it): a series deleted in between reads
@@ -156,30 +145,28 @@ final class TsCatalog(spark: SparkSession, val root: String,
       try fs.open(p)
       catch { case _: java.io.FileNotFoundException => return None }
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    // minimal JSON of our own writing: {"retentionNs":N|null,"dupPolicy":"s"}
-    val ret = "\"retentionNs\"\\s*:\\s*(null|-?\\d+)".r.findFirstMatchIn(text)
-      .map(_.group(1)).filter(_ != "null").map(_.toLong)
-    val pol = "\"dupPolicy\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(text)
-      .map(_.group(1)).getOrElse("insert")
-    // entries are quote-free by SeriesMeta's contract, so a flat
-    // quoted-string split parses the array exactly
-    val dict = "\"dictionary\"\\s*:\\s*\\[([^\\]]*)\\]".r
-      .findFirstMatchIn(text).map(_.group(1))
-      .map("\"([^\"]*)\"".r.findAllMatchIn(_).map(_.group(1)).toSeq)
-      .filter(_.nonEmpty)
-    Some(SeriesMeta(ret, pol, dict))
+    text match {
+      case MetaJson(ret, pol, width) =>
+        require(width.toLong == bucketNs,
+          s"$p records $width ns buckets; this catalog reads $bucketNs ns buckets")
+        Some(SeriesMeta(Option.when(ret != "null")(ret.toLong), pol))
+      case _ => throw new IllegalStateException(s"torn or incomplete series metadata at $p: '$text'")
+    }
   }
 
+  /** Writes a series' options to a hidden file and renames it into
+    * place, so a reader sees the whole file or none. */
   private def writeMeta(db: String, name: String, meta: SeriesMeta): Unit = {
-    val p = new Path(seriesPath(db, name), "_series.json")
-    val out = fs.create(p, true)
+    val p = metaPath(db, name)
+    val hidden = new Path(p.getParent, s".${p.getName}.${UUID.randomUUID()}.tmp")
+    val out = fs.create(hidden, true)
     val retJson = meta.retentionNs.map(_.toString).getOrElse("null")
-    val dictJson = meta.dictionary
-      .map(_.mkString("[\"", "\",\"", "\"]")).getOrElse("null")
     try out.write(
-      s"""{"retentionNs":$retJson,"dupPolicy":"${meta.dupPolicy}","dictionary":$dictJson,"bucketNs":$bucketNs}"""
+      s"""{"retentionNs":$retJson,"dupPolicy":"${meta.dupPolicy}","bucketNs":$bucketNs}"""
         .getBytes(StandardCharsets.UTF_8))
     finally out.close()
+    if (!fs.rename(hidden, p))
+      throw new java.io.IOException(s"createSeries: cannot rename $hidden to $p")
   }
 
   // ---- read / write (reference ts_insert src/timeseries.c:621-682) ----
@@ -203,8 +190,11 @@ final class TsCatalog(spark: SparkSession, val root: String,
     * listing of the paths they pass.
     */
   def readSeries(db: String, name: String,
-      range: Option[(Long, Long)] = None): DataFrame =
+      range: Option[(Long, Long)] = None): DataFrame = {
+    // a range prunes by bucket width: fail on a series of another width
+    range.foreach(_ => seriesMeta(db, name))
     readBuckets(db, name, buckets(db, name, range), range)
+  }
 
   /** The `bucket=` partitions of a series that `range` can touch (all
     * of them without a range), ascending, from one driver-side listing.
@@ -644,4 +634,9 @@ object TsCatalog {
 
   val PointSchemaWithBucket: StructType = PointSchema.add(
     StructField("bucket", LongType, nullable = true))
+
+  /** The one form [[TsCatalog.writeMeta]] writes: retention, policy,
+    * bucket width. */
+  private val MetaJson =
+    """\{"retentionNs":(null|-?\d+),"dupPolicy":"([^"]*)","bucketNs":(-?\d+)\}""".r
 }

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Dictionary-declared hourly rollup — the scale path a
-  * [[graft.catalog.SeriesMeta.dictionary]] unlocks.
+/** Dictionary-declared hourly rollup — the scale path a caller's
+  * declared category dictionary (the closed value set of the category
+  * column) unlocks.
   *
   * The generic agg_hourly_rollup must treat the category as an opaque
   * string and count distinct users through a (hour, type, user) fine

@@ -261,8 +261,8 @@ object AnalyticsSurface {
   }
 
   /** [[hourlyRollup]] with a DECLARED category dictionary
-    * ([[graft.catalog.SeriesMeta.dictionary]] — the closed value set
-    * a production catalog records for an enum column): delegates to
+    * (the closed value set a production catalog records for an enum
+    * column): delegates to
     * the [[graft.ops.DictRollup]] kernel — packed integer (hour,
     * code) key, one imperative pass, per-slot user bitmaps, a
     * state-scale merge. See that object's scaladoc for why BOTH
@@ -361,9 +361,9 @@ object AnalyticsSurface {
     "win_sessionize_agg" -> sessionizeAgg,
     "win_sessionize_seg" -> sessionizeSeg,
     "agg_hourly_rollup" -> hourlyRollup,
-    // the DICTIONARY-declared twin (same oracle): the catalog records
-    // the category column's closed value set (SeriesMeta.dictionary —
-    // here the events fixture's declared enum), unlocking the
+    // the DICTIONARY-declared twin (same oracle): the caller declares
+    // the category column's closed value set (here the events
+    // fixture's enum, passed as a literal), unlocking the
     // one-pass bitmap-NDV all-primitive-key plan the r12 floor
     // decomposition measured as this rollup's true floor. The generic
     // form stays the default for undeclared corpora.

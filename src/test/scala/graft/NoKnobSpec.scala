@@ -10,18 +10,24 @@ import org.scalatest.funsuite.AnyFunSuite
   * anywhere in the program, and the environment is read only by the
   * mains' run settings (`Bench`) and the one session builder
   * (`core.GraftSession`). A form an operator would pick by a knob is a
-  * form its caller calls directly. */
+  * form its caller calls directly. Tests, likewise, share one session
+  * ([[GraftSpark]]): a suite builds its own only where it says why. */
 class NoKnobSpec extends AnyFunSuite {
-
-  private val root = Paths.get("src", "main", "scala")
 
   private val envReaders = Set(
     Paths.get("graft", "Bench.scala"),
     Paths.get("graft", "core", "GraftSession.scala"))
 
-  /** (path relative to `root`, line number, line) of every program
-    * line, read from the source tree the build compiles. */
-  private lazy val lines: Seq[(Path, Int, String)] = {
+  /** The test fixture, and the two suites that need a session of their
+    * own (task retries; a plain builder under test). */
+  private val sessionBuilders = Set(
+    Paths.get("graft", "GraftSpark.scala"),
+    Paths.get("graft", "ops", "CheckpointRecoverySpec.scala"),
+    Paths.get("graft", "functions", "GraftExtensionsSpec.scala"))
+
+  /** (path relative to `root`, line number, line) of every line of the
+    * scala sources under `root`, as the build compiles them. */
+  private def linesUnder(root: Path): Seq[(Path, Int, String)] = {
     assert(Files.isDirectory(root), s"no source tree at ${root.toAbsolutePath}")
     val files = Files.walk(root)
     try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
@@ -32,12 +38,16 @@ class NoKnobSpec extends AnyFunSuite {
     }
   }
 
+  private lazy val lines = linesUnder(Paths.get("src", "main", "scala"))
+  private lazy val testLines = linesUnder(Paths.get("src", "test", "scala"))
+
   private def show(hits: Seq[(Path, Int, String)]) =
     hits.map { case (f, n, l) => s"$f:$n: ${l.trim}" }.mkString("\n")
 
   test("the source scan sees the whole program") {
     assert(lines.exists(_._1 == Paths.get("graft", "SparkEntry.scala")))
     assert(envReaders.forall(f => lines.exists(_._1 == f)))
+    assert(sessionBuilders.forall(f => testLines.exists(_._1 == f)))
   }
 
   test("no spark.graft.* conf is named in the program") {
@@ -48,6 +58,15 @@ class NoKnobSpec extends AnyFunSuite {
   test("only the mains' run settings and the session builder read the environment") {
     val hits = lines.filter { case (f, _, l) =>
       !envReaders(f) && (l.contains("sys.env") || l.contains("System.getenv"))
+    }
+    assert(hits.isEmpty, "\n" + show(hits))
+  }
+
+  test("tests build no session but the shared one and the two that say why") {
+    // split so this line is no hit of its own
+    val builder = "SparkSession" + ".builder"
+    val hits = testLines.filter { case (f, _, l) =>
+      !sessionBuilders(f) && l.contains(builder)
     }
     assert(hits.isEmpty, "\n" + show(hits))
   }

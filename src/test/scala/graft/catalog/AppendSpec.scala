@@ -11,22 +11,15 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
 import graft.engine.{ExecResult, StatementExecutor, TsSession}
 
 /** `TsCatalog.append`, the driver-side write path of a wire INSERT:
   * its files are the files a write job makes, a crash mid-write leaves
   * nothing a reader sees, and concurrent appends never collide. */
-class AppendSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AppendSpec extends AnyFunSuite with GraftSpark {
 
   private val BucketNs = TsCatalog.DefaultBucketNs
   private val Base = Math.floorDiv(1700000000000000000L, BucketNs) * BucketNs

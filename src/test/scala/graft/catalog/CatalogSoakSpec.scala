@@ -4,8 +4,9 @@ import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Seeded multi-thread catalog soak (the ServerSoakSpec discipline
   * applied to the DDL surface): inserters, a full-catalog maintenance
@@ -30,13 +31,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * long-lived series holds exactly the rows its writer committed
   * (count AND value-sum); churn series are absent at the end; the
   * sweep actually compacted retired generations. */
-class CatalogSoakSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CatalogSoakSpec extends AnyFunSuite with GraftSpark {
 
   test("seeded concurrent DDL + maintenance + ingest soak keeps every committed row") {
     import spark.implicits._

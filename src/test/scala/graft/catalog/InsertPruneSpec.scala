@@ -2,8 +2,9 @@ package graft.catalog
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Ignore-policy insert pruning: the existing-side read must prune to
   * the batch's bucket span without ever collecting an unbounded set of
@@ -12,14 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the exact bucket set; wide batches degrade to min/max range bounds
   * on the ordered bucket ids.
   */
-class InsertPruneSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class InsertPruneSpec extends AnyFunSuite with GraftSpark {
 
   // 1 µs buckets make "thousands of buckets" cheap to span
   private def freshCatalog(): TsCatalog = new TsCatalog(

@@ -2,17 +2,12 @@ package graft.catalog
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Catalog-wide maintenance sweep (retention + compaction). */
-class MaintenanceSpec extends AnyFunSuite {
+import graft.GraftSpark
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+/** Catalog-wide maintenance sweep (retention + compaction). */
+class MaintenanceSpec extends AnyFunSuite with GraftSpark {
 
   test("sweep reaps expired buckets and compacts fragmented ones across all series") {
     import spark.implicits._

@@ -2,9 +2,11 @@ package graft.core
 
 import java.util.concurrent.Executors
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** The r12 verdict's cross-release soak: two CONCURRENT funnel-family
   * computations, each wrapped in its own [[EscapedCaches.scoped]]
@@ -12,14 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * releases — the process-global registry did exactly that (one
   * query's release() drained every in-flight query's persists;
   * recompute-only, but a p99 cliff under server concurrency). */
-class EscapedCachesSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EscapedCachesSpec extends AnyFunSuite with GraftSpark {
 
   /** A small 3-step-funnel-shaped events relation; `salt` varies the
     * data so the two concurrent clients build DISTINCT plans (distinct

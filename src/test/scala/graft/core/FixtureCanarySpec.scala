@@ -1,7 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Fixture-schema canary (r6 postmortem: the driver regenerated
   * `events.ts` from TIMESTAMP(NANOS) to TIMESTAMP(MICROS) and 47 gate
@@ -10,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * projection must yield a series spanning DAYS (the fixture is a
   * month of data) — a wrong-unit read compresses or stretches the span
   * by 1000× and fails loudly here with a named cause. */
-class FixtureCanarySpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FixtureCanarySpec extends AnyFunSuite with GraftSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
   private val DAY_US = 86400000000L

@@ -9,26 +9,19 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.graft.ListenerBridge.jobsOf
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
 import graft.catalog.TsCatalog
 
 /** Wire reads inside the driver-row bound (`TsCatalog.localPoints`):
   * a plain scan or `latest` runs no Spark job and answers what a Spark
   * scan of the same range answers; one row past the bound, the
   * statement keeps its Spark plan. */
-class DriverReadSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DriverReadSpec extends AnyFunSuite with BeforeAndAfterAll with GraftSpark {
 
   private val root = Files.createTempDirectory("graft-driver-read").toString
   private lazy val catalog = new TsCatalog(spark, root)

@@ -2,10 +2,10 @@ package graft.engine
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
 import graft.catalog.{SeriesMeta, TsCatalog}
 
 /** Engine integration spec mirroring the reference's storage tests
@@ -13,14 +13,7 @@ import graft.catalog.{SeriesMeta, TsCatalog}
   * series: 90 points, value = i, seeded gaps of 0-115 ms (seed 47,
   * INTERVAL=115000 µs — tests/timeseries_test.c:8,409,422-429).
   */
-class ExecutorSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExecutorSpec extends AnyFunSuite with BeforeAndAfterAll with GraftSpark {
 
   private val tmpRoot = Files.createTempDirectory("graft-exec-spec").toString
   private val FixedNow = 1700000100000000000L

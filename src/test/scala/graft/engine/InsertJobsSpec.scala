@@ -6,10 +6,10 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.graft.ListenerBridge.{jobDescriptionsOf, jobsOf}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
 import graft.catalog.{SeriesMeta, TsCatalog}
 
 /** The INSERT cost contract: a wire INSERT runs no Spark job (under
@@ -17,14 +17,7 @@ import graft.catalog.{SeriesMeta, TsCatalog}
   * on the driver) and adds one parquet file per bucket it touches; a DataFrame insert
   * counts its rows in its one write job, and the count comes back even
   * when nothing is written. */
-class InsertJobsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class InsertJobsSpec extends AnyFunSuite with GraftSpark {
 
   private val BucketNs = TsCatalog.DefaultBucketNs
   private val Base = Math.floorDiv(1700000000000000000L, BucketNs) * BucketNs

@@ -2,25 +2,18 @@ package graft.engine
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
 import graft.catalog.{SeriesMeta, TsCatalog}
 
 /** `latest` reads the newest in-range bucket first and falls back to
   * the rest only when WHERE empties it; every answer must equal the
   * full-scan oracle `orderBy(desc(timestamp)).limit(1)` over the same
   * range and WHERE. */
-class LatestSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LatestSpec extends AnyFunSuite with BeforeAndAfterAll with GraftSpark {
 
   private val root = Files.createTempDirectory("graft-latest-spec").toString
   private lazy val catalog = new TsCatalog(spark, root)

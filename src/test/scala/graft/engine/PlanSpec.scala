@@ -2,9 +2,9 @@ package graft.engine
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
 import graft.catalog.{SeriesMeta, TsCatalog}
 
 /** Physical-plan regression guards (see docs/PLANS.md): these lock the
@@ -12,14 +12,7 @@ import graft.catalog.{SeriesMeta, TsCatalog}
   * that silently turns a pruned scan into a full scan (or an equality
   * join into a cross product) fails CI instead of only showing up as a
   * cluster bill. */
-class PlanSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanSpec extends AnyFunSuite with GraftSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -150,9 +143,7 @@ class PlanSpec extends AnyFunSuite {
   test("bucketed join reads bucket-aligned — no shuffle exchange feeds the join") {
     // pin SMJ (a broadcast side would also be exchange-free, but the
     // claim under test is the bucket layout alignment)
-    val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val (ot, lt) = graft.ops.Bucketed.ensurePair(spark, sfDir)
       val joined = spark.table(lt).join(spark.table(ot),
         org.apache.spark.sql.functions.col("l_orderkey") ===
@@ -161,8 +152,6 @@ class PlanSpec extends AnyFunSuite {
       assert(p.contains("SortMergeJoin"), p.take(3000))
       assert(!p.contains("Exchange"), // no shuffle above either scan
         p.take(3000))
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
     }
   }
 

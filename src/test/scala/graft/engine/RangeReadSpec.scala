@@ -2,24 +2,17 @@ package graft.engine
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.graft.ListenerBridge.jobsOf
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
 import graft.catalog.TsCatalog
 
 /** A plain ranged SELECT inside one bucket runs no Spark job from
   * execute to the last streamed row, and every plain SELECT answers in
   * timestamp order whatever order its points were inserted in. */
-class RangeReadSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RangeReadSpec extends AnyFunSuite with BeforeAndAfterAll with GraftSpark {
 
   private val root = Files.createTempDirectory("graft-range-read").toString
   private lazy val catalog = new TsCatalog(spark, root)

@@ -1,18 +1,12 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** sampleByFn's delta/rate selectors: hand-computed windows, the
   * struct tie policy at duplicate timestamps, single-point NULL rate. */
-class SampleFnSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SampleFnSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

@@ -1,19 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** bitmap_ndv must equal count(DISTINCT _) exactly on every integral
   * shape — and fail LOUDLY past its documented range cap rather than
   * degrade. */
-class BitmapNdvSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BitmapNdvSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

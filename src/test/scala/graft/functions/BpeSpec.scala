@@ -1,21 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, expr}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
+
+import graft.GraftSpark
 
 /** Learned-merge-table BPE: determinism of learning, equivalence of
   * the rank-ordered sweep with canonical iterative BPE, and parity of
   * the native expression with the oracle's replace-chain formulation
   * (replayed through Spark SQL's own replace()). */
-class BpeSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

@@ -1,19 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Native dot_dec vs the interpreted aggregate(zip_with(...)) SQL form:
   * values must be BIT-identical (the DuckDB oracles compute the lambda
   * form, so any drift breaks the correctness gate). */
-class DotDecSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DotDecSpec extends AnyFunSuite with GraftSpark {
 
   private val lambdaForm =
     """CAST(aggregate(zip_with(a, b,

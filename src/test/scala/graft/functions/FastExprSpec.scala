@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Parity locks for the r11 native hot-path expressions:
   * h60_long must be bit-identical to the composed
@@ -11,13 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * hash-split gate depends on the VALUES), and json_long must agree
   * with get_json_object on integer sidecar fields across generated
   * JSON shapes (plus its documented NULL contract on the rest). */
-class FastExprSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FastExprSpec extends AnyFunSuite with GraftSpark {
 
   test("h60_long == legacy conv/substring/md5 chain == h60Scala, 2000 random strings") {
     import spark.implicits._

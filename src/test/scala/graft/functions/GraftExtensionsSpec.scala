@@ -16,11 +16,14 @@ import graft.plans.SampleWindowPrune
   * the moment it exists. */
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  /** A freshly built plain session. getOrCreate would REUSE the
-    * suite-shared session, so clear the default and active sessions,
-    * build fresh (same underlying SparkContext), and restore them
+  /** A freshly built plain session: its own builder, because a plain
+    * builder is what this suite tests. getOrCreate would REUSE the
+    * shared session, so clear the default and active sessions, build
+    * fresh over the shared SparkContext (started first, so suite order
+    * never makes this builder's master the JVM's), and restore them
     * afterwards. */
   private def withPlainSession(f: SparkSession => Unit): Unit = {
+    graft.TestSpark.session
     val priorDefault = SparkSession.getDefaultSession
     val priorActive = SparkSession.getActiveSession
     SparkSession.clearDefaultSession(); SparkSession.clearActiveSession()

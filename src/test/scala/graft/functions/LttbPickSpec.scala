@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** lttb_pick — the flat-buffer argmax that replaced max(struct(k,-t,v))
   * in sampleByLttb: bit-equivalence to the struct form on random data
@@ -10,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * coverage across many partitions, null-skip totality, and the
   * literal-array vs broadcast-join path equivalence of the enclosing
   * operator. */
-class LttbPickSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LttbPickSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

@@ -1,20 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
 import graft.ops.{Dedup, TextFns}
 
 /** Native minhash_sig expression: bit-parity with the exploded groupBy
   * formulation, the byte-level h60 fast path, null semantics, codegen. */
-class MinHashSigSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MinHashSigSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 
@@ -60,8 +54,7 @@ class MinHashSigSpec extends AnyFunSuite {
     // codegen.fallback=false: a doGenCode that fails to compile aborts
     // the query instead of silently degrading to interpreted eval —
     // without it this test would pass with dead generated code
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    withConf("spark.sql.codegen.fallback" -> "false") {
       val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .selectExpr("doc_id", "minhash_sig(shingles3(text), 8) AS s")
       val codegenned = df.queryExecution.executedPlan.collect {
@@ -69,7 +62,7 @@ class MinHashSigSpec extends AnyFunSuite {
       }
       assert(codegenned.nonEmpty, df.queryExecution.executedPlan.toString)
       assert(df.count() == 500)
-    } finally spark.conf.unset("spark.sql.codegen.fallback")
+    }
   }
 
   test("k must be a plan-time literal") {

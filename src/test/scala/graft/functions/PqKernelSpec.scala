@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Differential lock for the fused PQ kernels (optimization r16):
   * PqCodes / PqAdcTables / IvfProbeCells must be BIT-IDENTICAL to the
@@ -14,13 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * smallest cid). The fixture plants a zero vector, a vector whose
   * FIRST SUBSPACE slice is all-zero (null sub-cosine with a live
   * coarse cosine), and exact duplicates (guaranteed cosine ties). */
-class PqKernelSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PqKernelSpec extends AnyFunSuite with GraftSpark {
 
   private val dim = 16
   private val nSub = 4

@@ -1,20 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, expr}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Native quality_scan expression: differential parity against the
   * builtin array-function composition that defines its semantics
   * (regexp tokenizer + array_distinct over joined grams + per-token
   * frequency max), on real corpus data and crafted edge cases. */
-class QualityScanSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QualityScanSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

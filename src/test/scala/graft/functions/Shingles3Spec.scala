@@ -1,17 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Native shingles3 expression: semantics, codegen path, SQL
   * registration. */
-class Shingles3Spec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Shingles3Spec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 
@@ -45,12 +40,9 @@ class Shingles3Spec extends AnyFunSuite {
   }
 
   test("works via SparkSessionExtensions injection") {
-    val s2 = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // a plain builder: the service-loaded extension's function resolves
-    val got = s2.sql("SELECT shingles3('p q r s') AS s").collect()(0)
+    // no extension conf on the session: the service-loaded extension's
+    // function resolves (GraftExtensionsSpec covers a plain builder)
+    val got = spark.sql("SELECT shingles3('p q r s') AS s").collect()(0)
       .getSeq[String](0)
     assert(got == Seq("p q r", "q r s"))
   }

@@ -1,19 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** sum_micro must be BIT-IDENTICAL to the decimal(30,6) sum it
   * replaces — on random values, negative values, rounding-boundary
   * dyadics, nulls, and across repartitionings (order independence). */
-class SumMicroSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SumMicroSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

@@ -1,20 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, expr}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 
+import graft.GraftSpark
+
 /** Native text_stats_scan expression: differential parity against the
   * five-regex builtin composition it replaced, on real corpus data and
   * on generated edge-case strings. */
-class TextStatsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TextStatsSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

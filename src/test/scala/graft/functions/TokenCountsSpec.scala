@@ -1,19 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** The fused counting expressions (token_counts, ngram_counts,
   * norm_ngram_counts, shingle_hashes3): semantics locked to their
   * unfused builtin/regex compositions, plus edge cases the corpus gate
   * cannot exercise. */
-class TokenCountsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TokenCountsSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

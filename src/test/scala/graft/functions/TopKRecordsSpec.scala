@@ -1,19 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** TopKRecords edge semantics the corpus gate cannot exercise: the
   * NaN-skip rule (class doc — under the sign flip a NaN would rank
   * LAST while the window twin ranks it FIRST; it must enter neither),
   * null skips, and tie multiplicity. */
-class TopKRecordsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TopKRecordsSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

@@ -1,18 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, expr}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
+
 /** Native word_ngrams: differential parity against the builtin
   * transform(sequence(...)) composition that defines its semantics. */
-class WordNgramsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WordNgramsSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

@@ -1,17 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Rolling z-score anomalies: planted spike flagged, steady baseline
   * and warm-up rows never flagged, verdicts causal (trailing frame). */
-class AnomalySpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AnomalySpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

@@ -1,20 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Sketch-tier aggregates: error bounds against the exact operators on
   * the driver testdata — the check that replaces a cross-engine oracle
   * (sketch internals are engine-specific). */
-class ApproxSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ApproxSpec extends AnyFunSuite with GraftSpark {
 
   private val sfDir = "/root/testdata/sf0.01"
 

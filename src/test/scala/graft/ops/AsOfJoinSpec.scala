@@ -1,18 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
+
 /** As-of join semantics: inclusive boundary, per-key isolation,
   * null when no prior right row, brute-force parity, no cross product. */
-class AsOfJoinSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AsOfJoinSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

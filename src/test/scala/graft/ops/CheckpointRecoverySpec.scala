@@ -28,11 +28,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Recovery procedure: docs/RECOVERY.md.
   *
-  * This suite needs task retries, so it manages its OWN SparkContext
-  * (`local[4,2]`) — the shared-session suites run sequentially in this
-  * forked JVM (testForkedParallel is off), so stopping the active
-  * context here and rebuilding is safe: later suites' lazy
-  * getOrCreate simply builds a fresh one. */
+  * This suite needs task retries, so it manages its OWN SparkContext:
+  * the served profile with `local[4,2]`. Suites run one at a time in
+  * one forked JVM, so stopping the shared context here is safe: the
+  * next suite's [[graft.TestSpark.session]] builds a fresh one. */
 class CheckpointRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -42,11 +41,9 @@ class CheckpointRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
     super.beforeAll()
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .foreach(_.stop())
-    spark = SparkSession.builder()
-      .master("local[4,2]") // 2 task attempts: retry-enabled local mode
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    // its own builder: 2 task attempts need a retry-enabled local master
+    spark = (graft.TestSpark.Conf + ("spark.master" -> "local[4,2]"))
+      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
   }
 

@@ -1,18 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Decontam.overlap semantics on hand-built fixtures: known shared
   * n-grams, gram multiplicity, short docs, and the no-cross-product
   * plan guarantee. */
-class DecontamSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DecontamSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

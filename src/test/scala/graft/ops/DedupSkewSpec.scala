@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** The hot-band guard (minhashBandCandidates' maxBandGroup): a planted
   * template family makes every LSH band one hot key — the single
@@ -12,14 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * downstream clustering (hub stars span each family), (3) the
   * 10k-member scale probe the r8 VERDICT asked for: bounded candidates,
   * one exact cluster, sane wall time. */
-class DedupSkewSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DedupSkewSpec extends AnyFunSuite with GraftSpark {
 
   private val template =
     "the quick brown fox jumps over the lazy dog while seventeen " +

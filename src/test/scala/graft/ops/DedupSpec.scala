@@ -1,16 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Dedup operators on a fixture with planted duplicates. */
-class DedupSpec extends AnyFunSuite {
+import graft.GraftSpark
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+/** Dedup operators on a fixture with planted duplicates. */
+class DedupSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

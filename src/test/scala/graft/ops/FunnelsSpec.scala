@@ -1,17 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Funnels: strictly-after chaining, earliest-frontier policy,
   * same-timestamp exclusion; retention cohort/offset arithmetic. */
-class FunnelsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FunnelsSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

@@ -1,17 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Graph.pagerank: centrality ordering on hand graphs, symmetry,
   * approximate mass conservation under floor rounding. */
-class GraphSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraphSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

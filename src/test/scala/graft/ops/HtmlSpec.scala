@@ -1,18 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
+
 /** HTML stripping: payload removal, entity order, tag spacing; link
   * extraction feeding the url canonical chain. */
-class HtmlSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HtmlSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

@@ -1,21 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Incremental combine/finalize: any hash split of the input merges to
   * the bit-identical single-pass rollup (decimal associativity), the
   * iterative state fold the scaladoc promises works without retaining
   * historical partials, and the shared-scan split variant equals
   * per-batch partials. */
-class IncrementalSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IncrementalSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

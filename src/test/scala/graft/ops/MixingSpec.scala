@@ -1,18 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Mixing.plan invariants on hand-built strata: the binding stratum
   * takes everything, takes never exceed supply, achieved mixture
   * matches targets within integer-division slack. */
-class MixingSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MixingSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

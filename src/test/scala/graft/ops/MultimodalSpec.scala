@@ -1,19 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Multimodal decode: real BMP/PPM/WAV header parsing over planted
   * payloads, partition-batch execution, frame sampling, and graceful
   * handling of malformed bytes. */
-class MultimodalSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MultimodalSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

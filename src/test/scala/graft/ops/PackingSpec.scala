@@ -1,20 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
+
 /** Packing.sequenceSpans: the two-level scan equals the naive global
   * window bit-for-bit, straddles and zero-token docs behave, and the
   * plan's only unpartitioned window runs over the shard relation. */
-class PackingSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PackingSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

@@ -1,17 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Pca: eigensolver on hand matrices, verdicts on a known-rank
   * synthetic corpus, exact-column order independence. */
-class PcaSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PcaSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

@@ -1,20 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Differential spec: the bounded-memory sort-rank percentile operator
   * must equal Spark's own percentile() aggregate (the semantics
   * reference it replaced) on random data INCLUDING null values and
   * degenerate group sizes. */
-class PercentilesSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PercentilesSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

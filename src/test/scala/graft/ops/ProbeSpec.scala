@@ -1,22 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** The linear-probe trainer: learnability on a separable synthetic
   * corpus, determinism (bit-identical weights across runs and
   * partitionings — the order-independence the integer gradient sums
   * exist for), the band-structure signs on a Gopher-like fixture, and
   * totality requirements. */
-class ProbeSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ProbeSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

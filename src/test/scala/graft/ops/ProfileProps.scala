@@ -1,21 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
+
+import graft.GraftSpark
 
 /** Differential fuzz for the profile rework (r11: two-phase
   * fine-group + bitmap branches replaced the Expand-planning
   * countDistinct shape): every (n_rows, n_null, n_distinct, min, max)
   * must equal a naive driver-side recomputation on generated data
   * heavy in nulls, duplicates, and negative/extreme values. */
-object ProfileProps extends Properties("Profile") {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+object ProfileProps extends Properties("Profile") with GraftSpark {
 
   private val genLong: Gen[Option[Long]] = Gen.frequency(
     3 -> Gen.const(None),

@@ -1,17 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Table profiling: per-column counts, exact distincts, numeric
   * min/max, null handling, single-aggregate shape. */
-class ProfileSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ProfileSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

@@ -1,18 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
+
 /** Binned range join: parity with the direct |diff| <= tol definition,
   * exact boundary behavior, no duplicate pairs, equality-join plan. */
-class RangeJoinSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RangeJoinSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

@@ -1,18 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
+
 /** Deterministic hash sampling: reproducibility, subset invariance,
   * stratum rates, namespace independence, shuffle-free plan. */
-class SamplingSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SamplingSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

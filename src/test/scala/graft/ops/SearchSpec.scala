@@ -1,17 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Search.bm25TopK: hand-checked ranking, idf surrogate behavior,
   * partitioning independence. */
-class SearchSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SearchSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

@@ -1,19 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** SeriesStats: autocorrelation signs on constructed series, MAD
   * robustness vs the mean/stddev detector, histogram-quantile
   * interpolation arithmetic on hand-packed buckets. */
-class SeriesStatsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SeriesStatsSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

@@ -1,18 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
+
 /** Similarity search: brute-force correctness on a planted fixture and
   * LSH recall against the brute-force baseline. */
-class SimilaritySpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SimilaritySpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

@@ -1,18 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
+
 /** Salted two-phase aggregation: identical results to the direct
   * groupBy, with the merge spread over nSalts reducers. */
-class SkewSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SkewSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 
@@ -57,25 +52,14 @@ class SkewSpec extends AnyFunSuite {
     // stage materializes. Thresholds are lowered so the fixture-scale
     // hot key qualifies; the assertion is on the FINAL adaptive plan.
     import spark.implicits._
-    val priors = Seq(
-      "spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.coalescePartitions.enabled",
-      "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    def restore(): Unit = priors.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.0")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16KB")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf(
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val left = (0 until 60000).map(i => ("hot", i.toLong)) ++
         (0 until 50).map(i => (s"k$i", i.toLong))
       val right = Seq(("hot", 1.0)) ++ (0 until 50).map(i => (s"k$i", i * 1.0))
@@ -87,6 +71,6 @@ class SkewSpec extends AnyFunSuite {
       joined.collect()
       val finalPlan = joined.queryExecution.executedPlan.toString
       assert(finalPlan.contains("skew=true"), finalPlan.take(3000))
-    } finally restore()
+    }
   }
 }

@@ -1,17 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Rarity-weighted term scoring: hand-computed parity, normalization,
   * tie-breaks, degenerate docs, tf-idf ordering sanity. */
-class TermsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TermsSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

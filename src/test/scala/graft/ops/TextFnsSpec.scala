@@ -1,18 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
+
 /** PII scrubbing: pattern coverage, redaction order, and the
   * no-PII-untouched identity. */
-class TextFnsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TextFnsSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

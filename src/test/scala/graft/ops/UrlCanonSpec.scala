@@ -1,18 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
+
 /** UrlCanon: rule-by-rule canonicalization cases, grain invariants,
   * and the scan-speed plan shape. */
-class UrlCanonSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class UrlCanonSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

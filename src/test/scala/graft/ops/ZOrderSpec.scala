@@ -1,20 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** ZOrder: interleave arithmetic vs a bit-twiddling reference,
   * SQL-rendering parity, and the MEASURED locality claim — z-clustered
   * partitions bound both dimensions tightly where a single-column
   * range layout bounds only the sorted one. */
-class ZOrderSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ZOrderSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

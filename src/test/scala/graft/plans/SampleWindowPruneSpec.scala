@@ -2,24 +2,17 @@ package graft.plans
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
 import graft.engine.SeriesOps
 
 /** SampleWindowPrune: a label-range filter over SAMPLE BY prunes the
   * aggregation INPUT (down to the parquet scan on a physical timestamp
   * column) without changing any result. */
-class SampleWindowPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC") // NTZ cast exactness
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SampleWindowPruneSpec extends AnyFunSuite with BeforeAndAfterAll with GraftSpark {
 
   private val tmp = Files.createTempDirectory("graft-prune-spec").toString
 
@@ -38,11 +31,8 @@ class SampleWindowPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** The rule is in every session (GraftExtensions); the rule-off
     * baseline excludes it by name, the way any Spark rule is turned off.
     * `f` must plan (and run) inside the scope. */
-  private def withoutRule[A](f: => A): A = {
-    val key = "spark.sql.optimizer.excludedRules"
-    spark.conf.set(key, SampleWindowPrune.ruleName)
-    try f finally spark.conf.unset(key)
-  }
+  private def withoutRule[A](f: => A): A =
+    withConf("spark.sql.optimizer.excludedRules" -> SampleWindowPrune.ruleName)(f)
 
   test("rule-on results are bit-identical to rule-off, all bound shapes") {
     val base = SeriesOps.sampleBy(series, I)

@@ -2,9 +2,10 @@ package graft.queries
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** The dictionary-declared hourly rollup (one-pass bitmap-NDV over
   * integer category codes — the r12 floor decomposition's shape) must
@@ -12,14 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * fixed-point sums, on fuzz data with ties, hour-boundary timestamps
   * and value shapes the sf fixtures don't pin; out-of-dictionary
   * categories surface as the documented NULL-category quarantine row. */
-class HourlyRollupDictSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HourlyRollupDictSpec extends AnyFunSuite with GraftSpark {
 
   private val dict = Seq("signup", "purchase", "view", "click", "error")
 

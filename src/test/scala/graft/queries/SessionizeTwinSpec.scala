@@ -2,8 +2,9 @@ package graft.queries
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Differential fuzz of the sessionize twins: the window (lag +
   * grouped sum) and grouped-array (collect_list -> sort_array ->
@@ -12,14 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * timestamps inside one user (ties must break no session), gaps at
   * EXACTLY the 30 min boundary (strictly-greater rule), single-event
   * users, and one user whose events all land on one timestamp. */
-class SessionizeTwinSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SessionizeTwinSpec extends AnyFunSuite with GraftSpark {
 
   test("window and grouped-array sessionize agree on adversarial shapes") {
     import spark.implicits._

@@ -5,12 +5,12 @@ import java.nio.file.Files
 
 import scala.collection.immutable.TreeMap
 
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
 import graft.catalog.TsCatalog
 import graft.engine.StatementExecutor
 import graft.protocol.{Wire, WireResponse}
@@ -32,14 +32,7 @@ import graft.protocol.{Wire, WireResponse}
   * every assertion is session-local, so any schedule that fails keeps
   * failing under retry with the same seed in the same neighborhood).
   */
-class ServerSoakSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ServerSoakSpec extends AnyFunSuite with BeforeAndAfterAll with GraftSpark {
 
   private val tmpRoot = Files.createTempDirectory("graft-server-soak").toString
   private lazy val catalog = new TsCatalog(spark, tmpRoot)

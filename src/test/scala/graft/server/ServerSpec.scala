@@ -3,11 +3,11 @@ package graft.server
 import java.net.Socket
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.graft.ListenerBridge.jobsOf
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
 import graft.catalog.TsCatalog
 import graft.engine.{ErrCode, StatementExecutor}
 import graft.protocol.{Wire, WireResponse}
@@ -16,14 +16,7 @@ import graft.protocol.{Wire, WireResponse}
   * the server runs in its own threads, the client talks over a socket
   * with nothing shared but bytes (the in-JVM analog of the reference's
   * server + tcc client pair, src/server.c + src/tcc.c). */
-class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ServerSpec extends AnyFunSuite with BeforeAndAfterAll with GraftSpark {
 
   private val tmpRoot = Files.createTempDirectory("graft-server-spec").toString
   private lazy val catalog = new TsCatalog(spark, tmpRoot)

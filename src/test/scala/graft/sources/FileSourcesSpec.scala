@@ -2,20 +2,15 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
+
 /** JSONL/CSV interchange: round-trip identity, corrupt-record
   * quarantine (PERMISSIVE) and FAILFAST rejection. */
-class FileSourcesSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FileSourcesSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

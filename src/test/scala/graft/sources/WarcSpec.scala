@@ -2,20 +2,15 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** WARC framing walk, gzip member streams, HTTP parsing, malformed
   * tolerance — the parser side; the builder/oracle arithmetic is
   * locked cross-engine by the warc_* gate keys. */
-class WarcSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WarcSpec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

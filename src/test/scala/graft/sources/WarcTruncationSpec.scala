@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.GraftSpark
 
 /** Seeded truncation fuzz of the WARC walk's two-level tolerance (the
   * r11 verdict's untested edge): crawl files — plain AND per-record
@@ -12,13 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * member), truncated Content-Length blocks (frame cut mid block),
   * cuts inside the record separator, cuts inside HTTP headers and
   * chunked bodies, and the empty/1-byte degenerates. */
-class WarcTruncationSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WarcTruncationSpec extends AnyFunSuite with GraftSpark {
 
   test("seeded byte-offset truncation: prefix property, one malformed tail, no throw") {
     import spark.implicits._

@@ -2,23 +2,16 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSpark
 import graft.catalog.TsCatalog
 
 /** Structured Streaming ingest: micro-batch appends into the series
   * catalog (WAL/chunk analog, SURVEY.md §2.6) and stream/batch parity
   * of the windowed aggregation. */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll with GraftSpark {
 
   private val tmp = Files.createTempDirectory("graft-stream-spec").toString
 
