@@ -90,28 +90,23 @@ object Bench {
     "dedup_recall_minhash_capped", "sim_recall_incremental",
     "agg_bitmap_distinct",
     // the maintained fold without its verification harness — the
-    // apples-to-apples twin of agg_incremental_rollup — and the
-    // grouped-array sessionize twin (window-sort class differential)
-    "agg_rollup_fold", "win_sessionize_agg",
+    // apples-to-apples twin of agg_incremental_rollup
+    "agg_rollup_fold",
     // round-11 close: crawl-container ingest (WARC framing walk +
     // gzip members + HTTP parse, mm-class parse-vs-closed-form pair)
     "warc_extract",
     // round-12 additions: the bounded-state segmented sessionize (the
-    // scale path past the grouped-array twin's OOM boundary) and the
-    // windowed funnel, now on the zero-row-shuffle recount shape
+    // scale path past a whole-user grouped array's OOM boundary) and
+    // the windowed funnel, now on the zero-row-shuffle recount shape
     "win_sessionize_seg", "agg_funnel_gap", "session_window_seg",
     // round-13 addition: the dictionary-declared hourly rollup (the
     // one-pass bitmap-NDV plan a declared category dictionary unlocks)
     "agg_hourly_rollup_dict",
-    // round-14 additions: the dict-kernel fold/incremental twins
-    // (packed-key slot state, zero data-scale exchange) and the
-    // production-shaped sketch-only rollup
-    "agg_rollup_fold_dict", "agg_incremental_rollup_dict",
+    // round-14 addition: the production-shaped sketch-only rollup
     "agg_sketch_rollup",
-    // the columnar dict kernels — the r14 falsification outcome: the
+    // the columnar dict kernel — the r14 falsification outcome: the
     // r13 "projection floor" was the row-decode boundary
-    "agg_hourly_rollup_dict_col", "agg_rollup_fold_dict_col",
-    "agg_incremental_rollup_dict_col", "agg_sketch_rollup_col",
+    "agg_hourly_rollup_dict_col",
     // late-r14: corpus-trained BPE merge table (data-scale word count,
     // vocab-bounded driver fold, oracle replays the greedy loop)
     "text_bpe_train",

@@ -353,8 +353,9 @@ final class TsCatalog(spark: SparkSession, val root: String,
   }
 
   /** Append a batch the driver already holds (a wire INSERT), honoring
-    * the series' duplication policy; returns the number of points
-    * written.
+    * the duplication policy of `meta` — the series' options as the
+    * caller read them with [[seriesMeta]], so one statement reads
+    * `_series.json` once; returns the number of points written.
     *
     * No Spark job under "insert": the rows are sorted by timestamp
     * (stably, so duplicates keep statement order), grouped by
@@ -376,8 +377,8 @@ final class TsCatalog(spark: SparkSession, val root: String,
     * buckets the batch touches, restricted to its [min, max]; past the
     * driver-row bound, one Spark job collects them instead.
     */
-  def append(db: String, name: String, rows: Seq[(Long, Double)]): Long = {
-    val meta = seriesMeta(db, name).getOrElse(SeriesMeta(None))
+  def append(db: String, name: String, meta: SeriesMeta,
+      rows: Seq[(Long, Double)]): Long = {
     val batch =
       if (meta.dupPolicy == "ignore") {
         val first = rows.distinctBy(_._1)

@@ -123,12 +123,13 @@ final class StatementExecutor(spark: SparkSession, catalog: TsCatalog,
       }
 
     case Statement.Insert(name, rows) =>
-      withSeries(name, session) { (db, _) =>
+      withSeries(name, session) { (db, meta) =>
         val (resolved, errors) = resolveRows(rows)
         // the rows are on the driver: one parquet file per touched
         // bucket, written and renamed into place with no Spark job,
-        // acked after the rename
-        val n = catalog.append(db, name, resolved)
+        // acked after the rename; the options read above pick the
+        // duplicate policy, so `_series.json` is read once
+        val n = catalog.append(db, name, meta, resolved)
         Ack(s"$n point(s) inserted, $errors error(s)")
       }
 

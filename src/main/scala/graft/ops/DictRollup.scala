@@ -51,6 +51,17 @@ import org.apache.spark.sql.types._
   * 100 TB: one scan, one state-scale exchange (tasks x open slots),
   * no data-scale shuffle at all — vs the generic form's fine-relation
   * exchange. Skewed hours spread across input splits, not reducers.
+  *
+  * The object holds two kernel families and nothing else:
+  *  - DECLARED: the hourly rollup only ([[hourlyRollup]] over any
+  *    micros projection, [[hourlyRollupColumnar]] off the bare scan).
+  *    No undeclared kernel matches their speed over the generic form.
+  *  - INFERRED: the fold, incremental and sketch rollups
+  *    ([[foldRollupInferred]], [[incrementalRollupInferred]],
+  *    [[sketchRollupInferred]]) discover the category set inside the
+  *    scan, so they need no declaration and equal the generic forms on
+  *    any corpus; [[openSumPartialsRows]] / [[openSketchPartialsRows]]
+  *    are their row forms for streaming micro-batches.
   */
 object DictRollup {
 
@@ -70,8 +81,8 @@ object DictRollup {
     val bm = new graft.functions.NdvBitmap
   }
 
-  /** Per-slot state for the SUM-ONLY kernels (fold/incremental — no
-    * distinct-user bitmap, so the state is three longs). */
+  /** Per-slot state for the SUM-ONLY inferred kernels (fold/incremental
+    * — no distinct-user bitmap, so the state is three longs). */
   private final class SumSlot {
     var n = 0L
     var nv = 0L // finite values folded — 0 ⇒ the sum limbs render NULL
@@ -106,18 +117,12 @@ object DictRollup {
         case (acc, (v, i)) => acc.when(col("event_type") === v, i)
       }.otherwise(lit(dict.size))
 
-  /** `(hour_start div hourUs) * (|dict|+1) + code` as one long.
-    * `floorHour` selects the pre-1970 rounding of the GENERIC twin
-    * being mirrored: the hourly rollup floors (pmod), the
-    * fold/incremental family truncates toward zero (`t - t % h`, the
-    * Incremental.hourTs shape) — both hour starts are exact multiples
-    * of hourUs, so the IntegralDivide pack and the pmod-based decode
-    * round-trip any sign either way. */
-  private def packedExpr(dict: Seq[String], hourUs: Long,
-      floorHour: Boolean = true) = {
-    val hourStart =
-      if (floorHour) col("timestamp") - pmod(col("timestamp"), lit(hourUs))
-      else col("timestamp") - col("timestamp") % hourUs
+  /** `(hour_start div hourUs) * (|dict|+1) + code` as one long. The
+    * hour start FLOORS (pmod) like the generic hourly rollup, so it is
+    * an exact multiple of hourUs for any sign and the IntegralDivide
+    * pack and the pmod-based decode round-trip pre-1970 hours too. */
+  private def packedExpr(dict: Seq[String], hourUs: Long) = {
+    val hourStart = col("timestamp") - pmod(col("timestamp"), lit(hourUs))
     org.apache.spark.sql.graftbridge.ColumnBridge.column(
       org.apache.spark.sql.catalyst.expressions.IntegralDivide(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(hourStart),
@@ -246,127 +251,6 @@ object DictRollup {
     }
   }
 
-  /** The imperative per-partition fold for the sum-only kernels:
-    * projected rows (k long, m6 long-or-null) → per-task partial rows
-    * (k, n, h6, l6). Same open-addressed LongMap + last-key memo as
-    * the hourly kernel; same loud null-timestamp failure. */
-  private def sumPartials(proj: DataFrame): DataFrame = {
-    val partialSchema = StructType(Seq(
-      StructField("k", LongType, nullable = false),
-      StructField("n", LongType, nullable = false),
-      StructField("h6", LongType, nullable = true),
-      StructField("l6", LongType, nullable = true)))
-    val partials = proj.queryExecution.toRdd.mapPartitions { it =>
-      val slots = new scala.collection.mutable.LongMap[SumSlot](64)
-      var lastK = Long.MinValue
-      var lastSlot: SumSlot = null
-      var empty = true
-      while (it.hasNext) {
-        val row = it.next()
-        if (row.isNullAt(0)) throw new IllegalArgumentException(
-          "dictionary rollup: null timestamp in input (a time-series " +
-            "point without a time is malformed; filter upstream if intended)")
-        val k = row.getLong(0)
-        var s = if (!empty && k == lastK) lastSlot else null
-        if (s == null) {
-          s = slots.getOrNull(k)
-          if (s == null) { s = new SumSlot; slots.update(k, s) }
-          lastK = k; lastSlot = s; empty = false
-        }
-        s.n += 1
-        if (!row.isNullAt(1)) {
-          val m6 = row.getLong(1)
-          s.nv += 1
-          s.h6 += m6 / 1000000L
-          s.l6 += m6 % 1000000L
-        }
-      }
-      slots.iterator.map { case (k, s) =>
-        Row(k, s.n, h6OrNull(s.nv, s.h6), l6OrNull(s.nv, s.l6)) }
-    }
-    proj.sparkSession.createDataFrame(partials, partialSchema)
-  }
-
-  /** Decode a merged (k, n, h6, l6) state into the rollup the generic
-    * fold emits: (event_type, hour_ts, n, sum_value) with the exact
-    * decimal recombination every gated sum uses. */
-  private def finalizeSum(merged: DataFrame, dict: Seq[String],
-      hourUs: Long): DataFrame = {
-    val m = dict.size + 1
-    val sv = (col("h6").cast("decimal(20,0)") *
-      lit(new java.math.BigDecimal(1000000)).cast("decimal(7,0)") +
-      col("l6").cast("decimal(20,0)")) *
-      lit(new java.math.BigDecimal("0.000001"))
-    val decode = array((dict.map(lit) :+ lit(null.asInstanceOf[String])): _*)
-    merged.select(
-      element_at(decode, pmod(col("k"), lit(m.toLong)).cast("int") + 1)
-        .as("event_type"),
-      expr(s"((k - pmod(k, ${m}L)) div ${m}L) * ${hourUs}L").as("hour_ts"),
-      col("n"),
-      round(sv.cast("double"), 4).as("sum_value"))
-  }
-
-  /** Dictionary-declared twin of [[graft.ops.Incremental]]'s
-    * fold-to-state rollup (gate: agg_rollup_fold — same oracle): one
-    * kernel pass folds (event_type, hour) sums into packed-integer-key
-    * slots of THREE longs (n + hi/lo micro-limbs; no bitmap — the fold
-    * has no distinct aggregate, so the state is even leaner than the
-    * hourly kernel's), then tasks x slots partial rows — thousands,
-    * not data-scale — merge by key with codegen'd integer sums and
-    * decode through the exact decimal recombination. Same pinned null
-    * semantics as [[hourlyRollup]]. Out-of-dictionary categories
-    * surface as the NULL-category row per hour (the gate corpus is
-    * fully declared, so the gate output equals the generic twin's).
-    *
-    * 100 TB: one scan, zero data-scale exchange — the generic fold
-    * shuffles its (type, hour) partials through HashAggregate's
-    * string-keyed path; this exchanges only the bounded slot state. */
-  def foldRollup(ev: DataFrame, dict: Seq[String],
-      hourUs: Long = HourUs): DataFrame = {
-    requireDict(dict)
-    val proj = ev.select(packedExpr(dict, hourUs, floorHour = false).as("k"),
-      micros6(col("value").cast("double")).as("m6"))
-    val merged = sumPartials(proj).groupBy("k")
-      .agg(sum("n").cast("long").as("n"),
-        sum("h6").as("h6"), sum("l6").as("l6"))
-    finalizeSum(merged, dict, hourUs)
-  }
-
-  /** Dictionary-declared twin of agg_incremental_rollup (same oracle):
-    * the corpus splits by `isNew` into standing state vs new batch,
-    * and the kernel carries the split in the packed key's LOW BIT —
-    * `k2 = k*2 + split` (sign-safe: pmod decodes the bit for negative
-    * pre-1970 keys too) — so ONE kernel pass builds BOTH batches'
-    * mergeable states. The first state-scale aggregation regroups the
-    * task partials to the per-(split, key) states; the second drops
-    * the split bit — a REAL two-partial merge per key, the same
-    * merge-equals-rescan identity the generic gate verifies (decimal
-    * associativity: limb sums are associative integer adds, so the
-    * merged total is bit-identical to the unsplit fold's;
-    * HourlyRollupDictSpec locks incremental == fold). The premium
-    * over [[foldRollup]] is the per-row split hash + the doubled
-    * state rows — the generic pair's decomposition, kernelized. */
-  def incrementalRollup(ev: DataFrame, dict: Seq[String],
-      isNew: org.apache.spark.sql.Column,
-      hourUs: Long = HourUs): DataFrame = {
-    requireDict(dict)
-    val k2 = packedExpr(dict, hourUs, floorHour = false) * 2 +
-      when(isNew, 1L).otherwise(0L)
-    val proj = ev.select(k2.as("k"),
-      micros6(col("value").cast("double")).as("m6"))
-    // per-(split, key) mergeable states: the split=0/1 row groups of
-    // this one relation ARE the standing-state and new-batch partials
-    val splitState = sumPartials(proj).groupBy("k")
-      .agg(sum("n").cast("long").as("n"),
-        sum("h6").as("h6"), sum("l6").as("l6"))
-    // the merge: drop the split bit, fold the two partials per key
-    val merged = splitState
-      .groupBy(expr("(k - pmod(k, 2)) div 2").as("k"))
-      .agg(sum("n").cast("long").as("n"),
-        sum("h6").as("h6"), sum("l6").as("l6"))
-    finalizeSum(merged, dict, hourUs)
-  }
-
   /** Input needs (timestamp micros long, event_type string, user_id
     * integral, value double); output (hour_ts, event_type, n,
     * n_users, sum_value) with rollup rows of n >= 2, out-of-dict
@@ -481,11 +365,11 @@ object DictRollup {
   // (UTF8String equality) run inside the kernel loop instead.
   //
   // Scope: the input must collapse to ONE vectorized parquet scan of
-  // the catalog's events schema — these are the scan-adjacent fast
-  // paths a declared dictionary unlocks, not general-plan operators
-  // (the row kernels above stay the composable forms). 100 TB: same
-  // exchange story as the row kernels (tasks x slots partials, zero
-  // data-scale shuffle), minus the per-row decode boundary.
+  // the catalog's events schema — these are scan-adjacent fast paths,
+  // not general-plan operators (the hourly row kernel above and the
+  // generic forms stay the composable ones). 100 TB: same exchange
+  // story as the row kernel (tasks x slots partials, zero data-scale
+  // shuffle), minus the per-row decode boundary.
   // ------------------------------------------------------------------
 
   /** A compiled residual row predicate over the scan's batches —
@@ -517,8 +401,8 @@ object DictRollup {
     // pass-through wrappers (column-pruning projects of bare
     // attributes, codegen adapters, the columnar-to-row boundary)
     // sits between the root and the scan. A computed projection
-    // anywhere means the caller composed a plan — the row kernels are
-    // the composable forms. FILTERS (r16, verdict #4 — the
+    // anywhere means the caller composed a plan — the hourly row
+    // kernel and the generic forms are the composable ones. FILTERS (r16, verdict #4 — the
     // composed-input tier): when `allowFilter`, FilterExec residuals
     // above the scan are COLLECTED and re-evaluated row-by-row inside
     // the kernel via [[compileBatchPred]] — exact by construction
@@ -760,212 +644,6 @@ object DictRollup {
     if (Math.floorMod(h, 100L) < 20L) 1 else 0
   }
 
-  /** Columnar twin of [[foldRollup]] / [[incrementalRollup]] over the
-    * RAW events relation: `withSplit = false` is the fold; `true`
-    * carries the 80/20 split in the packed key's low bit — computed
-    * IN the kernel from event_id ([[splitBit]]). Trunc-hour pack like
-    * the generic Incremental.hourTs. The split path keeps one last-key
-    * memo PER SPLIT BIT: split bits alternate pseudo-randomly row to
-    * row, so a single memo would miss ~32% of rows (P[same bit twice]
-    * = .8²+.2² = .68) and pay a LongMap probe each miss — the r15
-    * premium decomposition's third term. */
-  private def sumRollupColumnar(raw: DataFrame, dict: Seq[String],
-      hourUs: Long, withSplit: Boolean): DataFrame = {
-    requireDict(dict)
-    val spark = raw.sparkSession
-    val cols = if (withSplit) Seq("ts", "event_id", "event_type", "value")
-      else Seq("ts", "event_type", "value")
-    val (scan, idx, tsNanos) = columnarScanOf(raw, cols)
-    val (iTs, iTy, iVal) = (idx(0), idx(if (withSplit) 2 else 1),
-      idx(if (withSplit) 3 else 2))
-    val iId = if (withSplit) idx(1) else -1
-    val dictU = dict.map(
-      org.apache.spark.unsafe.types.UTF8String.fromString).toArray
-    val m = dict.size + 1
-    val partialSchema = StructType(Seq(
-      StructField("k", LongType, nullable = false),
-      StructField("n", LongType, nullable = false),
-      StructField("h6", LongType, nullable = true),
-      StructField("l6", LongType, nullable = true)))
-    val partials = scan.executeColumnar().mapPartitions { it =>
-      val slots = new scala.collection.mutable.LongMap[SumSlot](64)
-      val codec = new CategoryCodec(dictU)
-      // dual last-key memo (split 0 / split 1); the fold path only
-      // ever touches memo 0 — see the [[sumRollupColumnar]] doc
-      var lastK0 = Long.MinValue; var lastSlot0: SumSlot = null
-      var lastK1 = Long.MinValue; var lastSlot1: SumSlot = null
-      var empty = true
-      while (it.hasNext) {
-        val batch = it.next()
-        val (vTs, vTy, vVal) =
-          (batch.column(iTs), batch.column(iTy), batch.column(iVal))
-        val vId = if (withSplit) batch.column(iId) else null
-        codec.reset(vTy)
-        var i = 0
-        val nRows = batch.numRows()
-        while (i < nRows) {
-          if (vTs.isNullAt(i)) throw new IllegalArgumentException(
-            "dictionary rollup: null timestamp in input (a time-series " +
-              "point without a time is malformed; filter upstream if intended)")
-          val ts = if (tsNanos) vTs.getLong(i) / 1000L else vTs.getLong(i)
-          val code = if (vTy.isNullAt(i)) dictU.length else codec.code(vTy, i)
-          // trunc-hour: (ts - ts % h) / h — the Incremental.hourTs shape
-          var k = (ts - ts % hourUs) / hourUs * m + code
-          val split =
-            if (withSplit) splitBit(if (vId.isNullAt(i)) 0L else vId.getLong(i))
-            else 0
-          if (withSplit) k = k * 2 + split
-          var slot =
-            if (split == 0) { if (!empty && k == lastK0) lastSlot0 else null }
-            else { if (!empty && k == lastK1) lastSlot1 else null }
-          if (slot == null) {
-            slot = slots.getOrNull(k)
-            if (slot == null) { slot = new SumSlot; slots.update(k, slot) }
-            if (split == 0) { lastK0 = k; lastSlot0 = slot }
-            else { lastK1 = k; lastSlot1 = slot }
-            empty = false
-          }
-          slot.n += 1
-          if (!vVal.isNullAt(i)) {
-            val x = vVal.getDouble(i)
-            if (!java.lang.Double.isNaN(x) && !java.lang.Double.isInfinite(x)) {
-              val m6 = graft.functions.MicroSumOps.toMicros(x)
-              slot.nv += 1
-              slot.h6 += m6 / 1000000L
-              slot.l6 += m6 % 1000000L
-            }
-          }
-          i += 1
-        }
-      }
-      slots.iterator.map { case (k, s) =>
-        Row(k, s.n, h6OrNull(s.nv, s.h6), l6OrNull(s.nv, s.l6)) }
-    }
-    val partialsDf = spark.createDataFrame(partials, partialSchema)
-    if (!withSplit) {
-      val merged = partialsDf.groupBy("k")
-        .agg(sum("n").cast("long").as("n"),
-          sum("h6").as("h6"), sum("l6").as("l6"))
-      finalizeSum(merged, dict, hourUs)
-    } else {
-      // per-(split, key) states first, then the REAL two-partial merge
-      // dropping the split bit — the generic gate's identity, kernelized
-      val splitState = partialsDf.groupBy("k")
-        .agg(sum("n").cast("long").as("n"),
-          sum("h6").as("h6"), sum("l6").as("l6"))
-      val merged = splitState
-        .groupBy(expr("(k - pmod(k, 2)) div 2").as("k"))
-        .agg(sum("n").cast("long").as("n"),
-          sum("h6").as("h6"), sum("l6").as("l6"))
-      finalizeSum(merged, dict, hourUs)
-    }
-  }
-
-  /** Columnar twin of [[foldRollup]] (same oracle as agg_rollup_fold). */
-  def foldRollupColumnar(raw: DataFrame, dict: Seq[String],
-      hourUs: Long = HourUs): DataFrame =
-    sumRollupColumnar(raw, dict, hourUs, withSplit = false)
-
-  /** Columnar twin of [[incrementalRollup]] (same oracle as
-    * agg_incremental_rollup; split carried in the packed key's low
-    * bit, computed in-kernel). */
-  def incrementalRollupColumnar(raw: DataFrame, dict: Seq[String],
-      hourUs: Long = HourUs): DataFrame =
-    sumRollupColumnar(raw, dict, hourUs, withSplit = true)
-
-  /** Columnar twin of [[graft.ops.Approx.sketchRollup]] under a
-    * declared dictionary (same oracle — DuckDB's own
-    * approx_count_distinct through the shared ratio band): per-slot
-    * DataSketches HLL sketches fold DIRECTLY off the batch vectors,
-    * one slot per (day, code) — the declaration bounds the state at
-    * days x (|dict|+1) sketches per task regardless of value
-    * cardinality. This RETIRES the row twin's documented caveat: its
-    * data-scale phase is a whole-corpus DISTINCT on (key, day, value),
-    * which degenerates to corpus size when cardinality approaches row
-    * count — the kernel's state never depends on cardinality at all
-    * (HLL updates are duplicate-insensitive; folding raw rows is the
-    * same sketch). Per-task partial rows carry (k, sketch bytes) at
-    * state scale; the per-key union/estimate runs through the SAME
-    * hll_union_agg/hll_sketch_estimate the row twin gates (the kernel
-    * builds lgK=12 sketches with the library call those functions
-    * wrap). Null semantics: null timestamp fails loudly (kernel
-    * family), null value skipped (as hll_sketch_agg does), NULL/
-    * out-of-dict categories quarantine as the NULL-key row (where the
-    * row twin keeps rogue strings as their own groups — the standard
-    * dict-twin divergence, irrelevant on a declared corpus).
-    * Output: (key, n_days, est_band) — [[graft.ops.Approx.sketchRollup]]'s
-    * schema. */
-  def sketchRollupColumnar(raw: DataFrame, dict: Seq[String],
-      dayUs: Long = 86400000000L): DataFrame = {
-    requireDict(dict)
-    val spark = raw.sparkSession
-    val (scan, idx, tsNanos) =
-      columnarScanOf(raw, Seq("ts", "event_type", "user_id"))
-    val (iTs, iTy, iUid) = (idx(0), idx(1), idx(2))
-    val dictU = dict.map(
-      org.apache.spark.unsafe.types.UTF8String.fromString).toArray
-    val m = dict.size + 1
-    val partialSchema = StructType(Seq(
-      StructField("k", LongType, nullable = false),
-      StructField("sk", BinaryType, nullable = false)))
-    val partials = scan.executeColumnar().mapPartitions { it =>
-      val slots = new scala.collection.mutable.LongMap[
-        org.apache.datasketches.hll.HllSketch](64)
-      val codec = new CategoryCodec(dictU)
-      var lastK = Long.MinValue
-      var lastSlot: org.apache.datasketches.hll.HllSketch = null
-      var empty = true
-      while (it.hasNext) {
-        val batch = it.next()
-        val (vTs, vTy, vUid) =
-          (batch.column(iTs), batch.column(iTy), batch.column(iUid))
-        codec.reset(vTy)
-        var i = 0
-        val nRows = batch.numRows()
-        while (i < nRows) {
-          if (vTs.isNullAt(i)) throw new IllegalArgumentException(
-            "dictionary rollup: null timestamp in input (a time-series " +
-              "point without a time is malformed; filter upstream if intended)")
-          val ts = if (tsNanos) vTs.getLong(i) / 1000L else vTs.getLong(i)
-          val code = if (vTy.isNullAt(i)) dictU.length else codec.code(vTy, i)
-          // trunc-day mirrors the row twin's `timestamp div dayUs`
-          val k = ts / dayUs * m + code
-          var slot = if (!empty && k == lastK) lastSlot else null
-          if (slot == null) {
-            slot = slots.getOrNull(k)
-            if (slot == null) {
-              // lgK 12 — the default Spark's hll_sketch_agg builds, so
-              // the state-scale hll_union_agg merge below unions
-              // sketches of the exact shape the row twin's carry
-              slot = new org.apache.datasketches.hll.HllSketch(12)
-              slots.update(k, slot)
-            }
-            lastK = k; lastSlot = slot; empty = false
-          }
-          if (!vUid.isNullAt(i)) slot.update(vUid.getLong(i))
-          i += 1
-        }
-      }
-      slots.iterator.map { case (k, s) => Row(k, s.toCompactByteArray) }
-    }
-    val partialsDf = spark.createDataFrame(partials, partialSchema)
-    // per-(key, day) union first (tasks x slots rows), then the
-    // per-key union + estimate + banding — all state-scale; the day
-    // level also yields the exact distinct-day count per key
-    val perDay = partialsDf.groupBy("k")
-      .agg(expr("hll_union_agg(sk)").as("sk"))
-    val decode = array((dict.map(lit) :+ lit(null.asInstanceOf[String])): _*)
-    perDay
-      .select(element_at(decode, pmod(col("k"), lit(m.toLong)).cast("int") + 1)
-          .as("event_type"), col("sk"))
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_days"),
-        expr("hll_sketch_estimate(hll_union_agg(sk))").as("est"))
-      .select(col("event_type"), col("n_days"),
-        floor(log(greatest(col("est"), lit(1L)).cast("double")) /
-          lit(graft.ops.Approx.BandLn125) + lit(0.5)).cast("long").as("est_band"))
-  }
-
   // ------------------------------------------------------------------
   // INFERRED-dictionary kernels (r15, verdict #1): the fleet's only
   // remaining >2x-at-1B keys were the GENERIC fold (2.76x) and
@@ -1158,16 +836,15 @@ object DictRollup {
     * [[graft.ops.Approx.sketchRollup]] (gate: agg_sketch_rollup — same
     * oracle) for corpora WITHOUT a declared dictionary: per-slot
     * DataSketches HLL sketches fold off the batch vectors with the
-    * category set discovered inside the scan ([[OpenCodec]]), so —
-    * unlike [[sketchRollupColumnar]]'s quarantine — rogue categories
-    * and NULL keep their OWN groups, matching the composable row twin
-    * exactly on any corpus (HLL updates are duplicate-insensitive, so
+    * category set discovered inside the scan ([[OpenCodec]]), so
+    * rogue categories and NULL keep their OWN groups, matching the
+    * composable row twin exactly on any corpus (HLL updates are duplicate-insensitive, so
     * folding raw rows builds the identical registers the row twin's
     * distinct-first pipeline does). State = days x OBSERVED categories
-    * sketches per task, the open kernels' [[OpenMaxCat]] bound; like
-    * the dict sketch kernel, state never depends on VALUE cardinality
-    * — the row twin's degenerate-cardinality caveat is retired for
-    * undeclared corpora too. Null semantics: null timestamp fails
+    * sketches per task, the open kernels' [[OpenMaxCat]] bound; state
+    * never depends on VALUE cardinality — the row twin's data-scale
+    * (key, day, value) DISTINCT degenerates to corpus size when
+    * cardinality approaches row count, this kernel's state does not. Null semantics: null timestamp fails
     * loudly (kernel family), null user_id skipped (as hll_sketch_agg
     * does), NULL event_type its own group (code 0 — generic
     * semantics). Output: (event_type, n_days, est_band). */

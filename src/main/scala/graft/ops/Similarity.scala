@@ -109,9 +109,6 @@ object Similarity {
   private def persistTracked(df: DataFrame): DataFrame =
     graft.core.EscapedCaches.persistTracked(df)
 
-  /** See [[graft.core.EscapedCaches.release]]. */
-  def releaseEscapedCaches(): Int = graft.core.EscapedCaches.release()
-
   /** Pinned recall provenance per ANN book signature: mean recall@10
     * on the 60k-vector i.i.d.-gaussian corpus at the MAXQ=50 sample
     * (the committed recall_maxq50 artifacts — measured, not

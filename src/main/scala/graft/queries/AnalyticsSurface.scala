@@ -148,40 +148,10 @@ object AnalyticsSurface {
       .agg(sum("is_break").as("n_sessions"), count(lit(1)).as("n_events"))
   }
 
-  /** [[sessionize]] as a GROUPED-ARRAY aggregate instead of two
-    * analytic functions: collect each user's timestamps, sort the
-    * (bounded, per-user) array once, and fold it with a higher-order
-    * `aggregate` lambda counting >30 min gaps — one hash aggregate,
-    * no partition-wide window sort (the win_top3_agg differential
-    * pattern applied to the window-sort class). Per-user state is the
-    * user's own event count — bounded by the key population's
-    * activity, the same bound the streaming sessionizer carries; the
-    * window form remains the default for unbounded-per-key corpora.
-    * That bound is MEASURED, not hypothetical: at 100M events
-    * (67k/user) this twin wins the same-window pair, at 300M events
-    * (200k/user) its collect_list state exceeds a 128 GiB heap while
-    * the window form completes (BASELINE.md 300M-event rows).
-    * Same output as [[sessionize]]; the gate reuses its oracle
-    * verbatim. Ties: equal timestamps yield gap 0 in either
-    * formulation, so sort stability cannot change the count. */
-  private def sessionizeAgg(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.eventSeries(s, dir)
-    val gapUs = 30L * 60 * 1000000 // 30 min in micros
-    ev.groupBy("user_id")
-      .agg(sort_array(collect_list(col("timestamp"))).as("ts"))
-      .select(col("user_id"),
-        expr(s"""aggregate(ts,
-          named_struct('fst', true, 'prev', CAST(0 AS BIGINT), 'brk', CAST(0 AS BIGINT)),
-          (acc, t) -> named_struct('fst', false, 'prev', t,
-            'brk', acc.brk + IF(acc.fst OR t - acc.prev > ${gapUs}L, 1, 0)),
-          acc -> acc.brk)""").as("n_sessions"),
-        size(col("ts")).cast("long").as("n_events"))
-  }
-
-  /** [[sessionize]] with BOUNDED per-group state — the scale path the
-    * grouped-array twin lacks (its collect_list of a whole user's
-    * timestamps exceeds a 128 GiB heap at 200k events/key; measured,
-    * BASELINE.md 300M-event rows). Two-level segmented fold:
+  /** [[sessionize]] with BOUNDED per-group state — the scale path
+    * where a whole-user grouped array cannot go (a collect_list of a
+    * user's timestamps exceeded a 128 GiB heap at 200k events/key;
+    * measured, BASELINE.md 300M-event rows). Two-level segmented fold:
     *
     *  1. sessionize within (user, 1-hour bucket): one hash aggregate
     *     whose per-group array is bounded by the bucket's event count
@@ -358,7 +328,6 @@ object AnalyticsSurface {
     "win_top3_per_user" -> top3PerUser,
     "win_top3_agg" -> top3PerUserAgg,
     "win_sessionize" -> sessionize,
-    "win_sessionize_agg" -> sessionizeAgg,
     "win_sessionize_seg" -> sessionizeSeg,
     "agg_hourly_rollup" -> hourlyRollup,
     // the DICTIONARY-declared twin (same oracle): the caller declares
@@ -370,11 +339,11 @@ object AnalyticsSurface {
     "agg_hourly_rollup_dict" -> ((s, dir) =>
       hourlyRollupWithDict(Tables.eventSeries(s, dir),
         Seq("signup", "purchase", "view", "click", "error"))),
-    // the COLUMNAR dict kernels (r14 verdict-#5 outcome): same oracles
-    // as their twins; the r13 "projection floor" was the row-decode
+    // the COLUMNAR dict kernel (r14 verdict-#5 outcome): same oracle
+    // as its twins; the r13 "projection floor" was the row-decode
     // boundary (ColumnarToRow + UnsafeRow projection), measured
     // 11.6-11.8 s/1B vs 5.8-6.0 s for the same fold off ColumnarBatch
-    // vectors — these fold straight off the vectorized parquet scan
+    // vectors — this folds straight off the vectorized parquet scan
     "agg_hourly_rollup_dict_col" -> ((s, dir) =>
       graft.ops.DictRollup.hourlyRollupColumnar(Tables.load(s, dir, "events"),
         Seq("signup", "purchase", "view", "click", "error"))),
@@ -419,30 +388,6 @@ object AnalyticsSurface {
       graft.ops.Incremental.merge(
         graft.ops.Incremental.hourlyPartials(Tables.eventSeries(s, dir)))
     }),
-    // the DICTIONARY-declared kernel twins (same oracles as the
-    // generic fold/incremental): the (event_type, hour) state is
-    // exactly the packed-integer-key shape the hourly dict kernel
-    // already runs with zero data-scale exchange — here with a
-    // 3-long slot (no bitmap; the fold has no distinct aggregate).
-    // The generic forms stay the defaults for undeclared corpora.
-    "agg_rollup_fold_dict" -> ((s, dir) => {
-      graft.ops.DictRollup.foldRollup(Tables.eventSeries(s, dir),
-        Seq("signup", "purchase", "view", "click", "error"))
-    }),
-    // the incremental twin carries the 80/20 split flag (the SAME
-    // xxhash64 predicate as the generic gate) in the packed key's low
-    // bit, so its gate pays the identical real two-partial merge
-    "agg_incremental_rollup_dict" -> ((s, dir) => {
-      graft.ops.DictRollup.incrementalRollup(Tables.eventSeries(s, dir),
-        Seq("signup", "purchase", "view", "click", "error"),
-        pmod(xxhash64(col("event_id"), lit("incr")), lit(100L)) < 20)
-    }),
-    "agg_rollup_fold_dict_col" -> ((s, dir) =>
-      graft.ops.DictRollup.foldRollupColumnar(Tables.load(s, dir, "events"),
-        Seq("signup", "purchase", "view", "click", "error"))),
-    "agg_incremental_rollup_dict_col" -> ((s, dir) =>
-      graft.ops.DictRollup.incrementalRollupColumnar(Tables.load(s, dir, "events"),
-        Seq("signup", "purchase", "view", "click", "error"))),
     // the INFERRED-dictionary kernels (r15 verdict #1): the same
     // columnar fold for corpora with NO declared dictionary — the
     // category set is discovered inside the scan (OpenCodec over the
@@ -795,19 +740,12 @@ object AnalyticsSurface {
     // sketch pipeline while agg_sketch_merge keeps gating correctness
     "agg_sketch_rollup" -> ((s, dir) =>
       graft.ops.Approx.sketchRollup(Tables.eventSeries(s, dir))),
-    // the COLUMNAR dict twin: per-slot HLL sketches fold straight off
-    // the batch vectors — state bounded by days x (|dict|+1) per task
-    // regardless of value cardinality (retires the row twin's
-    // degenerate-cardinality caveat); same oracle
     // the INFERRED sketch twin (r15): same oracle; unlike the declared
     // columnar twin's quarantine, rogue/NULL categories keep their own
     // groups — exact row-twin semantics for undeclared corpora, with
     // the kernel's cardinality-independent state
     "agg_sketch_rollup_inferred" -> ((s, dir) =>
       graft.ops.DictRollup.sketchRollupInferred(Tables.load(s, dir, "events"))),
-    "agg_sketch_rollup_col" -> ((s, dir) =>
-      graft.ops.DictRollup.sketchRollupColumnar(Tables.load(s, dir, "events"),
-        Seq("signup", "purchase", "view", "click", "error"))),
     // ordered conversion funnel (Funnels.funnel): per-step earliest-
     // strictly-after frontiers, all equality joins on the user key,
     // ONE lazy plan (shared prefixes dedup via ReusedExchange)
@@ -1134,15 +1072,6 @@ object AnalyticsSurface {
         |  FROM (SELECT user_id, timestamp,
         |          lag(timestamp) OVER (PARTITION BY user_id ORDER BY timestamp) AS prev_ts
         |        FROM ev)) GROUP BY user_id""".stripMargin),
-    // identical oracle: the grouped-array twin must reproduce the
-    // window formulation's output exactly
-    "win_sessionize_agg" ->
-      (EV + """SELECT user_id, CAST(sum(is_break) AS BIGINT) AS n_sessions, count(*) AS n_events FROM (
-        |  SELECT user_id,
-        |    CASE WHEN prev_ts IS NULL OR timestamp - prev_ts > 1800000000 THEN 1 ELSE 0 END AS is_break
-        |  FROM (SELECT user_id, timestamp,
-        |          lag(timestamp) OVER (PARTITION BY user_id ORDER BY timestamp) AS prev_ts
-        |        FROM ev)) GROUP BY user_id""".stripMargin),
     // identical oracle again: the segmented two-level fold is the
     // bounded-state scale path and must reproduce the same output
     "win_sessionize_seg" ->
@@ -1200,29 +1129,6 @@ object AnalyticsSurface {
         |    / ${graft.ops.Approx.BandLn125} + 0.5) AS BIGINT) AS est_band
         |FROM events WHERE epoch_us(ts) >= $FILTER_T0_US
         |  AND epoch_us(ts) < $FILTER_T1_US GROUP BY 1""".stripMargin,
-    // IDENTICAL oracles for the dict kernel twins: the dictionary only
-    // changes the PLAN (packed integer keys, slot-state exchange); the
-    // rollup and the split-then-merge identity are the same exact sums
-    "agg_rollup_fold_dict" ->
-      (EV + s"""SELECT event_type,
-        |  (timestamp - timestamp % 3600000000) AS hour_ts,
-        |  count(*) AS n, ${sumSql("value")} AS sum_value
-        |FROM ev GROUP BY 1, 2""".stripMargin),
-    "agg_incremental_rollup_dict" ->
-      (EV + s"""SELECT event_type,
-        |  (timestamp - timestamp % 3600000000) AS hour_ts,
-        |  count(*) AS n, ${sumSql("value")} AS sum_value
-        |FROM ev GROUP BY 1, 2""".stripMargin),
-    "agg_rollup_fold_dict_col" ->
-      (EV + s"""SELECT event_type,
-        |  (timestamp - timestamp % 3600000000) AS hour_ts,
-        |  count(*) AS n, ${sumSql("value")} AS sum_value
-        |FROM ev GROUP BY 1, 2""".stripMargin),
-    "agg_incremental_rollup_dict_col" ->
-      (EV + s"""SELECT event_type,
-        |  (timestamp - timestamp % 3600000000) AS hour_ts,
-        |  count(*) AS n, ${sumSql("value")} AS sum_value
-        |FROM ev GROUP BY 1, 2""".stripMargin),
     // IDENTICAL oracles for the INFERRED kernels too: inline inference
     // only changes the plan (scan-time dictionary discovery); the
     // rollup is the same exact aggregation as the generic forms
@@ -1539,12 +1445,6 @@ object AnalyticsSurface {
     // sides (Approx.BandLn125); at gate scale both sketches are in
     // their exact range, so est is 150 on both before banding
     "agg_sketch_rollup" ->
-      s"""SELECT event_type,
-        |  count(DISTINCT epoch_us(ts) // 86400000000) AS n_days,
-        |  CAST(floor(ln(CAST(greatest(approx_count_distinct(user_id), 1) AS DOUBLE))
-        |    / ${graft.ops.Approx.BandLn125} + 0.5) AS BIGINT) AS est_band
-        |FROM events GROUP BY 1""".stripMargin,
-    "agg_sketch_rollup_col" ->
       s"""SELECT event_type,
         |  count(DISTINCT epoch_us(ts) // 86400000000) AS n_days,
         |  CAST(floor(ln(CAST(greatest(approx_count_distinct(user_id), 1) AS DOUBLE))

@@ -38,30 +38,6 @@ object StreamingIngest {
       .start()
   }
 
-  /** Tumbling-window average over a live stream — SAMPLE BY as a
-    * continuous query (reference ts_avg_sample semantics,
-    * src/timeseries.c:1265-1308, window labeled at its end).
-    * `timeUnitPerSec` adapts to the stream's timestamp unit
-    * (1e9 = nanos, 1e6 = micros).
-    */
-  def sampleByStream(points: DataFrame, intervalUnits: Long): DataFrame =
-    points
-      .groupBy(((col("timestamp") - pmod(col("timestamp"), lit(intervalUnits)))
-        + lit(intervalUnits)).as("sample_ts"))
-      .agg(avg(col("value")).as("avg_value"), count(lit(1)).as("n_points"))
-
-  /** Watermarked per-type hourly counts over an event stream with a
-    * real event-time column: late data beyond the watermark is dropped,
-    * closed windows emit append-only — the standard production shape.
-    */
-  def watermarkedCounts(events: DataFrame, watermark: String = "1 hour"): DataFrame =
-    events
-      .withColumn("event_time", timestamp_micros(col("timestamp")))
-      .withWatermark("event_time", watermark)
-      .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("n"))
-
   /** Gap-based session windows via Spark's native `session_window` —
     * identical code path in batch and streaming (the reference cannot
     * express sessions at all, SURVEY §2.6 "no session windows"; the
@@ -347,36 +323,6 @@ object StreamingIngest {
           }
           state.update(st)
           out.iterator
-      }
-  }
-
-  final case class UserEvent(user_id: Long, timestamp: Long, value: Double)
-  final case class UserState(nEvents: Long, sum: Double, lastTs: Long)
-  final case class UserSnapshot(user_id: Long, n_events: Long,
-      sum_value: Double, last_ts: Long)
-
-  /** Arbitrary stateful streaming: per-user running aggregates kept in
-    * `GroupState` across micro-batches (`flatMapGroupsWithState`,
-    * update mode) — the custom-state API a pipeline uses when windowed
-    * aggs can't express the logic. State is partitioned by user_id so
-    * it scales horizontally with the key space; each batch emits a
-    * snapshot per user seen in that batch. */
-  def runningUserStats(events: org.apache.spark.sql.Dataset[UserEvent])
-      : org.apache.spark.sql.Dataset[UserSnapshot] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[UserState, UserSnapshot](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        case (uid, batch, state: GroupState[UserState]) =>
-          val prev = state.getOption.getOrElse(UserState(0L, 0.0, Long.MinValue))
-          val evs = batch.toSeq
-          val next = UserState(
-            prev.nEvents + evs.size,
-            prev.sum + evs.map(_.value).sum,
-            math.max(prev.lastTs, if (evs.isEmpty) Long.MinValue else evs.map(_.timestamp).max))
-          state.update(next)
-          Iterator.single(UserSnapshot(uid, next.nEvents, next.sum, next.lastTs))
       }
   }
 }

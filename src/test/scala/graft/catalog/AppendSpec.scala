@@ -50,7 +50,7 @@ class AppendSpec extends AnyFunSuite with GraftSpark {
       cat.createSeries("d", "job", SeriesMeta(None))
       cat.createSeries("d", "drv", SeriesMeta(None))
       cat.insert("d", "job", batch.toDF("timestamp", "value").coalesce(1))
-      assert(cat.append("d", "drv", batch) == 15L)
+      assert(cat.append("d", "drv", SeriesMeta(None), batch) == 15L)
       def footer(series: String) = {
         val Seq(f) = parquetFiles(new File(root, s"d/$series/data/bucket=$B"))
         val in = HadoopInputFile.fromPath(new Path(f.getPath),
@@ -81,7 +81,7 @@ class AppendSpec extends AnyFunSuite with GraftSpark {
       session.activeDb = Some("d")
       val stored = (0 until 3).flatMap { k =>
         val batch = (0 until 5).map(i => (Base + (k * 5 + i) * 1000L, (k * 5 + i).toDouble))
-        cat.append("d", "s", batch)
+        cat.append("d", "s", SeriesMeta(None), batch)
         batch
       }
       // a crash mid-write: one truncated hidden file in the written

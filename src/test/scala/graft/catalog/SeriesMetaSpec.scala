@@ -6,6 +6,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSpark
+import graft.engine.StatementExecutor
 
 /** `_series.json`, a series' options: written whole, read strictly,
   * and read only by a catalog of the width it records. */
@@ -40,6 +41,8 @@ class SeriesMetaSpec extends AnyFunSuite with GraftSpark {
       assert(cat.createSeries("d", "s", SeriesMeta(None, "ignore")))
       val meta = new File(root, "d/s/_series.json")
       val whole = Files.readAllBytes(meta.toPath)
+      val exec = new StatementExecutor(spark, cat)
+      exec.defaultSession.activeDb = Some("d")
       // every proper prefix, with no checksum: what a write cut short
       // leaves
       for (n <- 0 until whole.length) {
@@ -47,8 +50,8 @@ class SeriesMetaSpec extends AnyFunSuite with GraftSpark {
         new File(root, "d/s/._series.json.crc").delete()
         val e = intercept[IllegalStateException](cat.seriesMeta("d", "s"))
         assert(e.getMessage.contains(meta.getName), e.getMessage)
-        // nor does a write fall back to the `insert` policy
-        intercept[IllegalStateException](cat.append("d", "s", Seq((T0, 1.0))))
+        // nor does a wire INSERT fall back to the `insert` policy
+        intercept[IllegalStateException](exec.executeSql(s"INSERT INTO s VALUES ($T0, 1.0)"))
       }
       assert(cat.readSeries("d", "s").count() == 0)
     }
@@ -61,14 +64,17 @@ class SeriesMetaSpec extends AnyFunSuite with GraftSpark {
       own.createDb("d")
       assert(own.createSeries("d", "s", SeriesMeta(Some(60 * Sec))))
       val points = (0 until 24).map(i => (T0 + i * 5 * Sec, i.toDouble))
-      own.append("d", "s", points)
+      own.append("d", "s", SeriesMeta(Some(60 * Sec)), points)
       val now = T0 + 120 * Sec
       val other = new TsCatalog(spark, root.getPath)
       val e = intercept[IllegalArgumentException](other.enforceRetention("d", "s", now))
       assert(e.getMessage.contains(s"$width ns buckets"), e.getMessage)
       intercept[IllegalArgumentException](
         other.readSeries("d", "s", Some((T0, T0 + 60 * Sec))))
-      intercept[IllegalArgumentException](other.append("d", "s", Seq((now, 0.0))))
+      val otherExec = new StatementExecutor(spark, other)
+      otherExec.defaultSession.activeDb = Some("d")
+      intercept[IllegalArgumentException](
+        otherExec.executeSql(s"INSERT INTO s VALUES ($now, 0.0)"))
       // the series' own width still reads and reaps it
       assert(own.readSeries("d", "s", Some((T0, T0 + 60 * Sec))).count() == 13)
       own.enforceRetention("d", "s", now)

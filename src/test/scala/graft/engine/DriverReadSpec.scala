@@ -15,7 +15,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSpark
-import graft.catalog.TsCatalog
+import graft.catalog.{SeriesMeta, TsCatalog}
 
 /** Wire reads inside the driver-row bound (`TsCatalog.localPoints`):
   * a plain scan or `latest` runs no Spark job and answers what a Spark
@@ -84,7 +84,7 @@ class DriverReadSpec extends AnyFunSuite with BeforeAndAfterAll with GraftSpark 
     val n = StatementExecutor.OneShotMaxRows
     // 1 ms apart, all in bucket 0, so `latest` reads them all too
     val pts = (0 until n).map(i => (at(0, i.toLong), i.toDouble))
-    assert(catalog.append("ddb", "bound", pts) == n)
+    assert(catalog.append("ddb", "bound", SeriesMeta(None), pts) == n)
     val range = Some((at(0, 0), at(1, 0)))
     val sql = s"SELECT value FROM bound BETWEEN ${at(0, 0)} AND ${at(1, 0)}"
     val (rows, jobs) = run(sql)

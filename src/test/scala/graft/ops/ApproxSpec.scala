@@ -215,7 +215,6 @@ class ApproxSpec extends AnyFunSuite with GraftSpark {
   test("columnar sketch kernel equals the row twin, including in the HLL's estimating range") {
     import spark.implicits._
     val dayUs = 86400000000L
-    val dict = Seq("a", "b", "z")
     // key "a" runs PAST the sketch's exact range (40k distinct users
     // over 5 days with cross-day repeats): the kernel's lgK-12
     // DataSketches updates must merge with hll_union_agg to the SAME
@@ -233,7 +232,7 @@ class ApproxSpec extends AnyFunSuite with GraftSpark {
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"${dir.getAbsolutePath}/events.parquet")
     val raw = graft.core.Tables.load(spark, dir.getAbsolutePath, "events")
-    val colK = graft.ops.DictRollup.sketchRollupColumnar(raw, dict)
+    val colK = graft.ops.DictRollup.sketchRollupInferred(raw)
       .orderBy("event_type").collect().toSeq
     val rowK = Approx.sketchRollup(
         graft.core.Tables.eventSeries(spark, dir.getAbsolutePath))

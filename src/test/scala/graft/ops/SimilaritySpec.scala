@@ -390,7 +390,7 @@ class SimilaritySpec extends AnyFunSuite with GraftSpark {
     // ADVICE r11 — ivfTopKStale's union base used to leak)
     // (no drained-to-zero assert: the queue is process-global and
     // other suites may register concurrently)
-    assert(Similarity.releaseEscapedCaches() >= 3)
+    assert(graft.core.EscapedCaches.release() >= 3)
   }
 
   test("recallStalenessPair (fused dual-book training) ≡ the two-arm recallAtK composition") {
@@ -415,7 +415,7 @@ class SimilaritySpec extends AnyFunSuite with GraftSpark {
       .withColumn("variant", org.apache.spark.sql.functions.lit("rebuilt"))
       .collect().map(key).toSet
     assert(pair == (placed ++ rebuilt))
-    Similarity.releaseEscapedCaches()
+    graft.core.EscapedCaches.release()
   }
 
   test("placeIntoBook: stateless placement equals the relational incremental assignment") {
@@ -492,6 +492,6 @@ class SimilaritySpec extends AnyFunSuite with GraftSpark {
           k = 5, maxQueries = 3, nCentroids = 4, nProbe = 5)
       }
       assert(e2.getMessage.contains("nProbe (5)"), e2.getMessage)
-    } finally Similarity.releaseEscapedCaches()
+    } finally graft.core.EscapedCaches.release()
   }
 }

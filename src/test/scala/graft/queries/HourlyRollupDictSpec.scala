@@ -2,7 +2,7 @@ package graft.queries
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSpark
@@ -49,33 +49,29 @@ class HourlyRollupDictSpec extends AnyFunSuite with GraftSpark {
     val d = rowsOf("agg_hourly_rollup_dict")
     assert(g == d, s"generic vs dictionary diverged:\n${g.zip(d).filter(p => p._1 != p._2).take(5)}")
 
-    // the r14 fold/incremental kernel twins on the SAME fuzz corpus
-    // (pre-1970 hours exercise the trunc-hour pack the generic
+    // the COLUMNAR kernel (r14): same fuzz corpus, read back through
+    // the vectorized scan (this fixture generation is LongType nanos —
+    // the /1000 trunc decode path); it must equal its row twin
+    assert(rowsOf("agg_hourly_rollup_dict_col") == d,
+      "columnar hourly kernel diverged from the row kernel")
+
+    // the fold/incremental kernels on the SAME fully-declared fuzz
+    // corpus (pre-1970 hours exercise the trunc-hour pack the generic
     // Incremental.hourTs shape pins — a floor/trunc slip breaks here)
     val gf = rowsOf("agg_rollup_fold")
-    val df = rowsOf("agg_rollup_fold_dict")
-    assert(gf == df, s"generic vs dictionary FOLD diverged:\n${gf.zip(df).filter(p => p._1 != p._2).take(5)}")
+    val kf = rowsOf("agg_rollup_fold_inferred")
+    assert(gf == kf, s"generic vs kernel FOLD diverged:\n${gf.zip(kf).filter(p => p._1 != p._2).take(5)}")
+    // split-function invariance (r15): the kernel splits by a
+    // multiply-mix of event_id, the generic gate by the xxhash64 chain
+    // — DIFFERENT partitions of the corpus — and the merged rollup
+    // must be bit-identical under both
     val gi = rowsOf("agg_incremental_rollup")
-    val di = rowsOf("agg_incremental_rollup_dict")
-    assert(gi == di, s"generic vs dictionary INCREMENTAL diverged:\n${gi.zip(di).filter(p => p._1 != p._2).take(5)}")
+    val ki = rowsOf("agg_incremental_rollup_inferred")
+    assert(gi == ki, s"generic vs kernel INCREMENTAL diverged:\n${gi.zip(ki).filter(p => p._1 != p._2).take(5)}")
     // split-invariance (the merge-equals-rescan identity, kernelized):
     // folding the split states back together must reproduce the
     // unsplit fold bit-identically — limb sums are associative
-    assert(df == di, s"dict incremental != dict fold (split variance):\n${df.zip(di).filter(p => p._1 != p._2).take(5)}")
-
-    // the COLUMNAR kernels (r14): same fuzz corpus, read back through
-    // the vectorized scan (this fixture generation is LongType nanos —
-    // the /1000 trunc decode path); each must equal its row twin
-    assert(rowsOf("agg_hourly_rollup_dict_col") == d,
-      "columnar hourly kernel diverged from the row kernel")
-    assert(rowsOf("agg_rollup_fold_dict_col") == df,
-      "columnar fold kernel diverged from the row kernel")
-    // split-function invariance (r15): the columnar kernel splits by
-    // a multiply-mix of event_id, the row twin and the generic gate by
-    // the xxhash64 chain — DIFFERENT partitions of the corpus — and the
-    // merged rollup must be bit-identical under both
-    assert(rowsOf("agg_incremental_rollup_dict_col") == di,
-      "columnar incremental kernel diverged from the row kernel")
+    assert(kf == ki, s"kernel incremental != kernel fold (split variance):\n${kf.zip(ki).filter(p => p._1 != p._2).take(5)}")
   }
 
   /** 200 events over 7 ten-minute steps, written twice: whole to
@@ -114,13 +110,6 @@ class HourlyRollupDictSpec extends AnyFunSuite with GraftSpark {
     val hourly = graft.ops.DictRollup.hourlyRollup(ev, dict)
     assert(viaKernel(hourly))
     assert(sorted(hourly, "hour_ts", "event_type") == ref("agg_hourly_rollup"))
-    val fold = graft.ops.DictRollup.foldRollup(ev, dict)
-    assert(viaKernel(fold))
-    assert(sorted(fold, "hour_ts", "event_type") == ref("agg_rollup_fold"))
-    val incr = graft.ops.DictRollup.incrementalRollup(ev, dict,
-      pmod(xxhash64(col("event_id"), lit("incr")), lit(100L)) < 20)
-    assert(viaKernel(incr))
-    assert(sorted(incr, "hour_ts", "event_type") == ref("agg_incremental_rollup"))
   }
 
   test("inferred kernels on a filter-only input equal the generic forms on the pre-filtered corpus") {
@@ -161,12 +150,9 @@ class HourlyRollupDictSpec extends AnyFunSuite with GraftSpark {
     refused(graft.ops.DictRollup.foldRollupInferred(computed))
     refused(graft.ops.DictRollup.incrementalRollupInferred(computed))
     refused(graft.ops.DictRollup.sketchRollupInferred(computed))
-    // the declared-dictionary columnar kernels take a bare scan only
+    // the declared-dictionary columnar kernel takes a bare scan only
     val filtered = raw.filter(col("event_id") >= 0L)
     refused(graft.ops.DictRollup.hourlyRollupColumnar(filtered, dict))
-    refused(graft.ops.DictRollup.foldRollupColumnar(filtered, dict))
-    refused(graft.ops.DictRollup.incrementalRollupColumnar(filtered, dict))
-    refused(graft.ops.DictRollup.sketchRollupColumnar(filtered, dict))
   }
 
   test("INFERRED kernels equal the GENERIC forms on an undeclared fuzz corpus (rogue + NULL categories, pre-1970 hours)") {
@@ -298,8 +284,8 @@ class HourlyRollupDictSpec extends AnyFunSuite with GraftSpark {
     // vectorized reader then surfaces batches WITHOUT dictionary ids
     // (it normalizes mixed-encoding batches) and the codec must take
     // the equality-walk path. Rogue types quarantine identically in
-    // the row and columnar kernels, so the differential holds even on
-    // this undeclared corpus.
+    // the row and columnar hourly kernels, so the differential holds
+    // even on this undeclared corpus.
     val n = 150000
     val rows = (0 until n).map { i =>
       val ty = if (i % 10 == 0) dict((i / 10) % dict.size)
@@ -313,13 +299,16 @@ class HourlyRollupDictSpec extends AnyFunSuite with GraftSpark {
     def rowsOf(key: String) =
       AnalyticsSurface.queries(key)(spark, dir.getAbsolutePath)
         .orderBy("hour_ts", "event_type").collect().toSeq
-    val rowK = rowsOf("agg_rollup_fold_dict")
-    val colK = rowsOf("agg_rollup_fold_dict_col")
+    val rowK = rowsOf("agg_hourly_rollup_dict")
+    val colK = rowsOf("agg_hourly_rollup_dict_col")
     assert(rowK == colK,
-      s"columnar fold diverged from the row kernel on the dictionary-fallback corpus")
-    // sanity: the quarantine row absorbed all 135k rogue events
-    val quarantine = colK.filter(_.isNullAt(0))
-    assert(quarantine.map(_.getLong(2)).sum == (n - n / 10).toLong)
+      s"columnar hourly diverged from the row kernel on the dictionary-fallback corpus")
+    // sanity: the quarantine rows absorbed all 135k rogue events, one
+    // row per hour holding them (every event of an hour ≡ 0 mod 10 is
+    // declared, so 45 of the 50 hours)
+    val quarantine = colK.filter(_.isNullAt(1))
+    assert(quarantine.size == 45 &&
+      quarantine.map(_.getLong(2)).sum == (n - n / 10).toLong)
     // the INFERRED kernel on the same corpus must instead match the
     // GENERIC form exactly — every rogue type its own group, through
     // the same mixed-encoding (dictionary-fallback) batches; this also
@@ -366,10 +355,14 @@ class HourlyRollupDictSpec extends AnyFunSuite with GraftSpark {
     def rowsOf(key: String) =
       AnalyticsSurface.queries(key)(spark, dir.getAbsolutePath)
         .orderBy("hour_ts", "event_type").collect().toSeq
+    // the four kernels: the declared hourly pair against the generic
+    // hourly rollup, the inferred fold/incremental against the generic
+    // fold (every group here has n >= 2, so the hourly filter keeps all)
+    val h = rowsOf("agg_hourly_rollup")
+    assert(h.size == 3, s"expected all three hourly groups: $h")
+    assert(h == rowsOf("agg_hourly_rollup_dict"), "row kernel NaN/Inf divergence")
+    assert(h == rowsOf("agg_hourly_rollup_dict_col"), "columnar kernel NaN/Inf divergence")
     val g = rowsOf("agg_rollup_fold")
-    assert(g == rowsOf("agg_rollup_fold_dict"), "row kernel NaN/Inf divergence")
-    assert(g == rowsOf("agg_rollup_fold_dict_col"), "columnar kernel NaN/Inf divergence")
-    assert(g == rowsOf("agg_incremental_rollup_dict_col"), "incremental columnar NaN/Inf divergence")
     assert(g == rowsOf("agg_rollup_fold_inferred"), "inferred fold NaN/Inf divergence")
     assert(g == rowsOf("agg_incremental_rollup_inferred"), "inferred incremental NaN/Inf divergence")
     // and the counts really include the NaN/Inf rows
@@ -380,6 +373,9 @@ class HourlyRollupDictSpec extends AnyFunSuite with GraftSpark {
     val click = g.find(_.getString(0) == "click").get
     assert(click.getLong(2) == 2L && click.isNullAt(3),
       s"click must count 2 rows with a NULL sum_value: $click")
+    val hourlyClick = h.find(_.getString(1) == "click").get
+    assert(hourlyClick.getLong(2) == 2L && hourlyClick.isNullAt(4),
+      s"hourly click must count 2 rows with a NULL sum_value: $hourlyClick")
   }
 
   test("columnar kernel fails loudly on a null timestamp read from parquet") {

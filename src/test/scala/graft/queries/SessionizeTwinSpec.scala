@@ -7,15 +7,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.GraftSpark
 
 /** Differential fuzz of the sessionize twins: the window (lag +
-  * grouped sum) and grouped-array (collect_list -> sort_array ->
-  * higher-order fold) formulations must produce identical rows on
+  * grouped sum) and segmented (per-(user, hour) fold, then a per-user
+  * stitch) formulations must produce identical rows on
   * ADVERSARIAL shapes the sf fixtures don't guarantee — duplicate
   * timestamps inside one user (ties must break no session), gaps at
   * EXACTLY the 30 min boundary (strictly-greater rule), single-event
   * users, and one user whose events all land on one timestamp. */
 class SessionizeTwinSpec extends AnyFunSuite with GraftSpark {
 
-  test("window and grouped-array sessionize agree on adversarial shapes") {
+  test("window and segmented sessionize agree on adversarial shapes") {
     import spark.implicits._
     val gap = 30L * 60 * 1000000
     val rnd = new scala.util.Random(19)
@@ -40,9 +40,9 @@ class SessionizeTwinSpec extends AnyFunSuite with GraftSpark {
     rows ++= Seq((100L, 42L), (100L, 42L), (100L, 42L + gap), (100L, 42L + gap + 1))
     rows ++= (1 to 5).map(_ => (101L, 777L))
     rows += ((102L, 1L)) // single-event user
-    // pre-1970 (NEGATIVE) timestamps: the fold's first-event sentinel
-    // must be an explicit flag, not a sign test — a -1 sentinel counts
-    // a break on every negative-ts event (ADVICE r11)
+    // pre-1970 (NEGATIVE) timestamps: the bucket fold's first-event
+    // sentinel must be an explicit flag, not a sign test — a -1
+    // sentinel counts a break on every negative-ts event (ADVICE r11)
     rows ++= Seq((103L, -5L * gap), (103L, -5L * gap + 10L),
       (103L, -4L * gap + 11L), (103L, -42L))
 
@@ -57,12 +57,9 @@ class SessionizeTwinSpec extends AnyFunSuite with GraftSpark {
 
     val w = AnalyticsSurface.queries("win_sessionize")(spark, dir.getAbsolutePath)
       .orderBy("user_id").collect().toSeq
-    val a = AnalyticsSurface.queries("win_sessionize_agg")(spark, dir.getAbsolutePath)
-      .orderBy("user_id").collect().toSeq
-    assert(w == a, s"window vs agg diverged:\n${w.zip(a).filter(p => p._1 != p._2).take(5)}")
-    // the segmented two-level fold must agree too — its gaps straddle
-    // bucket boundaries by construction here (fuzz gaps hover around
-    // 30 min on a 1 h bucket, so merges and breaks both cross edges)
+    // the segmented two-level fold's gaps straddle bucket boundaries
+    // by construction here (fuzz gaps hover around 30 min on a 1 h
+    // bucket, so merges and breaks both cross edges)
     val g = AnalyticsSurface.queries("win_sessionize_seg")(spark, dir.getAbsolutePath)
       .orderBy("user_id").collect().toSeq
     assert(w == g, s"window vs segmented diverged:\n${w.zip(g).filter(p => p._1 != p._2).take(5)}")
